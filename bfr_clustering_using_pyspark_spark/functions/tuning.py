@@ -65,12 +65,14 @@ def drain_width(spark: SparkSession) -> int:
     deployment sizes this to sustained per-batch volume via
     ``$SPARK_GRAFT_STREAM_WIDTH`` (the partition count is fixed at the
     first checkpoint, so it is a per-deployment knob, not a per-query
-    one); the session width still caps it so the swap only narrows."""
+    one); the session width still caps it so the swap only narrows.
+    A zero or negative knob is clamped to 1: Spark rejects a shuffle
+    width below 1 with an opaque error inside every drain."""
     try:
         cap = int(os.environ.get("SPARK_GRAFT_STREAM_WIDTH", "4"))
     except ValueError:
         cap = 4
-    return min(shuffle_width(spark), cap)
+    return max(1, min(shuffle_width(spark), cap))
 
 
 def shuffle_width(spark: SparkSession) -> int:

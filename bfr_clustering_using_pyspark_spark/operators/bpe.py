@@ -34,9 +34,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.cache import SessionCache
 from ..functions.text import TOKEN_RE, word_tokens
 from ..sources.readers import load_table
-from .retrieval import _corpus_version, _spread
+from .retrieval import _spread
 
 # Merge rounds. Real tokenizers run ~30k merges of exactly this loop;
 # 12 keeps the unrolled oracle tractable while exercising every
@@ -67,14 +68,10 @@ def _pair_counts(wf: DataFrame, sym) -> DataFrame:
 
 # Session cache of (word-frequency frame, merge table): the gate runs
 # text_bpe_train and text_bpe_encode back-to-back over the same
-# corpus — the R_MERGES driver rounds must not run twice. Same
-# freshness/eviction doctrine as the retrieval token caches
-# (retrieval.py `_cached_frame`): keyed by (app, corpus path, per-file
-# version token), foreign-app and superseded entries dropped, bounded.
-# Values are eager localCheckpoints (executor blocks, freed on GC) so
-# eviction needs no unpersist bookkeeping.
-_BPE_CACHE: dict[tuple, tuple] = {}
+# corpus, and the R_MERGES driver rounds must not run twice. Doctrine
+# in functions/cache.py.
 _BPE_CACHE_MAX = 2
+_BPE_CACHE = SessionCache(_BPE_CACHE_MAX)
 
 # Fold the accumulated merge ``replace`` chain into the checkpointed
 # word table every N rounds: without this, round r's pair count
@@ -93,19 +90,15 @@ def _bpe_fit(spark: SparkSession, sf_dir: str, n_merges: int = R_MERGES):
     string after all merges, and ``merges`` the driver-side list of
     (round, lhs, rhs, pair_count).
     """
-    import os
+    return _BPE_CACHE.get_or_build(
+        spark,
+        lambda: _bpe_fit_build(spark, sf_dir, n_merges),
+        f"{sf_dir}/documents.parquet",
+        n_merges,
+    )
 
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, os.path.abspath(sf_dir), n_merges,
-           _corpus_version(os.path.join(sf_dir, "documents.parquet")))
-    hit = _BPE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    for k in [k for k in _BPE_CACHE if k[0] != app_id or (k[1] == key[1] and k[2] == n_merges)]:
-        del _BPE_CACHE[k]
-    while len(_BPE_CACHE) >= _BPE_CACHE_MAX:
-        del _BPE_CACHE[next(iter(_BPE_CACHE))]
 
+def _bpe_fit_build(spark: SparkSession, sf_dir: str, n_merges: int):
     docs = _spread(load_table(spark, sf_dir, "documents"))
     wf = (
         docs.select(F.explode(word_tokens(F.col("text"))).alias("word"))
@@ -143,8 +136,7 @@ def _bpe_fit(spark: SparkSession, sf_dir: str, n_merges: int = R_MERGES):
             )
             sym = F.col("sym")
     wf_final = wf.select("word", "wcount", sym.alias("sym")).localCheckpoint(eager=True)
-    _BPE_CACHE[key] = (wf_final, merges)
-    return _BPE_CACHE[key]
+    return wf_final, merges
 
 
 def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:

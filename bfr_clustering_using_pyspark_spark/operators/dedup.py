@@ -17,6 +17,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..functions.cache import SessionCache
 from ..functions.tuning import scoped_shuffle_width, shuffle_width, sized_width
 from ..sources.readers import load_table
 
@@ -515,7 +516,7 @@ MINHASH_BUILD_COUNT = 0
 def _minhash_bands(spark: SparkSession, sf_dir: str, base: DataFrame) -> DataFrame:
     """The banded signature store (doc_id, band, sig, bsz, bmin) as a
     WAREHOUSE ARTIFACT — a pure function of (documents.parquet,
-    N_HASHES, N_BANDS), persisted once under the mtime/format-keyed
+    N_HASHES, N_BANDS), persisted once under the version/format-keyed
     fixture digest (sources/fixtures.py) and RELOADED by every later
     session and process: the tokenizer/shingler/NumPy kernel never
     re-runs for an unchanged corpus. This is how a production dedup
@@ -556,58 +557,23 @@ def _minhash_bands(spark: SparkSession, sf_dir: str, base: DataFrame) -> DataFra
     return spark.read.parquet(path)
 
 
-# Per-session cache of (shingle base, signature table) keyed by
-# (application, corpus path, data version) — same doctrine as the
-# NND index's session cache: repeated queries over an unchanged
-# corpus in one session (gate sweeps, bench loops, components
-# composing pair-finding) must not re-tokenize/re-shingle.
-# Eviction contract (r11): a foreign-app entry is dropped WITHOUT
-# unpersist only when its SparkContext is actually stopped (the
-# blocks died with the context; calling unpersist then would be a
-# use-after-free) — a LIVE foreign session's entries are unpersisted
-# first so their executor blocks are released rather than leaked.
-# The cache is also bounded (oldest-first) so distinct corpora within
-# one long-lived app can't grow it without limit.
-_MINHASH_SESSION_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
+# Per-session cache of (shingle base, signature table): repeated
+# queries over an unchanged corpus in one session (gate sweeps, bench
+# loops, components composing pair-finding) must not re-tokenize or
+# re-shingle. Doctrine in functions/cache.py.
 _MINHASH_CACHE_MAX = 4
-
-
-def _ctx_stopped(df: DataFrame) -> bool:
-    try:
-        return df.sparkSession.sparkContext._jsc.sc().isStopped()
-    except Exception:  # noqa: BLE001 — any broken handle means gone
-        return True
-
-
-def _cache_evict(key: tuple) -> None:
-    base, bands = _MINHASH_SESSION_CACHE.pop(key)
-    if not _ctx_stopped(base):
-        base.unpersist()
-        bands.unpersist()
+_MINHASH_SESSION_CACHE = SessionCache(_MINHASH_CACHE_MAX)
 
 
 def _minhash_base_and_bands(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    import os
+    return _MINHASH_SESSION_CACHE.get_or_build(
+        spark,
+        lambda: _minhash_base_and_bands_build(spark, sf_dir),
+        f"{sf_dir}/documents.parquet",
+    )
 
-    app_id = spark.sparkContext.applicationId
-    try:
-        mtime = os.stat(os.path.join(sf_dir, "documents.parquet")).st_mtime_ns
-    except OSError:
-        mtime = 0
-    key = (app_id, os.path.abspath(sf_dir), mtime)
-    for k in [k for k in _MINHASH_SESSION_CACHE if k[0] != app_id]:
-        _cache_evict(k)
-    hit = _MINHASH_SESSION_CACHE.get(key)
-    if hit is not None:
-        return hit
-    # a superseded version of the SAME corpus dir holds persisted
-    # blocks it will never serve again — release them
-    for k in [k for k in _MINHASH_SESSION_CACHE if k[1] == key[1]]:
-        _cache_evict(k)
-    # size bound: oldest distinct-corpus entries go first (dict
-    # preserves insertion order), unpersisting live blocks properly
-    while len(_MINHASH_SESSION_CACHE) >= _MINHASH_CACHE_MAX:
-        _cache_evict(next(iter(_MINHASH_SESSION_CACHE)))
+
+def _minhash_base_and_bands_build(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     docs = load_table(spark, sf_dir, "documents")
     # One parquet file = one input split — spread docs across all
     # cores before the Python kernel (at real scale the scan already
@@ -640,7 +606,6 @@ def _minhash_base_and_bands(spark: SparkSession, sf_dir: str) -> tuple[DataFrame
             "oracle. Raise LSH_BUCKET_CAP for this corpus or gate it above "
             "LSH_ORACLE_N."
         )
-    _MINHASH_SESSION_CACHE[key] = (base, bands)
     return base, bands
 
 

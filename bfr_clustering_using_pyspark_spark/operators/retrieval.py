@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..functions.cache import SessionCache
 from ..functions.text import TOKEN_RE, word_tokens
 from ..functions.vectors import to_double_array
 from ..sources.readers import load_table
@@ -145,71 +146,18 @@ ORDER BY term, rank
 """
 
 
-# Per-session cache of tokenized frames keyed by (kind, application,
-# corpus path, data version) — the minhash-store doctrine
-# (operators/dedup.py): repeated retrieval queries over an unchanged
-# corpus in one session (the gate runs text_bm25 + q_hybrid_rrf +
-# retrieval_eval back-to-back; the eval reuses the hybrid's legs)
-# must not re-tokenize per consumer. Same hardened eviction contract:
-# foreign-app entries are unpersisted when their context is still
-# live (popped without unpersist only when the context is stopped),
-# superseded same-corpus versions are released, and the cache is
-# bounded oldest-first.
-_TOK_CACHE: dict[tuple, DataFrame] = {}
+# Per-session cache of tokenized frames: the gate runs text_bm25 +
+# q_hybrid_rrf + retrieval_eval back-to-back (the eval reuses the
+# hybrid's legs), and an unchanged corpus must not be re-tokenized per
+# consumer. Doctrine in functions/cache.py.
 _TOK_CACHE_MAX = 4
-
-
-def _tok_evict(key: tuple) -> None:
-    from .dedup import _ctx_stopped
-
-    df = _TOK_CACHE.pop(key)
-    if not _ctx_stopped(df):
-        df.unpersist()
-
-
-def _corpus_version(path: str) -> int:
-    """Freshness token for the cache key.  A plain file is its
-    st_mtime_ns.  For a DIRECTORY-style corpus (the scaled sf1
-    layout) the directory mtime alone is NOT enough — rewriting a
-    part file in place leaves the dir mtime untouched — so fold in
-    every contained file's (name, size, mtime_ns)."""
-    import os
-
-    try:
-        st = os.stat(path)
-    except OSError:
-        return 0
-    if not os.path.isdir(path):
-        return st.st_mtime_ns
-    h = st.st_mtime_ns
-    for root, _dirs, files in os.walk(path):
-        for name in sorted(files):
-            try:
-                fst = os.stat(os.path.join(root, name))
-            except OSError:
-                continue
-            h = hash((h, name, fst.st_size, fst.st_mtime_ns))
-    return h
+_TOK_CACHE = SessionCache(_TOK_CACHE_MAX)
 
 
 def _cached_frame(spark: SparkSession, sf_dir: str, kind: str, build) -> DataFrame:
-    import os
-
-    app_id = spark.sparkContext.applicationId
-    mtime = _corpus_version(os.path.join(sf_dir, "documents.parquet"))
-    key = (kind, app_id, os.path.abspath(sf_dir), mtime)
-    for k in [k for k in _TOK_CACHE if k[1] != app_id]:
-        _tok_evict(k)
-    hit = _TOK_CACHE.get(key)
-    if hit is not None:
-        return hit
-    for k in [k for k in _TOK_CACHE if k[0] == kind and k[2] == key[2]]:
-        _tok_evict(k)
-    while len(_TOK_CACHE) >= _TOK_CACHE_MAX:
-        _tok_evict(next(iter(_TOK_CACHE)))
-    df = build().persist()
-    _TOK_CACHE[key] = df
-    return df
+    return _TOK_CACHE.get_or_build(
+        spark, lambda: build().persist(), f"{sf_dir}/documents.parquet", kind
+    )
 
 
 def _spread(df: DataFrame) -> DataFrame:

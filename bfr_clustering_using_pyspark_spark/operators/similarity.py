@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..functions.cache import SessionCache, corpus_version
 from ..functions.tuning import scoped_shuffle_width, shuffle_width, sized_width
 from ..sources.readers import load_table
 
@@ -1248,14 +1249,12 @@ def _nnd_cos(a_col: str, b_col: str):
 # The NN-Descent index is an ARTIFACT — built once, PERSISTED to the
 # warehouse as parquet, then queried. Both faces (`ann_nndescent_graph`
 # returns it, `ann_graph_search` walks it) resolve through two cache
-# tiers: an in-memory (application, sf_dir, params) map of pinned
-# DataFrames, backed by an on-disk parquet index keyed additionally by
-# the source table's mtime — so a FRESH session (or process) reloads
-# the stored index instead of rebuilding, exactly as a production
-# deployment reads its ANN index table from storage. Entries bound to
-# stopped applications are evicted on insert (a DataFrame outliving
-# its SparkContext is a use-after-free).
-_NND_GRAPH_CACHE: dict[tuple, tuple[DataFrame, int]] = {}
+# tiers: a session cache of pinned DataFrames (functions/cache.py),
+# backed by an on-disk parquet index keyed by the same source version
+# — so a FRESH session (or process) reloads the stored index instead
+# of rebuilding, exactly as a production deployment reads its ANN
+# index table from storage.
+_NND_GRAPH_CACHE = SessionCache(4)
 
 # incremented by _nnd_graph_build only — lets tests assert that a
 # warehouse hit performs NO rebuild
@@ -1269,18 +1268,15 @@ NND_INDEX_FORMAT = 1
 
 def _nnd_index_dir(spark: SparkSession, sf_dir: str) -> str:
     """Warehouse path for the persisted index. The key digests the
-    source path, build params, AND the embeddings file mtime — editing
-    the source data invalidates the artifact automatically."""
+    source path, build params, AND the embeddings' ``corpus_version``
+    — editing the source data invalidates the artifact automatically."""
     import hashlib
     import os
 
     wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    try:
-        mtime = os.stat(os.path.join(sf_dir, "embeddings.parquet")).st_mtime_ns
-    except OSError:
-        mtime = 0
+    version = corpus_version(os.path.join(sf_dir, "embeddings.parquet"))
     digest = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{NND_K}|{NND_ITERS}|{mtime}|v{NND_INDEX_FORMAT}".encode()
+        f"{os.path.abspath(sf_dir)}|{NND_K}|{NND_ITERS}|{version}|v{NND_INDEX_FORMAT}".encode()
     ).hexdigest()[:16]
     return os.path.join(wh, "nnd_index", digest)
 
@@ -1292,19 +1288,19 @@ def _nnd_graph_and_n(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
     are in the key so a caller tuning NND_K/NND_ITERS (tests do) gets
     a fresh build, not a stale cache hit. Sharing n spares the search
     a second full scan of the vector table."""
+    return _NND_GRAPH_CACHE.get_or_build(
+        spark,
+        lambda: _nnd_graph_load_or_build(spark, sf_dir),
+        f"{sf_dir}/embeddings.parquet",
+        NND_K,
+        NND_ITERS,
+    )
+
+
+def _nnd_graph_load_or_build(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
     global NND_BUILD_COUNT
     import json
     import os
-
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, NND_K, NND_ITERS)
-    # evict entries from stopped applications FIRST (same pattern as
-    # the pandas-UDF cache): their DataFrames reference dead contexts
-    for k in [k for k in _NND_GRAPH_CACHE if k[0] != app_id]:
-        del _NND_GRAPH_CACHE[k]
-    cached = _NND_GRAPH_CACHE.get(key)
-    if cached is not None:
-        return cached
 
     idx_dir = _nnd_index_dir(spark, sf_dir)
     meta_path = os.path.join(idx_dir, "_index_meta.json")
@@ -1315,7 +1311,6 @@ def _nnd_graph_and_n(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
         graph = spark.read.parquet(os.path.join(idx_dir, "graph")).localCheckpoint(
             eager=True
         )
-        _NND_GRAPH_CACHE[key] = (graph, n)
         return graph, n
 
     # Size the build's shuffle width to its data: every exchange in
@@ -1338,7 +1333,6 @@ def _nnd_graph_and_n(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
         json.dump({"n_vectors": n, "k": NND_K, "iters": NND_ITERS}, fh)
     _prune_nnd_store(os.path.dirname(idx_dir), keep=idx_dir)
     graph = spark.read.parquet(os.path.join(idx_dir, "graph")).localCheckpoint(eager=True)
-    _NND_GRAPH_CACHE[key] = (graph, n)
     return graph, n
 
 

@@ -14,6 +14,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.cache import SessionCache
 from ..functions.numeric import fixed_avg_int, fixed_point
 from ..sources.readers import load_table
 
@@ -933,37 +934,33 @@ def udf_pandas_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-_PANDAS_SCALAR_UDFS: dict = {}
+# one live context at a time
+_PANDAS_SCALAR_UDFS = SessionCache(1)
 
 
 def _pandas_scalar_udfs():
     """The two scalar pandas UDFs, defined once per SPARK APPLICATION
     (lazily — ``pandas_udf`` resolves its DDL return type against an
-    ACTIVE SparkContext, so definition can't happen at import, and
-    the cache keys on applicationId like every other session cache in
-    the package because a UDF's lazily-bound _judf dies with its
-    context): nullable Int32 (capital I) because NULL text yields NaN
-    from the pandas string ops and plain .astype("int32") would raise
-    — the extension dtype round-trips NULL through Arrow exactly like
-    the JVM built-ins do (NULL in → NULL out; pinned in tests)."""
-    from pyspark.sql import SparkSession
-
-    app_id = SparkSession.getActiveSession().sparkContext.applicationId
-    if app_id in _PANDAS_SCALAR_UDFS:
-        return _PANDAS_SCALAR_UDFS[app_id]
+    ACTIVE SparkContext, so definition can't happen at import, and a
+    UDF's lazily-bound _judf dies with its context): nullable Int32
+    (capital I) because NULL text yields NaN from the pandas string
+    ops and plain .astype("int32") would raise — the extension dtype
+    round-trips NULL through Arrow exactly like the JVM built-ins do
+    (NULL in → NULL out; pinned in tests)."""
     from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("int")
-    def ws_tokens(s: pd.Series) -> pd.Series:
-        return s.str.split(" ").str.len().astype("Int32")
+    def build():
+        @pandas_udf("int")
+        def ws_tokens(s: pd.Series) -> pd.Series:
+            return s.str.split(" ").str.len().astype("Int32")
 
-    @pandas_udf("int")
-    def ascii_letters(s: pd.Series) -> pd.Series:
-        return s.str.count(r"[A-Za-z]").astype("Int32")
+        @pandas_udf("int")
+        def ascii_letters(s: pd.Series) -> pd.Series:
+            return s.str.count(r"[A-Za-z]").astype("Int32")
 
-    _PANDAS_SCALAR_UDFS.clear()  # one live context at a time
-    _PANDAS_SCALAR_UDFS[app_id] = (ws_tokens, ascii_letters)
-    return _PANDAS_SCALAR_UDFS[app_id]
+        return ws_tokens, ascii_letters
+
+    return _PANDAS_SCALAR_UDFS.get_or_build(SparkSession.getActiveSession(), build)
 
 
 UDF_PANDAS_SCALAR_SQL = """

@@ -149,7 +149,7 @@ _CHANGED_THIS_ROUND = (
     # round 15: bfr_lloyd_final's oracle refactored to share its
     # label CTEs with the NMI tail (finlab MATERIALIZED CTE — same
     # values, new SQL text; re-verify first per convention), and the
-    # det-epoch cache freshness token switched to _corpus_version
+    # det-epoch cache freshness token switched to a directory-aware one
     # (ADVICE r15 — affects every epoch-cache rider; re-gate the
     # first-touch face)
     "bfr_lloyd_final", "bfr_lloyd_det",

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..functions.cache import SessionCache
 from ..sources.readers import load_table
 
 
@@ -763,12 +764,13 @@ def _sql_json_lit(value, sql_type: str) -> str:
     Exactness: doubles render via ``json.dumps`` (repr — shortest
     round-trip decimal; Jackson's parseDouble is correctly rounded,
     so the JVM sees the identical bits as the ``1.0D`` spelling);
-    ints are parsed as exact int64, never through a double. Callers
-    never pass NaN/Inf (moments of finite integers, ε-floored
-    variances), which JSON could not carry."""
+    ints are parsed as exact int64, never through a double. JSON
+    cannot carry NaN/Inf, and ``from_json`` would silently turn one
+    into NULL, so a non-finite value raises ``ValueError`` here, at
+    plan-build time."""
     import json as _json
 
-    body = _json.dumps(value, separators=(",", ":"))
+    body = _json.dumps(value, separators=(",", ":"), allow_nan=False)
     esc = body.replace("\\", "\\\\").replace("'", "\\'")
     return f"from_json('{esc}', '{sql_type}')"
 
@@ -1139,14 +1141,13 @@ BDET_CS_ITERS = 2    # Lloyd rounds of the pool re-cluster
 BDET_CS_MERGE_T2 = 9.0 * KDET_DIMS
 
 
-# Session cache of the deterministic epoch: (frames, mom) per
-# (app, corpus, retain-mode, file-version). bfr_lloyd_det /
-# bfr_lloyd_stats share the 'gate' epoch; bfr_lloyd_cs /
-# bfr_lloyd_cs_stats share the 'cap' epoch — the gate runs them
-# back-to-back and the K·d-state chunk loop must not run twice.
-# Values hold eager localCheckpoints (executor blocks, freed on GC).
-_BDET_CACHE: dict[tuple, tuple] = {}
+# Session cache of the deterministic epoch, (frames, mom) per retain
+# mode: bfr_lloyd_det / bfr_lloyd_stats share the 'gate' epoch;
+# bfr_lloyd_cs / bfr_lloyd_cs_stats share the 'cap' epoch — the gate
+# runs them back-to-back and the K·d-state chunk loop must not run
+# twice. Doctrine in functions/cache.py.
 _BDET_CACHE_MAX = 4
+_BDET_CACHE = SessionCache(_BDET_CACHE_MAX)
 
 
 def _bdet_init_assign(chunk0: DataFrame):
@@ -1221,33 +1222,15 @@ def _bdet_epoch(
     broadcast state. The 'cap' mode adds a TakeOrdered(R) per chunk
     (O(R) driver rows). No n-sized collect, no RNG, no Python
     workers."""
-    import os
-
-    from ..operators.retrieval import _corpus_version
-
-    # Freshness token via _corpus_version (operators/retrieval.py):
-    # for directory-layout corpora (the sf1 layout) an in-place
-    # part-file rewrite leaves the dir mtime unchanged, so plain
-    # getmtime could serve a stale epoch; _corpus_version folds in
-    # every contained file's (name, size, mtime_ns) and degrades to 0
-    # instead of raising when the path is absent (ADVICE r14).
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
+    return _BDET_CACHE.get_or_build(
+        spark,
+        lambda: _bdet_epoch_build(spark, sf_dir, retain),
+        f"{sf_dir}/embeddings.parquet",
         retain,
-        _corpus_version(os.path.join(sf_dir, "embeddings.parquet")),
     )
-    hit = _BDET_CACHE.get(key)
-    if hit is not None:
-        return hit
-    app_id = key[0]
-    for k in [
-        k for k in _BDET_CACHE if k[0] != app_id or (k[1] == key[1] and k[2] == retain)
-    ]:
-        del _BDET_CACHE[k]
-    while len(_BDET_CACHE) >= _BDET_CACHE_MAX:
-        del _BDET_CACHE[next(iter(_BDET_CACHE))]
 
+
+def _bdet_epoch_build(spark: SparkSession, sf_dir: str, retain: str):
     pts = _bdet_points(spark, sf_dir).persist()
     chunk0 = pts.where(F.col("chunk") == 0)
     a0 = _bdet_init_assign(chunk0)
@@ -1309,8 +1292,7 @@ def _bdet_epoch(
             .agg(F.expr(_BDET_MOM_STRUCT))
         )
     pts.unpersist()
-    _BDET_CACHE[key] = (frames, mom)
-    return _BDET_CACHE[key]
+    return frames, mom
 
 
 def bfr_lloyd_det(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -7,8 +7,9 @@ source data and the staging parameters, so it is persisted ONCE under
 the Spark warehouse and reused by every later session/process — the
 same artifact pattern as the NN-Descent index
 (operators/similarity.py): digest keyed by source path, params, the
-source file's mtime_ns (data edits invalidate), and a format version
-(staging-code changes invalidate).
+source's ``corpus_version`` (functions/cache.py — data edits
+invalidate, also a part file rewritten inside a directory-layout
+table), and a format version (staging-code changes invalidate).
 
 Durability protocol (shared with the NND index store via
 ``prune_store``):
@@ -22,7 +23,7 @@ Durability protocol (shared with the NND index store via
   aside and back);
 - the meta marker is written LAST (inside the temp dir), so an
   interrupted stage leaves no marker and reads as a miss;
-- every (corpus, params, mtime) mints a new digest dir, so the store
+- every (corpus, params, version) mints a new digest dir, so the store
   is pruned to a bounded dir count, oldest-meta first, with a grace
   window protecting both in-flight stages (meta-less young dirs) and
   concurrent readers still scanning a just-published dir.
@@ -38,6 +39,8 @@ import time
 from typing import Callable
 
 from pyspark.sql import SparkSession
+
+from ..functions.cache import corpus_version
 
 FIXTURE_FORMAT = 1
 
@@ -113,12 +116,9 @@ def _warehouse_root(spark: SparkSession) -> str:
 def fixture_dir(
     spark: SparkSession, kind: str, sf_dir: str, src_file: str, params: str
 ) -> str:
-    try:
-        mtime = os.stat(os.path.join(sf_dir, src_file)).st_mtime_ns
-    except OSError:
-        mtime = 0
+    version = corpus_version(os.path.join(sf_dir, src_file))
     digest = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{src_file}|{params}|{mtime}|v{FIXTURE_FORMAT}".encode()
+        f"{os.path.abspath(sf_dir)}|{src_file}|{params}|{version}|v{FIXTURE_FORMAT}".encode()
     ).hexdigest()[:16]
     return os.path.join(_warehouse_root(spark), kind, digest)
 

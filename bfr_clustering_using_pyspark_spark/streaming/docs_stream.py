@@ -166,7 +166,7 @@ FROM t GROUP BY source ORDER BY source
 def _chunked_docs_cached(spark: SparkSession, sf_dir: str, n_chunks: int) -> str:
     """The chunked source corpus is a pure function of
     (documents.parquet, n_chunks): persisted once under the warehouse
-    (sources/fixtures.py — mtime/format-keyed digest) and reused by
+    (sources/fixtures.py — version/format-keyed digest) and reused by
     every session and process. The STATE dirs used by the drain stay
     per-call — they accumulate and must start empty."""
     from ..sources.fixtures import ensure_fixture

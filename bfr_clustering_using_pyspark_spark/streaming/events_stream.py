@@ -503,7 +503,7 @@ def stream_bfr_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the chunked replay source is a pure function of
     # (embeddings.parquet, BDET_CHUNKS): persisted once under the
-    # warehouse (sources/fixtures.py — mtime/format-keyed digest;
+    # warehouse (sources/fixtures.py — version/format-keyed digest;
     # the pinned mtimes survive on disk, so replay order is stable)
     # and reused by every session and process, exactly like the
     # staged weekly events replay — re-staging per call cost ~0.8 s
@@ -834,7 +834,7 @@ def _staged_weekly_cached(spark: SparkSession, sf_dir: str) -> str:
     three keys replay it (late_data / update_counts append+update
     drains, checkpoint_recovery's two-sitting restart). It is
     persisted ONCE under the warehouse (sources/fixtures.py —
-    mtime/format-keyed digest) and reused by every session AND
+    version/format-keyed digest) and reused by every session AND
     process; checkpoint_recovery file-copies its two sittings from
     the fixture instead of re-running Spark filters. The pinned
     absolute mtimes survive on disk, so replay order is stable."""

@@ -362,3 +362,13 @@ def test_final_fold_paths_and_oracle(spark, tmp_path):
     assert len(got) == 480
     want = sorted(_oracle_rows(BFR_LLOYD_FINAL_SQL, pq))
     assert sorted((r["vec_id"], r["cluster"], r["via"]) for r in rows) == want
+
+
+@pytest.mark.parametrize("bad", [float("nan"), float("inf"), float("-inf")])
+def test_json_literal_rejects_non_finite(bad):
+    """JSON cannot carry NaN/Inf and from_json would read one as
+    NULL: rendering the literal must fail at plan-build time."""
+    from bfr_clustering_using_pyspark_spark.plans.ml_queries import _sql_djson
+
+    with pytest.raises(ValueError):
+        _sql_djson([[1.0, bad]])

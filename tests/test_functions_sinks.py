@@ -2,6 +2,7 @@
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from bfr_clustering_using_pyspark_spark.functions import (
@@ -11,6 +12,7 @@ from bfr_clustering_using_pyspark_spark.functions import (
     l2_norm,
     word_tokens,
 )
+from bfr_clustering_using_pyspark_spark.functions.tuning import drain_width
 from bfr_clustering_using_pyspark_spark.operators.textstats import q_approx_distinct
 from bfr_clustering_using_pyspark_spark.sources import sinks
 from bfr_clustering_using_pyspark_spark.streaming import QUERIES as STREAM_QUERIES
@@ -110,6 +112,15 @@ def test_stream_dedup_counts(spark):
         for r in ev.groupBy("event_type").agg(F.count("*").alias("n")).collect()
     }
     assert out == batch  # event_ids are unique already → same counts
+
+
+@pytest.mark.parametrize("knob", ["0", "-3"])
+def test_nonpositive_stream_width_is_clamped(spark, monkeypatch, knob):
+    """A zero or negative $SPARK_GRAFT_STREAM_WIDTH must not reach
+    spark.sql.shuffle.partitions: the drain runs one state store wide."""
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_WIDTH", knob)
+    assert drain_width(spark) == 1
+    test_stream_dedup_counts(spark)
 
 
 def test_sink_shard_manifest_covers_all_docs(spark):

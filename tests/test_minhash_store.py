@@ -4,6 +4,8 @@ with zero kernel re-runs — including by a fresh session/process,
 since the lookup is purely disk-based (fixture marker), never
 in-memory session state. Same contract as the NND index store."""
 
+import shutil
+
 import numpy as np
 import pandas as pd
 import pyarrow as pa
@@ -19,7 +21,9 @@ def _write_corpus(d, seed=11, n=120):
     texts = [
         " ".join(rng.choice(_VOCAB, size=int(rng.integers(20, 50)))) for _ in range(n)
     ]
-    texts[n - 1] = texts[0]  # one planted exact dup so the answer is non-empty
+    # one planted exact dup so the answer is non-empty; its partner
+    # depends on the seed so corpora of different seeds answer differently
+    texts[n - 1] = texts[seed % (n - 1)]
     docs = pd.DataFrame(
         {
             "doc_id": np.arange(n, dtype=np.int64),
@@ -50,7 +54,12 @@ def test_warehouse_hit_runs_no_kernel_and_is_hash_stable(spark, tmp_path):
     _write_corpus(d, seed=12)
     r3 = sorted(map(tuple, dedup_rows(spark, d)))
     assert D.MINHASH_BUILD_COUNT == c0 + 2
-    assert r3 != r1 or True  # content differs; the point is the rebuild count
+    # a stale hit would still answer for the seed-11 corpus: compare
+    # with a cold run on a copy of the seed-12 corpus in a fresh dir
+    cold = tmp_path / "sf_cold"
+    cold.mkdir()
+    shutil.copyfile(d / "documents.parquet", cold / "documents.parquet")
+    assert r3 == sorted(map(tuple, dedup_rows(spark, cold)))
 
 
 def dedup_rows(spark, d):
