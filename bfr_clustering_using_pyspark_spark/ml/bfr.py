@@ -11,17 +11,24 @@ bfr.py:336-355).
 
 Spark-first architecture (designed for 1000 executors / 100 TB):
 
-- Cluster state is O(k·d) floats — kept on the driver and broadcast
-  into every assignment pass. Points NEVER stream to the driver; the
-  only driver-side point pool is the retained set, which is bounded
-  by ``rs_max`` (overflow triggers CS compression, per the
-  algorithm).
+- Driver state is the DS and CS summaries (O(k·d) floats, broadcast
+  into every assignment pass), the retained set as two arrays
+  (``rs_ids`` (n,), ``rs_pts`` (n, d); bounded by ``rs_max``, whose
+  overflow triggers CS compression, per the algorithm) and one small
+  table of provisional CS ids (``cs_ids``, O(#CS ever formed)). No
+  driver structure holds the members of a CS: like the reference's
+  ``SummarizedSet``, a CS is only its N/SUM/SUMSQ summary.
+- A point that joins a CS is written with the other assignments under
+  the CS's provisional label ``-2 - id``; the final CS → DS fold turns
+  the id table into a literal id → DS-label array (``cs_labels``) that
+  one narrow projection applies to the returned frame.
 - Per-chunk assignment is one Arrow-batched ``mapInPandas`` pass —
   embarrassingly parallel, NumPy-vectorized Mahalanobis against all
   summaries at once.
 - Sufficient-statistic updates are map-side partial aggregates: each
   Arrow batch emits one row per touched cluster (n, Σx, Σx²), so the
-  driver collect is O(num_batches × k), independent of n.
+  driver collect is O(num_batches × k), independent of n. Every fold
+  into a ``Summaries`` goes through ``Summaries.add_partials``.
 - Per-chunk assignments are appended to a parquet run directory
   (linear distributed write) instead of accumulating a lazy union of
   Python-UDF stages.
@@ -36,10 +43,14 @@ semantics, and the only shuffle-free one.
 
 from __future__ import annotations
 
+import json
 import math
 import os
+import re
+import shutil
 import tempfile
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from functools import reduce
 from typing import Iterator
 
 import numpy as np
@@ -50,7 +61,9 @@ from pyspark.sql import functions as F
 
 from .local_kmeans import LocalKMeans
 
-KIND_DS, KIND_CS, KIND_RS = 0, 1, 2
+# state.json layout version; a checkpoint of another version is
+# treated like a torn one (refit from scratch)
+_CKPT_FORMAT = 2
 
 
 @dataclass
@@ -98,9 +111,14 @@ class Summaries:
         return cls(counts, sums, sqsums)
 
     def add_partials(self, cluster: np.ndarray, n: np.ndarray, s: np.ndarray, sq: np.ndarray) -> None:
+        """Fold partial row r into set ``cluster[r]``, rows in order."""
         np.add.at(self.counts, cluster, n)
         np.add.at(self.sums, cluster, s)
         np.add.at(self.sqsums, cluster, sq)
+
+    def add(self, other: "Summaries", at: np.ndarray) -> None:
+        """Fold ``other``'s set r into set ``at[r]``, sets in order."""
+        self.add_partials(at, other.counts, other.sums, other.sqsums)
 
     def append(self, other: "Summaries") -> None:
         self.counts = np.concatenate([self.counts, other.counts])
@@ -113,6 +131,19 @@ class Summaries:
         self.sums = self.sums[keep]
         self.sqsums = self.sqsums[keep]
 
+    def to_dict(self) -> dict:
+        return {"counts": self.counts.tolist(), "sums": self.sums.tolist(), "sqsums": self.sqsums.tolist()}
+
+    @classmethod
+    def from_dict(cls, obj: dict, d: int = -1) -> "Summaries":
+        """Inverse of ``to_dict``; ``d`` is needed only when k == 0."""
+        k = len(obj["counts"])
+        return cls(
+            np.asarray(obj["counts"], dtype=np.int64),
+            np.asarray(obj["sums"], dtype=np.float64).reshape(k, d),
+            np.asarray(obj["sqsums"], dtype=np.float64).reshape(k, d),
+        )
+
 
 def mahalanobis_to_all(pts: np.ndarray, centers: np.ndarray, stds: np.ndarray) -> np.ndarray:
     """(n, k) Mahalanobis distances; zero-σ dims contribute 0
@@ -124,6 +155,19 @@ def mahalanobis_to_all(pts: np.ndarray, centers: np.ndarray, stds: np.ndarray) -
         z = (pts - centers[i]) * inv[i]
         out[:, i] = np.einsum("nd,nd->n", z, z)
     return np.sqrt(out)
+
+
+def nearest_summary(pts: np.ndarray, summ: Summaries, gate: float = np.inf) -> tuple[np.ndarray, np.ndarray]:
+    """Each point's Mahalanobis-nearest set and whether it lies inside
+    ``gate`` (the α·√d test of ``assign_to_ss``, bfr.py:363-374)."""
+    dist = mahalanobis_to_all(pts, summ.centers, summ.stds)
+    best = dist.argmin(axis=1)
+    return best, dist[np.arange(len(pts)), best] < gate
+
+
+def _require_finite(n_bad: int, where: str) -> None:
+    if n_bad:
+        raise ValueError(f"bfr: {n_bad} non-finite feature values in {where}")
 
 
 @dataclass
@@ -160,17 +204,22 @@ class BFR:
         self.cfg = config
         self.ds: Summaries | None = None
         self.cs: Summaries | None = None
-        self.rs_ids: list[int] = []
-        self.rs_pts: list[np.ndarray] = []
-        self.cs_members: list[list[int]] = []  # point ids per CS (ref point_indices)
+        # provisional ids each CS has absorbed, its own first; a point
+        # that joins CS j is labelled -2 - cs_ids[j][0] until the final
+        # fold resolves it through cs_labels (provisional id → DS label)
+        self.cs_ids: list[list[int]] = []
+        self.cs_labels = np.zeros(0, dtype=np.int64)
+        self.rs_ids = np.zeros(0, dtype=np.int64)
+        self.rs_pts = np.zeros((0, 0))
         self.round_stats: list[RoundStats] = []
         self._n_discard_points = 0
 
     # ---------- distributed kernels ----------
 
-    # fused-kernel row types: DS assignment, DS/CS partial sufficient
-    # stats, RS point, CS membership record
-    _RT_ASSIGN, _RT_P_DS, _RT_P_CS, _RT_RS, _RT_CS_MEMBER = -1, 0, 1, 2, 3
+    # fused-kernel row types: assignment (DS label or provisional CS
+    # label), DS/CS partial sufficient stats, RS point, count of
+    # non-finite feature values in a batch
+    _RT_ASSIGN, _RT_P_DS, _RT_P_CS, _RT_RS, _RT_NONFINITE = -1, 0, 1, 2, 3
     _FUSED_SCHEMA = (
         "rtype int, label long, n long, sums array<double>, "
         "sqsums array<double>, id long, features array<double>"
@@ -179,102 +228,56 @@ class BFR:
     def _assign_kernel(self, d: int):
         """Fused mapInPandas kernel: assign each point against the
         broadcast DS/CS summaries AND emit per-batch feedback in the
-        same pass — DS assignments (id, label; features dropped),
-        map-side partial N/Σ/Σ² rows, RS points (the only rows that
-        carry features back out), CS memberships. One Arrow transfer
-        per chunk instead of two."""
-        cfg = self.cfg
+        same pass — assignments (id, label; features dropped),
+        map-side partial N/Σ/Σ² rows and RS points (the only rows that
+        carry features back out). One Arrow transfer per chunk instead
+        of two."""
         cls = type(self)
-        ds_centers, ds_stds = self.ds.centers, self.ds.stds
-        if cfg.use_cs and self.cs is not None and self.cs.k:
-            cs_centers, cs_stds = self.cs.centers, self.cs.stds
-        else:
-            cs_centers = None
-            cs_stds = None
-        a_ds = cfg.alpha_ds * math.sqrt(d)
+        ds = self.ds
+        cs = self.cs if self.cs.k else None
+        cs_label = -2 - np.asarray([ids[0] for ids in self.cs_ids], dtype=np.int64)
+        gate = self.cfg.alpha_ds * math.sqrt(d)
 
-        def partial_rows(pts: np.ndarray, labels: np.ndarray, rtype: int) -> pd.DataFrame:
-            uniq = np.unique(labels)
+        def rows(rtype: int, **cols) -> pd.DataFrame:
             return pd.DataFrame(
-                {
-                    "rtype": rtype,
-                    "label": uniq.astype(np.int64),
-                    "n": [int((labels == u).sum()) for u in uniq],
-                    "sums": [pts[labels == u].sum(axis=0).tolist() for u in uniq],
-                    "sqsums": [(pts[labels == u] ** 2).sum(axis=0).tolist() for u in uniq],
-                    "id": None,
-                    "features": None,
-                }
+                {"rtype": rtype, "label": None, "n": None, "sums": None,
+                 "sqsums": None, "id": None, "features": None, **cols}
             )
+
+        def partial_rows(pts: np.ndarray, labels: np.ndarray, k: int, rtype: int) -> pd.DataFrame:
+            s = Summaries.from_points(pts, labels, k)
+            hit = np.flatnonzero(s.counts)
+            return rows(rtype, label=hit.astype(np.int64), n=s.counts[hit],
+                        sums=s.sums[hit].tolist(), sqsums=s.sqsums[hit].tolist())
 
         def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
                 if not len(pdf):
                     continue
                 pts = np.stack(pdf["features"].to_numpy())
-                ids = pdf["id"].to_numpy()
-                dist = mahalanobis_to_all(pts, ds_centers, ds_stds)
-                best = dist.argmin(axis=1)
-                bestd = dist[np.arange(len(pts)), best]
-                kind = np.where(bestd < a_ds, KIND_DS, KIND_RS)
-                label = np.where(kind == KIND_DS, best, -1)
-                if cs_centers is not None and (kind == KIND_RS).any():
-                    rs_mask = kind == KIND_RS
-                    cdist = mahalanobis_to_all(pts[rs_mask], cs_centers, cs_stds)
-                    cbest = cdist.argmin(axis=1)
-                    cbestd = cdist[np.arange(rs_mask.sum()), cbest]
-                    hit = cbestd < a_ds
-                    kind[rs_mask] = np.where(hit, KIND_CS, KIND_RS)
-                    label[rs_mask] = np.where(hit, cbest, -1)
+                n_bad = int((~np.isfinite(pts)).sum())
+                if n_bad:
+                    yield rows(cls._RT_NONFINITE, n=[n_bad])
+                    continue
+                ids = pdf["id"].to_numpy().astype(np.int64)
+                best, in_ds = nearest_summary(pts, ds, gate)
+                in_cs = np.zeros_like(in_ds)
+                if cs is not None and not in_ds.all():
+                    rest = ~in_ds
+                    best[rest], in_cs[rest] = nearest_summary(pts[rest], cs, gate)
 
                 out = []
-                ds_mask = kind == KIND_DS
-                if ds_mask.any():
-                    out.append(
-                        pd.DataFrame(
-                            {
-                                "rtype": cls._RT_ASSIGN,
-                                "label": label[ds_mask].astype(np.int64),
-                                "n": None,
-                                "sums": None,
-                                "sqsums": None,
-                                "id": ids[ds_mask].astype(np.int64),
-                                "features": None,
-                            }
-                        )
-                    )
-                    out.append(partial_rows(pts[ds_mask], label[ds_mask], cls._RT_P_DS))
-                cs_mask = kind == KIND_CS
-                if cs_mask.any():
-                    out.append(partial_rows(pts[cs_mask], label[cs_mask], cls._RT_P_CS))
-                    out.append(
-                        pd.DataFrame(
-                            {
-                                "rtype": cls._RT_CS_MEMBER,
-                                "label": label[cs_mask].astype(np.int64),
-                                "n": None,
-                                "sums": None,
-                                "sqsums": None,
-                                "id": ids[cs_mask].astype(np.int64),
-                                "features": None,
-                            }
-                        )
-                    )
-                rs_mask = kind == KIND_RS
-                if rs_mask.any():
-                    out.append(
-                        pd.DataFrame(
-                            {
-                                "rtype": cls._RT_RS,
-                                "label": None,
-                                "n": None,
-                                "sums": None,
-                                "sqsums": None,
-                                "id": ids[rs_mask].astype(np.int64),
-                                "features": pd.Series(list(pts[rs_mask])),
-                            }
-                        )
-                    )
+                hit = in_ds | in_cs
+                if hit.any():
+                    label = best.copy()
+                    label[in_cs] = cs_label[best[in_cs]]
+                    out.append(rows(cls._RT_ASSIGN, label=label[hit], id=ids[hit]))
+                if in_ds.any():
+                    out.append(partial_rows(pts[in_ds], best[in_ds], ds.k, cls._RT_P_DS))
+                if in_cs.any():
+                    out.append(partial_rows(pts[in_cs], best[in_cs], cs.k, cls._RT_P_CS))
+                if not hit.all():
+                    out.append(rows(cls._RT_RS, id=ids[~hit], features=pd.Series(list(pts[~hit]))))
                 yield pd.concat(out, ignore_index=True)
 
         return fn
@@ -282,26 +285,23 @@ class BFR:
     def _apply_feedback(self, fb: pd.DataFrame) -> None:
         """Fold one chunk's collected feedback into driver state."""
 
-        def apply_partials(rows: pd.DataFrame, summaries: Summaries) -> int:
-            if not len(rows):
-                return 0
-            summaries.add_partials(
-                rows["label"].to_numpy().astype(np.int64),
-                rows["n"].to_numpy().astype(np.int64),
-                np.stack(rows["sums"].to_numpy()),
-                np.stack(rows["sqsums"].to_numpy()),
-            )
+        def fold(rtype: int, summaries: Summaries) -> int:
+            rows = fb[fb["rtype"] == rtype]
+            if len(rows):
+                summaries.add_partials(
+                    rows["label"].to_numpy().astype(np.int64),
+                    rows["n"].to_numpy().astype(np.int64),
+                    np.stack(rows["sums"].to_numpy()),
+                    np.stack(rows["sqsums"].to_numpy()),
+                )
             return int(rows["n"].sum())
 
-        self._n_discard_points += apply_partials(fb[fb["rtype"] == self._RT_P_DS], self.ds)
-        if self.cs is not None and self.cs.k:
-            apply_partials(fb[fb["rtype"] == self._RT_P_CS], self.cs)
-            for _, row in fb[fb["rtype"] == self._RT_CS_MEMBER].iterrows():
-                self.cs_members[int(row["label"])].append(int(row["id"]))
+        self._n_discard_points += fold(self._RT_P_DS, self.ds)
+        fold(self._RT_P_CS, self.cs)
         rs = fb[fb["rtype"] == self._RT_RS]
         if len(rs):
-            self.rs_ids.extend(rs["id"].astype(int).tolist())
-            self.rs_pts.extend(list(np.stack(rs["features"].to_numpy())))
+            self.rs_ids = np.concatenate([self.rs_ids, rs["id"].to_numpy().astype(np.int64)])
+            self.rs_pts = np.concatenate([self.rs_pts, np.stack(rs["features"].to_numpy())])
 
     # ---------- driver-side (bounded) steps ----------
 
@@ -313,14 +313,13 @@ class BFR:
         k1 = min(cfg.n_clusters * cfg.init_oversample, max(len(pts) // 2, 1))
         km1 = LocalKMeans(k1, cfg.kmeans_iterations, cfg.seed).fit(pts)
         sizes = np.bincount(km1.labels, minlength=k1)
-        outlier_labels = set(np.where(sizes == 1)[0])
-        is_outlier = np.isin(km1.labels, list(outlier_labels)) if outlier_labels else np.zeros(len(pts), bool)
+        is_outlier = sizes[km1.labels] == 1
         if (~is_outlier).sum() < cfg.n_clusters:
             # degenerate tiny sample: keep everything as inlier
             is_outlier = np.zeros(len(pts), bool)
 
-        self.rs_ids.extend(ids[is_outlier].tolist())
-        self.rs_pts.extend(list(pts[is_outlier]))
+        self.rs_ids, self.rs_pts = ids[is_outlier].astype(np.int64), pts[is_outlier]
+        self.cs, self.cs_ids, self.cs_labels = Summaries.empty(pts.shape[1]), [], np.zeros(0, dtype=np.int64)
 
         in_ids, in_pts = ids[~is_outlier], pts[~is_outlier]
         km2 = LocalKMeans(cfg.n_clusters, cfg.kmeans_iterations, cfg.seed).fit(in_pts)
@@ -328,37 +327,31 @@ class BFR:
         self._n_discard_points += len(in_ids)
         return pd.DataFrame({"id": in_ids, "cluster": km2.labels.astype(np.int64)})
 
-    def _compress_rs(self) -> None:
+    def _compress_rs(self) -> pd.DataFrame:
         """Reference ``cluster_rs`` (bfr.py:259-288): cluster the RS
         pool with 5k clusters; singletons stay RS, the rest become
-        CS; then merge close CS (``merge_css``)."""
+        CS; then merge close CS (``merge_css``). Returns the new CS
+        members under their provisional labels."""
         cfg = self.cfg
-        pts = np.stack(self.rs_pts)
-        ids = np.asarray(self.rs_ids)
-        k = min(cfg.n_clusters * cfg.rs_cluster_factor, len(pts))
-        km = LocalKMeans(k, cfg.kmeans_iterations, cfg.seed).fit(pts)
+        k = min(cfg.n_clusters * cfg.rs_cluster_factor, len(self.rs_ids))
+        km = LocalKMeans(k, cfg.kmeans_iterations, cfg.seed).fit(self.rs_pts)
         sizes = np.bincount(km.labels, minlength=k)
-
-        keep_rs = np.isin(km.labels, np.where(sizes <= 1)[0])
-        cs_labels = np.where(sizes > 1)[0]
-        if len(cs_labels):
-            new_cs = Summaries.from_points(pts[~keep_rs], _remap(km.labels[~keep_rs], cs_labels), len(cs_labels))
-            new_members = [ids[km.labels == c].tolist() for c in cs_labels]
-            if self.cs is None or not self.cs.k:
-                self.cs = new_cs
-                self.cs_members = new_members
-            else:
-                self.cs.append(new_cs)
-                self.cs_members.extend(new_members)
+        to_cs = sizes[km.labels] > 1
+        n_new = int((sizes > 1).sum())
+        # k-means label → index among the new CS
+        labels = (np.cumsum(sizes > 1) - 1)[km.labels[to_cs]]
+        first_id = sum(map(len, self.cs_ids))
+        members = pd.DataFrame({"id": self.rs_ids[to_cs], "cluster": -2 - first_id - labels})
+        if n_new:
+            self.cs.append(Summaries.from_points(self.rs_pts[to_cs], labels, n_new))
+            self.cs_ids += [[first_id + j] for j in range(n_new)]
             self._merge_css()
-        self.rs_ids = ids[keep_rs].tolist()
-        self.rs_pts = list(pts[keep_rs])
+        self.rs_ids, self.rs_pts = self.rs_ids[~to_cs], self.rs_pts[~to_cs]
+        return members
 
     def _merge_css(self) -> None:
         """Reference ``merge_css`` (bfr.py:290-320): greedily merge
         CS pairs with center-to-center Mahalanobis < 3·√d."""
-        if self.cs is None or self.cs.k < 2:
-            return
         d = self.cs.sums.shape[1]
         thresh = self.cfg.cs_merge_threshold * math.sqrt(d)
         merged = True
@@ -370,57 +363,38 @@ class BFR:
                 dist[j] = np.inf
                 i = int(dist.argmin())
                 if dist[i] < thresh:
-                    # fold j into i
-                    self.cs.counts[i] += self.cs.counts[j]
-                    self.cs.sums[i] += self.cs.sums[j]
-                    self.cs.sqsums[i] += self.cs.sqsums[j]
-                    self.cs_members[i].extend(self.cs_members[j])
+                    # fold j into i; i keeps its provisional ids and gains j's
+                    self.cs.add_partials([i], self.cs.counts[[j]], self.cs.sums[[j]], self.cs.sqsums[[j]])
                     self.cs.drop([j])
-                    del self.cs_members[j]
+                    self.cs_ids[i].extend(self.cs_ids[j])
+                    del self.cs_ids[j]
                     merged = True
                     break
 
-    def _fold_rs_into_ds(self, alpha: float) -> tuple[pd.DataFrame, int]:
+    def _fold_rs_into_ds(self, alpha: float) -> pd.DataFrame:
         """Reference ``int_rs_to_ds``/``merge_into_ds`` RS part
         (bfr.py:322-334, 336-346): assign RS points to DS within
         α·√d; unassigned stay (or become -1 at the end)."""
-        if not self.rs_pts:
-            return pd.DataFrame({"id": [], "cluster": []}).astype({"id": "int64", "cluster": "int64"}), 0
-        pts = np.stack(self.rs_pts)
-        ids = np.asarray(self.rs_ids)
-        d = pts.shape[1]
-        dist = mahalanobis_to_all(pts, self.ds.centers, self.ds.stds)
-        best = dist.argmin(axis=1)
-        bestd = dist[np.arange(len(pts)), best]
-        ok = bestd < alpha * math.sqrt(d)
-        # fold accepted points' stats into DS
+        d = self.ds.sums.shape[1]
+        best, ok = nearest_summary(self.rs_pts, self.ds, alpha * math.sqrt(d))
         if ok.any():
-            acc = Summaries.from_points(pts[ok], best[ok], self.ds.k)
-            self.ds.counts += acc.counts
-            self.ds.sums += acc.sums
-            self.ds.sqsums += acc.sqsums
+            self.ds.add(Summaries.from_points(self.rs_pts[ok], best[ok], self.ds.k), np.arange(self.ds.k))
             self._n_discard_points += int(ok.sum())
-        out = pd.DataFrame({"id": ids[ok], "cluster": best[ok].astype(np.int64)})
-        self.rs_ids = ids[~ok].tolist()
-        self.rs_pts = list(pts[~ok])
-        return out, int(ok.sum())
+        out = pd.DataFrame({"id": self.rs_ids[ok], "cluster": best[ok].astype(np.int64)})
+        self.rs_ids, self.rs_pts = self.rs_ids[~ok], self.rs_pts[~ok]
+        return out
 
-    def _fold_cs_into_ds(self) -> dict[int, int]:
+    def _fold_cs_into_ds(self) -> None:
         """Reference ``merge_into_ds`` CS part (bfr.py:348-355):
-        every CS joins its nearest DS unconditionally (α→∞)."""
-        mapping: dict[int, int] = {}
-        if self.cs is None or not self.cs.k:
-            return mapping
-        dist = mahalanobis_to_all(self.cs.centers, self.ds.centers, self.ds.stds)
-        best = dist.argmin(axis=1)
-        for j in range(self.cs.k):
-            ds_label = int(best[j])
-            mapping[j] = ds_label
-            self.ds.counts[ds_label] += self.cs.counts[j]
-            self.ds.sums[ds_label] += self.cs.sums[j]
-            self.ds.sqsums[ds_label] += self.cs.sqsums[j]
-            self._n_discard_points += int(self.cs.counts[j])
-        return mapping
+        every CS joins its nearest DS unconditionally (α→∞), and every
+        provisional id the CS absorbed resolves to that DS label."""
+        best, _ = nearest_summary(self.cs.centers, self.ds)
+        self.ds.add(self.cs, best)
+        self._n_discard_points += int(self.cs.counts.sum())
+        self.cs_labels = np.zeros(sum(map(len, self.cs_ids)), dtype=np.int64)
+        for j, ids in enumerate(self.cs_ids):
+            self.cs_labels[ids] = best[j]
+        self.cs, self.cs_ids = Summaries.empty(self.ds.sums.shape[1]), []
 
     def _record_round(self, round_id: int) -> None:
         self.round_stats.append(
@@ -428,21 +402,19 @@ class BFR:
                 round_id=round_id,
                 nof_cluster_discard=self.cfg.n_clusters,
                 nof_point_discard=self._n_discard_points,
-                nof_cluster_compression=0 if self.cs is None else self.cs.k,
-                nof_point_compression=sum(len(m) for m in self.cs_members),
+                nof_cluster_compression=self.cs.k,
+                nof_point_compression=int(self.cs.counts.sum()),
                 nof_point_retained=len(self.rs_ids),
             )
         )
-
-    # ---------- main entry ----------
 
     # ---------- mid-stream checkpoint / resume ----------
     #
     # The reference Runner has no restartability: a crash at chunk 24
     # of 500 restarts the whole fit. At 100 TB that is the difference
     # between a re-queued task and a lost day, so every round ends by
-    # checkpointing the COMPLETE mutable state (O(k·d) summaries +
-    # the rs_max-bounded retained set + the bounded driver-side
+    # checkpointing the COMPLETE mutable state (O(k·d) summaries, the
+    # CS id table, the rs_max-bounded retained set and the driver-side
     # assignment tail) to ``{run_dir}/state.json`` — written AFTER
     # the round's distributed assignment write, atomically
     # (tmp + os.replace). Per-round assignments go to their own
@@ -468,36 +440,28 @@ class BFR:
         state.json is always the LATEST completed round. The write is
         crash-safe: fsync(tmp) → os.replace → fsync(dir) — a torn or
         empty state.json cannot survive a power loss (r11 ADVICE)."""
-        import json
-        import os
         import threading
 
-        def _summ(s: "Summaries | None"):
-            if s is None:
-                return None
-            return {
-                "counts": s.counts.tolist(),
-                "sums": s.sums.tolist(),
-                "sqsums": s.sqsums.tolist(),
-            }
-
         payload = {
+            "format": _CKPT_FORMAT,
             "next_round": next_round,
             # provenance (r11 ADVICE): resuming with a different
             # chunking/corpus must fail loudly, not skip rounds that
             # never ran for this data
             "meta": meta or {},
-            "ds": _summ(self.ds),
-            "cs": _summ(self.cs),
-            "cs_members": [[int(x) for x in m] for m in self.cs_members],
-            "rs_ids": [int(x) for x in self.rs_ids],
-            "rs_pts": [list(map(float, p)) for p in self.rs_pts],
+            "ds": self.ds.to_dict(),
+            "cs": self.cs.to_dict(),
+            "cs_ids": [list(m) for m in self.cs_ids],
+            "cs_labels": self.cs_labels.tolist(),
+            "rs_ids": self.rs_ids.tolist(),
+            "rs_pts": self.rs_pts.tolist(),
             "n_discard_points": int(self._n_discard_points),
             "round_stats": [vars(r) for r in self.round_stats],
             "tail": [
                 {"id": df["id"].astype("int64").tolist(),
                  "cluster": df["cluster"].astype("int64").tolist()}
                 for df in tail
+                if len(df)
             ],
         }
 
@@ -540,19 +504,19 @@ class BFR:
     def _ckpt_load(
         self, run_dir: str, expect_meta: dict | None = None
     ) -> tuple[int, list[pd.DataFrame]] | None:
-        import json
-        import os
-
         path = os.path.join(run_dir, "state.json")
         if not os.path.exists(path):
             return None
         try:
             with open(path) as fh:
                 payload = json.load(fh)
-        except (json.JSONDecodeError, OSError) as e:
+            if not isinstance(payload, dict) or payload.get("format") != _CKPT_FORMAT:
+                raise ValueError(f"not a format-{_CKPT_FORMAT} checkpoint")
+        except (ValueError, OSError) as e:
             # a torn checkpoint (pre-fsync crash on old builds, disk
-            # fault) must not block the resume the feature exists
-            # for: fall back to a from-scratch fit
+            # fault) or one written in an older layout must not block
+            # the resume the feature exists for: fall back to a
+            # from-scratch fit
             print(f"bfr: unreadable checkpoint {path} ({e}); refitting from scratch")
             return None
         if expect_meta:
@@ -573,20 +537,13 @@ class BFR:
                     "data. Use a fresh run_dir (or resume=False)."
                 )
 
-        def _summ(obj):
-            if obj is None:
-                return None
-            return Summaries(
-                np.asarray(obj["counts"], dtype=np.int64),
-                np.asarray(obj["sums"], dtype=np.float64),
-                np.asarray(obj["sqsums"], dtype=np.float64),
-            )
-
-        self.ds = _summ(payload["ds"])
-        self.cs = _summ(payload["cs"])
-        self.cs_members = [list(m) for m in payload["cs_members"]]
-        self.rs_ids = list(payload["rs_ids"])
-        self.rs_pts = [np.asarray(p, dtype=np.float64) for p in payload["rs_pts"]]
+        self.ds = Summaries.from_dict(payload["ds"])
+        d = self.ds.sums.shape[1]
+        self.cs = Summaries.from_dict(payload["cs"], d)
+        self.cs_ids = payload["cs_ids"]
+        self.cs_labels = np.asarray(payload["cs_labels"], dtype=np.int64)
+        self.rs_ids = np.asarray(payload["rs_ids"], dtype=np.int64)
+        self.rs_pts = np.asarray(payload["rs_pts"], dtype=np.float64).reshape(-1, d)
         self._n_discard_points = int(payload["n_discard_points"])
         self.round_stats = [RoundStats(**r) for r in payload["round_stats"]]
         tail = [
@@ -646,7 +603,8 @@ class BFR:
         per chunk. With ``resume=True`` and a ``state.json`` present
         in ``run_dir``, completed rounds are skipped and the fit
         continues from the first unfinished chunk (see the
-        checkpoint/resume contract above)."""
+        checkpoint/resume contract above). A non-finite feature
+        value raises ``ValueError``."""
         cfg = self.cfg
         spark = chunks[0].sparkSession
         # an anonymous tempdir cannot be resumed (the caller can't
@@ -680,8 +638,9 @@ class BFR:
                 frac = min(max(cfg.init_sample_frac, min_frac), 1.0, cfg.init_sample_cap / chunk_n)
                 sample = chunk.sample(fraction=frac, seed=cfg.seed).select("id", "features").toPandas()
                 ids = sample["id"].to_numpy()
-                init_assign = self._init_from_sample(ids, np.stack(sample["features"].to_numpy()))
-                driver_assignments.append(init_assign)
+                pts = np.stack(sample["features"].to_numpy())
+                _require_finite(int((~np.isfinite(pts)).sum()), "chunk 0's init sample")
+                driver_assignments.append(self._init_from_sample(ids, pts))
                 # the non-sampled remainder of chunk 0 goes through
                 # the normal assignment path (ref assign_dsrsout on
                 # points_rest, bfr.py:429)
@@ -694,7 +653,7 @@ class BFR:
                     "id", F.col("label").alias("cluster")
                 )
                 if ckpt_enabled:
-                    # job 1: distributed write of DS assignments — one
+                    # job 1: distributed write of the assignments — one
                     # subdirectory per round, OVERWRITE, so a resumed
                     # re-run of an interrupted round is idempotent
                     asg.write.mode("overwrite").parquet(f"{out_path}/round_{round_id:05d}")
@@ -710,44 +669,22 @@ class BFR:
                     # final recursive parquet read gone (guide §2.4).
                     ckpt_frames.append(asg.localCheckpoint(eager=True))
                 # job 2: tiny driver-bound feedback collect (partials,
-                # RS points, CS memberships)
+                # RS points, non-finite counts)
                 fb = fused.filter(F.col("rtype") != self._RT_ASSIGN).toPandas()
             finally:
                 fused.unpersist()
+            _require_finite(int(fb.loc[fb["rtype"] == self._RT_NONFINITE, "n"].sum()), f"chunk {round_id}")
             self._apply_feedback(fb)
 
             last = round_id == n_chunks - 1
-            if not last:
-                if cfg.use_cs and len(self.rs_pts) > cfg.rs_max:
-                    self._compress_rs()
-                folded, _ = self._fold_rs_into_ds(cfg.alpha_fold)
-                if len(folded):
-                    driver_assignments.append(folded)  # bounded by RS size
-            else:
-                # final round: RS → DS (α=4) else -1; CS → nearest DS
-                folded, _ = self._fold_rs_into_ds(cfg.alpha_fold)
-                if len(folded):
-                    driver_assignments.append(folded)
-                if self.rs_ids:
-                    driver_assignments.append(
-                        pd.DataFrame(
-                            {
-                                "id": np.asarray(self.rs_ids, dtype=np.int64),
-                                "cluster": np.full(len(self.rs_ids), -1, dtype=np.int64),
-                            }
-                        )
-                    )
-                cs_map = self._fold_cs_into_ds()
-                cs_rows = [
-                    (int(pid), int(ds_label))
-                    for j, ds_label in cs_map.items()
-                    for pid in self.cs_members[j]
-                ]
-                if cs_rows:
-                    driver_assignments.append(pd.DataFrame(cs_rows, columns=["id", "cluster"]))
-                self.rs_ids, self.rs_pts = [], []
-                self.cs = None
-                self.cs_members = []
+            if cfg.use_cs and not last and len(self.rs_ids) > cfg.rs_max:
+                driver_assignments.append(self._compress_rs())
+            driver_assignments.append(self._fold_rs_into_ds(cfg.alpha_fold))
+            if last:
+                # final round: the rest of RS → -1; CS → nearest DS
+                driver_assignments.append(pd.DataFrame({"id": self.rs_ids, "cluster": -1}))
+                self.rs_ids, self.rs_pts = self.rs_ids[:0], self.rs_pts[:0]
+                self._fold_cs_into_ds()
             self._record_round(round_id + 1)
             # the round is durable (assignments written) — checkpoint
             # the complete mutable state so a crash before the next
@@ -756,39 +693,34 @@ class BFR:
                 self._ckpt_write(run_dir, round_id + 1, driver_assignments, meta=ckpt_meta)
         self._ckpt_join()
 
-        tail = [df.astype({"id": "int64", "cluster": "int64"}) for df in driver_assignments if len(df)]
+        tail = [df for df in driver_assignments if len(df)]
+        tail_frames = [spark.createDataFrame(pd.concat(tail, ignore_index=True).astype("int64"))] if tail else []
         if not ckpt_enabled:
             # non-resumable path: the rounds live as localCheckpoints;
             # one union replaces the recursive parquet read
-            from functools import reduce
-
-            frames = list(ckpt_frames)
-            if tail:
-                frames.append(
-                    spark.createDataFrame(pd.concat(tail, ignore_index=True)).select(
-                        "id", "cluster"
-                    )
-                )
-            return reduce(DataFrame.unionByName, frames)
-
-        # the recursive read below sweeps EVERY round_* subdirectory —
-        # a run_dir previously used with more chunks would contribute
-        # stale assignments that never ran for this data (r11 ADVICE),
-        # so verify/clean beyond n_chunks before the final read
-        import re
-        import shutil
-
-        for name in os.listdir(out_path) if os.path.isdir(out_path) else []:
-            m = re.fullmatch(r"round_(\d{5})", name)
-            if m and int(m.group(1)) >= n_chunks:
-                shutil.rmtree(os.path.join(out_path, name))
-
-        # one write for all driver-side (RS/CS-bounded) assignments
-        if tail:
-            spark.createDataFrame(pd.concat(tail, ignore_index=True)).write.mode(
-                "overwrite"
-            ).parquet(f"{out_path}/tail")
-        return spark.read.option("recursiveFileLookup", "true").parquet(out_path)
+            out = reduce(DataFrame.unionByName, ckpt_frames + tail_frames)
+        else:
+            # the recursive read below sweeps EVERY round_* subdirectory —
+            # a run_dir previously used with more chunks would contribute
+            # stale assignments that never ran for this data (r11 ADVICE),
+            # so verify/clean beyond n_chunks before the final read
+            for name in os.listdir(out_path) if os.path.isdir(out_path) else []:
+                m = re.fullmatch(r"round_(\d{5})", name)
+                if m and int(m.group(1)) >= n_chunks:
+                    shutil.rmtree(os.path.join(out_path, name))
+            # one write for all driver-side assignments
+            for df in tail_frames:
+                df.write.mode("overwrite").parquet(f"{out_path}/tail")
+            out = spark.read.option("recursiveFileLookup", "true").parquet(out_path)
+        if not len(self.cs_labels):
+            return out
+        # provisional CS label -2 - p → the DS label CS id p folded
+        # into: one narrow projection over a literal array (one
+        # constant-folded from_json node), no join, no shuffle
+        c = F.col("cluster")
+        lut = F.from_json(F.lit(json.dumps(self.cs_labels.tolist())), "array<bigint>")
+        resolved = F.when(c <= -2, F.element_at(lut, (-1 - c).cast("int"))).otherwise(c)
+        return out.select("id", resolved.alias("cluster"))
 
     def intermediate_stats(self) -> pd.DataFrame:
         """Reference's intermediate CSV (bfr.py:453-460)."""
@@ -804,20 +736,16 @@ class BFR:
         DS. One broadcast + one map pass, no shuffle."""
         if self.ds is None:
             raise ValueError("predict() requires a fitted model")
-        centers, stds = self.ds.centers, self.ds.stds
-        d = centers.shape[1]
-        gate = None if alpha is None else alpha * math.sqrt(d)
+        ds = self.ds
+        gate = np.inf if alpha is None else alpha * math.sqrt(ds.sums.shape[1])
 
         def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
                 if not len(pdf):
                     continue
-                pts = np.stack(pdf["features"].to_numpy())
-                dist = mahalanobis_to_all(pts, centers, stds)
-                best = dist.argmin(axis=1)
-                if gate is not None:
-                    bestd = dist[np.arange(len(pts)), best]
-                    best = np.where(bestd < gate, best, -1)
+                best, ok = nearest_summary(np.stack(pdf["features"].to_numpy()), ds, gate)
+                if alpha is not None:
+                    best = np.where(ok, best, -1)
                 yield pd.DataFrame({"id": pdf["id"], "cluster": best.astype(np.int64)})
 
         return points.select("id", "features").mapInPandas(fn, schema="id long, cluster long")
@@ -825,15 +753,11 @@ class BFR:
     def save(self, path: str) -> None:
         """Persist the fitted DS summaries + config as JSON (state is
         O(k·d) — a driver-side file is the right representation)."""
-        import json
-
         if self.ds is None:
             raise ValueError("save() requires a fitted model")
         payload = {
-            "config": {k: v for k, v in vars(self.cfg).items()},
-            "counts": self.ds.counts.tolist(),
-            "sums": self.ds.sums.tolist(),
-            "sqsums": self.ds.sqsums.tolist(),
+            "config": vars(self.cfg),
+            **self.ds.to_dict(),
             "round_stats": [vars(r) for r in self.round_stats],
         }
         with open(path, "w") as f:
@@ -841,20 +765,9 @@ class BFR:
 
     @classmethod
     def load(cls, path: str) -> "BFR":
-        import json
-
         with open(path) as f:
             payload = json.load(f)
         model = cls(BFRConfig(**payload["config"]))
-        model.ds = Summaries(
-            np.asarray(payload["counts"], dtype=np.int64),
-            np.asarray(payload["sums"], dtype=np.float64),
-            np.asarray(payload["sqsums"], dtype=np.float64),
-        )
+        model.ds = Summaries.from_dict(payload)
         model.round_stats = [RoundStats(**r) for r in payload["round_stats"]]
         return model
-
-
-def _remap(labels: np.ndarray, kept: np.ndarray) -> np.ndarray:
-    lut = {int(old): new for new, old in enumerate(kept)}
-    return np.asarray([lut[int(x)] for x in labels], dtype=np.int64)

@@ -691,8 +691,9 @@ SELECT q_id, vec_id, cosine, rank FROM ranked WHERE rank <= {TOP_K} ORDER BY q_i
 ANN_IVF_RERANK_SQL = _ivf_rerank_oracle_sql()
 
 PQ_M = 8  # subspaces
-PQ_K = 16  # centroids per subspace (4-bit codes)
-PQ_ANCHOR_LO, PQ_ANCHOR_HI = 1, 16  # vec_ids whose subvectors seed the codebooks
+# vec_ids whose subvectors seed the codebooks: 16 centroids per
+# subspace (4-bit codes)
+PQ_ANCHOR_LO, PQ_ANCHOR_HI = 1, 16
 PQ_SHORTLIST = 20 * TOP_K  # ADC shortlist depth before exact re-rank
 # (measured: shortlist 100 → recall@5 0.84 at sf0.001 / 0.60 at
 # sf0.1 vs brute force; the exact re-rank touches only O(q·100) rows

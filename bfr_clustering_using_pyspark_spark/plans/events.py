@@ -53,14 +53,12 @@ def q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     w_user = W.partitionBy("user_id").orderBy("ts", "event_id")
+    # fractional epoch seconds, as the oracle's epoch(ts): a long cast
+    # would truncate to whole seconds and read a 1800.5 s gap as 1800
+    secs = F.unix_micros(F.col("ts").cast("timestamp")) / F.lit(1e6)
     flagged = ev.withColumn(
         "new_session",
-        F.when(
-            F.col("ts").cast("timestamp").cast("long")
-            - F.lag(F.col("ts").cast("timestamp").cast("long")).over(w_user)
-            > SESSION_GAP_MIN * 60,
-            1,
-        )
+        F.when(secs - F.lag(secs).over(w_user) > SESSION_GAP_MIN * 60, 1)
         .when(F.lag("ts").over(w_user).isNull(), 1)
         .otherwise(0),
     ).withColumn(

@@ -730,23 +730,6 @@ def _kdet_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     return emb.select("vec_id", xi.alias("xi"))
 
 
-def _sql_darr(vals) -> str:
-    """array<double> literal as SQL text. ``repr`` is the shortest
-    round-trip decimal, so the JVM parses back the IDENTICAL double —
-    rendering literal matrices as ONE parsed string replaces
-    thousands of py4j Column constructions (measured ~100× cheaper;
-    the per-scalar form dominated the det-epoch wall clock)."""
-    return "array(" + ",".join(f"{float(v)!r}D" for v in vals) + ")"
-
-
-def _sql_dmat(rows) -> str:
-    return "array(" + ",".join(_sql_darr(r) for r in rows) + ")"
-
-
-def _sql_larr(vals) -> str:
-    return "array(" + ",".join(f"{int(v)}L" for v in vals) + ")"
-
-
 def _sql_json_lit(value, sql_type: str) -> str:
     """A literal array (of any nesting) rendered as
     ``from_json('<json>', '<type>')`` SQL text.
@@ -792,7 +775,7 @@ def _kdet_assign_expr(centroids: dict[int, list[float]], scale: float = KDET_SCA
     (centroid ids listed ascending, array_position takes the first
     min). One higher-order transform over an array-of-arrays literal
     — the lambda body exists once in the plan, keeping codegen alive
-    across the unrolled rounds. Rendered as SQL text (``_sql_darr``)
+    across the unrolled rounds. Rendered as SQL text (``_sql_djson``)
     so the literal matrix costs one JVM parse, with the exact fold
     shape of the previous Column build: zip_with (x/S − c)² →
     left-fold sum."""
@@ -1040,19 +1023,9 @@ def _bdet_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bdet_mom_aggs() -> list:
-    """count + per-dim Σx and Σx² — exact BIGINT moments, map-side
-    combined (one wide row per cluster, no row explosion)."""
-    return (
-        [F.count("*").alias("n")]
-        + [F.sum(F.col("xi")[i]).alias(f"s{i}") for i in range(KDET_DIMS)]
-        + [F.sum(F.col("xi")[i] * F.col("xi")[i]).alias(f"q{i}") for i in range(KDET_DIMS)]
-    )
-
-
-# the same (1+2d) moment columns as ONE parsed struct expression —
-# identical aggregates (xi[i] is the same 0-based ordinal access),
-# one py4j call instead of ~3·(1+2d)
+# count + per-dim Σx and Σx² — exact BIGINT moments, map-side
+# combined (one wide row per cluster) — as ONE parsed struct
+# expression: one py4j call instead of ~3·(1+2d) Column builds
 _BDET_MOM_STRUCT = (
     "struct(count(*) as n, "
     + ", ".join(f"sum(xi[{i}]) as s{i}" for i in range(KDET_DIMS))
@@ -1060,6 +1033,21 @@ _BDET_MOM_STRUCT = (
     + ", ".join(f"sum(xi[{i}] * xi[{i}]) as q{i}" for i in range(KDET_DIMS))
     + ") as m"
 )
+
+
+def _bdet_fold(mom: dict[int, tuple[int, list[int], list[int]]], grouped: DataFrame) -> None:
+    """Fold collected per-cluster ``_BDET_MOM_STRUCT`` rows into the
+    exact integer moments ``mom`` (cluster → (n, Σx, Σx²))."""
+    for row in grouped.collect():
+        c = row["cluster"]
+        r = row["m"]
+        n0, s0, q0 = mom.get(c, (0, [0] * KDET_DIMS, [0] * KDET_DIMS))
+        mom[c] = (
+            n0 + r["n"],
+            [s0[i] + r[f"s{i}"] for i in range(KDET_DIMS)],
+            [q0[i] + r[f"q{i}"] for i in range(KDET_DIMS)],
+        )
+
 
 _BDET_LLOYD_STRUCT = (
     "struct(count(*) as n, "
@@ -1116,13 +1104,6 @@ def _bdet_gate_parts(mom: dict[int, tuple[int, list[int], list[int]]]):
         f"CAST({ids_arr}[array_position({d2s}, array_min({d2s})) - 1] AS INT)"
     )
     return bc, best
-
-
-def _bdet_gate_expr(mom: dict[int, tuple[int, list[int], list[int]]]):
-    """α-threshold Mahalanobis gate (ref bfr.py:363-374): nearest DS
-    cluster iff d² ≤ α²·d, else retained (−1)."""
-    bc, best = _bdet_gate_parts(mom)
-    return F.when(best <= F.lit(BDET_THRESH), bc).otherwise(F.lit(-1).cast("int"))
 
 
 # CS-tier face parameters (``bfr_lloyd_cs``). The driver corpus never
@@ -1237,21 +1218,10 @@ def _bdet_epoch_build(spark: SparkSession, sf_dir: str, retain: str):
 
     mom: dict[int, tuple[int, list[int], list[int]]] = {}
 
-    def _fold(grouped: DataFrame) -> None:
-        for row in grouped.collect():
-            c = row["cluster"]
-            r = row["m"]
-            n0, s0, q0 = mom.get(c, (0, [0] * KDET_DIMS, [0] * KDET_DIMS))
-            mom[c] = (
-                n0 + r["n"],
-                [s0[i] + r[f"s{i}"] for i in range(KDET_DIMS)],
-                [q0[i] + r[f"q{i}"] for i in range(KDET_DIMS)],
-            )
-
     frames = [
         chunk0.select("vec_id", "xi", a0.alias("cluster")).localCheckpoint(eager=True)
     ]
-    _fold(frames[0].groupBy("cluster").agg(F.expr(_BDET_MOM_STRUCT)))
+    _bdet_fold(mom, frames[0].groupBy("cluster").agg(F.expr(_BDET_MOM_STRUCT)))
     for t in range(1, BDET_CHUNKS):
         bc, best = _bdet_gate_parts(mom)
         ch = pts.where(F.col("chunk") == t)
@@ -1286,7 +1256,8 @@ def _bdet_epoch_build(spark: SparkSession, sf_dir: str, retain: str):
                 .alias("cluster"),
             )
         frames.append(asg)
-        _fold(
+        _bdet_fold(
+            mom,
             asg.where(F.col("cluster") >= 0)
             .groupBy("cluster")
             .agg(F.expr(_BDET_MOM_STRUCT))
@@ -1898,19 +1869,8 @@ def bfr_lloyd_regate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     mom: dict[int, tuple[int, list[int], list[int]]] = {}
 
-    def _fold_rows(grouped: DataFrame) -> None:
-        for row in grouped.collect():
-            c = row["cluster"]
-            r = row["m"]
-            n0, s0, q0 = mom.get(c, (0, [0] * KDET_DIMS, [0] * KDET_DIMS))
-            mom[c] = (
-                n0 + r["n"],
-                [s0[i] + r[f"s{i}"] for i in range(KDET_DIMS)],
-                [q0[i] + r[f"q{i}"] for i in range(KDET_DIMS)],
-            )
-
     f0 = chunk0.select("vec_id", "xi", a0.alias("cluster")).localCheckpoint(eager=True)
-    _fold_rows(f0.groupBy("cluster").agg(F.expr(_BDET_MOM_STRUCT)))
+    _bdet_fold(mom, f0.groupBy("cluster").agg(F.expr(_BDET_MOM_STRUCT)))
     out = f0.select(
         "vec_id",
         "cluster",
@@ -1944,7 +1904,7 @@ def bfr_lloyd_regate(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("cluster"),
         )
         kept = asg.where(F.col("cluster") >= 0)
-        _fold_rows(kept.groupBy("cluster").agg(F.expr(_BDET_MOM_STRUCT)))
+        _bdet_fold(mom, kept.groupBy("cluster").agg(F.expr(_BDET_MOM_STRUCT)))
         out = out.unionByName(
             kept.select(
                 "vec_id",

@@ -2,7 +2,9 @@
 
 Local-mode testing uses ``local[$SPARK_GRAFT_CPUS]``; the same
 configs (AQE, Arrow, sane shuffle partitioning) are what we'd set on
-a real cluster — only master/memory change.
+a real cluster — only master/memory change. ``$SPARK_GRAFT_DRIVER_MEM``
+sets the driver heap; it defaults to half of physical RAM, capped at
+48g.
 """
 
 from __future__ import annotations
@@ -10,6 +12,17 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def default_driver_memory() -> str:
+    """Half of physical RAM, capped at 48g: in local mode the driver
+    JVM is the whole executor, and a heap larger than the host lets
+    it grow until the OOM killer ends it."""
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):
+        return "48g"
+    return f"{max(1024, min(48 << 10, ram // 2 >> 20))}m"
 
 
 def get_spark(app_name: str = "bfr_spark_engine", shuffle_partitions: int | None = None) -> SparkSession:
@@ -25,7 +38,7 @@ def get_spark(app_name: str = "bfr_spark_engine", shuffle_partitions: int | None
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
     )
     if os.environ.get("SPARK_GRAFT_NO_PROGRESS"):

@@ -29,7 +29,7 @@ WHITELIST = {
     "ml/bfr.py": (4, "1-row id-range agg; 1-row dim probe; seeded init sample; O(k*d) per-chunk suffstats feedback"),
     "ml/kmeans.py": (3, "seeded init sample; O(k*d) centroid frame per round; O(num_batches) inertia partial-sum fold (get_inertia)"),
     "ml/metrics.py": (1, "O(k^2) contingency table for NMI"),
-    "plans/ml_queries.py": (10, "O(k*d) centroids per Lloyd round (kmeans_lloyd_det); _bdet_epoch: K one-row farthest-point TakeOrdereds (2 head sites), O(k*d) init-Lloyd centroid collect, O(k*d) per-chunk moment folds; cap-retain mode: <=BDET_CS_RETAIN ids per chunk; CS faces: constant (chunks-1)*cap pool collect + 4 count-pair heads (bfr_lloyd_cs_stats); bfr_lloyd_regate: O(k*d) moment folds + <=cap retained rows per chunk — all bounded by k*d or the constant pool cap, never n"),
+    "plans/ml_queries.py": (9, "O(k*d) centroids per Lloyd round (kmeans_lloyd_det); _bdet_epoch: K one-row farthest-point TakeOrdereds (2 head sites), O(k*d) init-Lloyd centroid collect, O(k*d) per-chunk moment folds (_bdet_fold, shared with bfr_lloyd_regate); cap-retain mode: <=BDET_CS_RETAIN ids per chunk; CS faces: constant (chunks-1)*cap pool collect + 4 count-pair heads (bfr_lloyd_cs_stats); bfr_lloyd_regate: <=cap retained rows per chunk — all bounded by k*d or the constant pool cap, never n"),
     "plans/events.py": (1, "per-event-type counts (bounded by distinct types)"),
     "plans/tpch_ext.py": (2, "per-returnflag counts (3 rows) for rank medians; q_asof_grouped hot-group gate: <= total/group_cap over-cap user ids (map-side-combined count agg, empty on production-shaped corpora)"),
     "operators/ranking.py": (1, "bucket-cut sketch: <=MAX_BUCKETS doubles per expression"),

@@ -62,3 +62,39 @@ def test_null_semantics_exercises_null_paths(spark):
     assert by_grp[1] == 0 and by_grp[2] == 0
     assert by_grp[3] == 1 and by_grp[4] == 1
     assert rows[0]["grp"] is None  # NULLS FIRST
+
+
+def test_events_sessionize_fractional_gap_matches_oracle(spark, tmp_path):
+    """A 1800.5 s gap starts a new session and a 1799.8 s gap does
+    not, on both engines: a whole-second cast would read 1800.5 s as
+    1800 s and keep the first two events in one session."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bfr_clustering_using_pyspark_spark.plans.events import (
+        Q_EVENTS_SESSIONIZE_SQL,
+        q_events_sessionize,
+    )
+
+    t0 = 1_700_000_000_000_000  # µs, a whole second
+    ts = [t0, t0 + 1_800_500_000, t0 + 1_800_500_000 + 1_799_800_000]
+    events = pa.table(
+        {
+            "event_id": pa.array([1, 2, 3], pa.int64()),
+            "ts": pa.array(ts, pa.timestamp("us")),
+            "user_id": pa.array([7, 7, 7], pa.int64()),
+            "event_type": ["view", "view", "purchase"],
+            "value": [1.0, 2.5, 4.25],
+            "props": ["{}", "{}", "{}"],
+        }
+    )
+    pq.write_table(events, tmp_path / "events.parquet")
+    sdf = q_events_sessionize(spark, str(tmp_path))
+    srows = [tuple(r) for r in sdf.collect()]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{tmp_path}/events.parquet'")
+    rel = con.sql(Q_EVENTS_SESSIONIZE_SQL)
+    drows = rel.fetchall()
+    assert [r["n_events"] for r in sdf.collect()] == [1, 2]
+    assert table_hash(sdf.columns, srows) == table_hash(rel.columns, drows)
