@@ -26,6 +26,8 @@ divide once at the end. The matching oracle-SQL shape is::
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -73,3 +75,30 @@ def fixed_point(col: Column, scale: int = 2) -> Column:
     scale>=1 can never diverge."""
     m = _units(scale)
     return F.round(col * m).cast("long") / m
+
+
+def json_literal_sql(value, sql_type: str) -> str:
+    """A literal array (of any nesting) rendered as
+    ``from_json('<json>', '<type>', map('mode', 'FAILFAST'))`` SQL text.
+
+    Catalyst constant-folds the call into ONE typed Literal at
+    optimization time. The ``array(1.0D, …)`` spelling also folds in
+    the end, but it enters the pipeline as a CreateArray tree of
+    1,000+ scalar-literal nodes that the parser, analyzer, optimizer
+    (and AQE's re-optimizations) each walk on EVERY per-round plan —
+    measured interleaved A/B on the det-epoch gate at sf0.1: 0.56 vs
+    0.43 s/round for identical results. from_json keeps a matrix ONE
+    node at any size.
+
+    Exactness: doubles render via ``json.dumps`` (repr — shortest
+    round-trip decimal; Jackson's parseDouble is correctly rounded,
+    so the JVM sees the identical bits as the ``1.0D`` spelling);
+    ints are parsed as exact int64, never through a double. Nothing
+    reads as NULL by accident: JSON cannot carry NaN/Inf, so a
+    non-finite value raises ``ValueError`` here, at plan-build time,
+    and FAILFAST makes a value that does not fit ``sql_type`` (an
+    int64 overflow, a ragged nesting) raise when the literal folds
+    instead of PERMISSIVE mode's silent NULL."""
+    body = json.dumps(value, separators=(",", ":"), allow_nan=False)
+    esc = body.replace("\\", "\\\\").replace("'", "\\'")
+    return f"from_json('{esc}', '{sql_type}', map('mode', 'FAILFAST'))"

@@ -59,6 +59,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.numeric import json_literal_sql
 from .local_kmeans import LocalKMeans
 
 # state.json layout version; a checkpoint of another version is
@@ -93,15 +94,18 @@ class Summaries:
         return np.sqrt(np.maximum(var, 0.0))
 
     @classmethod
-    def empty(cls, d: int) -> "Summaries":
-        return cls(np.zeros(0, dtype=np.int64), np.zeros((0, d)), np.zeros((0, d)))
+    def empty(cls, d: int, k: int = 0, dtype=np.float64) -> "Summaries":
+        return cls(np.zeros(k, dtype=np.int64), np.zeros((k, d), dtype), np.zeros((k, d), dtype))
 
     @classmethod
     def from_points(cls, pts: np.ndarray, labels: np.ndarray, k: int) -> "Summaries":
+        """Integer points give exact int64 moments; any other input
+        float64."""
         d = pts.shape[1]
+        dtype = np.int64 if pts.dtype.kind in "iu" else np.float64
         counts = np.zeros(k, dtype=np.int64)
-        sums = np.zeros((k, d))
-        sqsums = np.zeros((k, d))
+        sums = np.zeros((k, d), dtype)
+        sqsums = np.zeros((k, d), dtype)
         for c in range(k):
             mask = labels == c
             counts[c] = mask.sum()
@@ -718,7 +722,7 @@ class BFR:
         # into: one narrow projection over a literal array (one
         # constant-folded from_json node), no join, no shuffle
         c = F.col("cluster")
-        lut = F.from_json(F.lit(json.dumps(self.cs_labels.tolist())), "array<bigint>")
+        lut = F.expr(json_literal_sql(self.cs_labels.tolist(), "array<bigint>"))
         resolved = F.when(c <= -2, F.element_at(lut, (-1 - c).cast("int"))).otherwise(c)
         return out.select("id", resolved.alias("cluster"))
 

@@ -11,10 +11,17 @@ scalable plan (shuffle keyed on (label, dim), n×d rows).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from collections import Counter
+from dataclasses import dataclass
+from functools import reduce
+
+import numpy as np
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..functions.cache import SessionCache
+from ..functions.numeric import json_literal_sql
+from ..ml.bfr import Summaries
 from ..sources.readers import load_table
 
 
@@ -722,77 +729,88 @@ KDET_SCALE = 1_000_000.0  # micro-unit quantization for exact sums
 KDET_DIMS = 64
 
 
+def _micro_units(scale: float) -> Column:
+    """``embedding`` as BIGINT units of 1/``scale`` (per-row scale-0
+    round): integer sums of these are exact under any partitioning."""
+    return F.transform(
+        "embedding", lambda x: F.round(x.cast("double") * scale).cast("long")
+    )
+
+
 def _kdet_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    xi = F.transform(
-        "embedding", lambda x: F.round(x.cast("double") * KDET_SCALE).cast("long")
-    )
-    return emb.select("vec_id", xi.alias("xi"))
-
-
-def _sql_json_lit(value, sql_type: str) -> str:
-    """A literal array (of any nesting) rendered as
-    ``from_json('<json>', '<type>')`` SQL text.
-
-    Catalyst constant-folds the call into ONE typed Literal at
-    optimization time. The ``array(1.0D, …)`` spelling also folds in
-    the end, but it enters the pipeline as a CreateArray tree of
-    1,000+ scalar-literal nodes that the parser, analyzer, optimizer
-    (and AQE's re-optimizations) each walk on EVERY per-round plan —
-    measured interleaved A/B on the det-epoch gate at sf0.1: 0.56 vs
-    0.43 s/round for identical results. from_json keeps the matrix
-    ONE node at any size, which also lets the K−1 growing-seed
-    rounds of ``_bdet_init_assign`` share a single expression shape.
-
-    Exactness: doubles render via ``json.dumps`` (repr — shortest
-    round-trip decimal; Jackson's parseDouble is correctly rounded,
-    so the JVM sees the identical bits as the ``1.0D`` spelling);
-    ints are parsed as exact int64, never through a double. JSON
-    cannot carry NaN/Inf, and ``from_json`` would silently turn one
-    into NULL, so a non-finite value raises ``ValueError`` here, at
-    plan-build time."""
-    import json as _json
-
-    body = _json.dumps(value, separators=(",", ":"), allow_nan=False)
-    esc = body.replace("\\", "\\\\").replace("'", "\\'")
-    return f"from_json('{esc}', '{sql_type}')"
+    return emb.select("vec_id", _micro_units(KDET_SCALE).alias("xi"))
 
 
 def _sql_djson(rows) -> str:
     """Matrix of doubles as a single constant-folded literal."""
-    return _sql_json_lit(
+    return json_literal_sql(
         [[float(v) for v in r] for r in rows], "array<array<double>>"
     )
 
 
 def _sql_ljson(rows) -> str:
     """Matrix of int64 as a single constant-folded literal."""
-    return _sql_json_lit([[int(v) for v in r] for r in rows], "array<array<bigint>>")
+    return json_literal_sql([[int(v) for v in r] for r in rows], "array<array<bigint>>")
 
 
-def _kdet_assign_expr(centroids: dict[int, list[float]], scale: float = KDET_SCALE):
-    """argmin_c Σ_d (x_d/SCALE − c_d)², ties → smaller cluster id
-    (centroid ids listed ascending, array_position takes the first
-    min). One higher-order transform over an array-of-arrays literal
-    — the lambda body exists once in the plan, keeping codegen alive
-    across the unrolled rounds. Rendered as SQL text (``_sql_djson``)
-    so the literal matrix costs one JVM parse, with the exact fold
-    shape of the previous Column build: zip_with (x/S − c)² →
-    left-fold sum."""
+def _kdet_d2s(centroids, scale: float = KDET_SCALE) -> tuple[str, str]:
+    """SQL text of (centroid ids ascending, per-centroid Σ_d (x_d/SCALE
+    − c_d)² array). One higher-order transform over an array-of-arrays
+    literal — the lambda body exists once in the plan, keeping codegen
+    alive across the unrolled rounds; the matrix is one single-node
+    literal (see ``json_literal_sql``), so every Lloyd round's plan
+    differs only in literal values and its parse/analyze/fold cost
+    stays O(1) in matrix size. Fold shape: zip_with (x/S − c)² →
+    left-fold sum, the oracle's list_sum order."""
     ids = sorted(centroids)
-    # single-node literals (see _sql_json_lit): every Lloyd round's
-    # plan differs only in the literal values, so the per-round
-    # parse/analyze/fold cost stays O(1) in matrix size
     cmat = _sql_djson([centroids[c] for c in ids])
-    ids_arr = _sql_json_lit([int(c) for c in ids], "array<int>")
+    sl = f"{float(scale)!r}D"
     d2s = (
         f"transform({cmat}, c -> aggregate(zip_with(xi, c, (x, cc) -> "
-        f"(x / {float(scale)!r}D - cc) * (x / {float(scale)!r}D - cc)), "
+        f"(x / {sl} - cc) * (x / {sl} - cc)), "
         f"CAST(0.0 AS DOUBLE), (acc, x) -> acc + x))"
     )
+    return json_literal_sql([int(c) for c in ids], "array<int>"), d2s
+
+
+def _kdet_assign_expr(centroids, scale: float = KDET_SCALE) -> Column:
+    """argmin_c Σ_d (x_d/SCALE − c_d)², ties → smaller cluster id
+    (centroid ids listed ascending, array_position takes the first
+    min)."""
+    ids_arr, d2s = _kdet_d2s(centroids, scale)
     return F.expr(
         f"CAST({ids_arr}[array_position({d2s}, array_min({d2s})) - 1] AS INT)"
     )
+
+
+# count + per-dim Σx — exact BIGINT sums, one wide row per cluster, as
+# ONE parsed struct expression (one py4j call instead of ~1+d Column
+# builds; no row explosion, unlike the oracle's posexplode shape —
+# integer sums are identical either way)
+_XI_SUMS = ", ".join(f"sum(xi[{i}]) as s{i}" for i in range(KDET_DIMS))
+_LLOYD_STRUCT = f"struct(count(*) as n, {_XI_SUMS}) as m"
+
+
+def _lloyd_rounds(pts: DataFrame, assign: Column, rounds: int, scale: float):
+    """``rounds`` distributed Lloyd updates starting from ``assign``,
+    shared by ``kmeans_lloyd_det`` and the det-BFR init: per-cluster
+    exact integer sums (one map-side-combined aggregation, K rows to
+    the driver) → centroids s/n/scale in the oracle's op order →
+    a fresh argmin expression. Clusters that empty out drop from the
+    candidate set. Returns (assignment expr, centroid dict)."""
+    cents: dict = {}
+    for _ in range(rounds):
+        rows = (
+            pts.withColumn("cluster", assign)
+            .groupBy("cluster")
+            .agg(F.expr(_LLOYD_STRUCT))
+            .collect()
+        )
+        m = np.array([list(r["m"]) for r in rows], dtype=np.int64)
+        cents = dict(zip((r["cluster"] for r in rows), m[:, 1:] / m[:, :1] / scale))
+        assign = _kdet_assign_expr(cents, scale)
+    return assign, cents
 
 
 def kmeans_lloyd_det(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -829,32 +847,13 @@ def kmeans_lloyd_det(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kdet_iterate(spark: SparkSession, sf_dir: str):
-    """The shared KDET Lloyd loop: returns (persisted pts, final
-    assignment expr, the centroid dict that produced it). Callers
-    unpersist pts after materializing."""
+    """The KDET Lloyd loop: returns (persisted pts, final assignment
+    expr, the centroid dict that produced it). Callers unpersist pts
+    after materializing."""
     pts = _kdet_points(spark, sf_dir).persist()
-    assign = (F.col("vec_id") % KDET_K).cast("int")
-    cents: dict[int, list[float]] = {}
-    for _ in range(KDET_ITERS):
-        cur = pts.withColumn("cluster", assign)
-        # wide 64-column partial aggregation — one map-side-combined
-        # pass with NO row explosion (the posexplode formulation the
-        # oracle uses would shuffle 64× the rows; integer sums are
-        # identical either way)
-        stats = (
-            cur.groupBy("cluster")
-            .agg(
-                F.count("*").alias("n"),
-                *[F.sum(F.col("xi")[i]).alias(f"s{i}") for i in range(KDET_DIMS)],
-            )
-            .collect()
-        )
-        cents = {}
-        for r in stats:
-            cents[r["cluster"]] = [
-                r[f"s{i}"] / r["n"] / KDET_SCALE for i in range(KDET_DIMS)
-            ]
-        assign = _kdet_assign_expr(cents)
+    assign, cents = _lloyd_rounds(
+        pts, (F.col("vec_id") % KDET_K).cast("int"), KDET_ITERS, KDET_SCALE
+    )
     return pts, assign, cents
 
 
@@ -874,24 +873,9 @@ def kmeans_inertia_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one extra map-side-combined aggregation over the KDET
     loop — no new shuffle shape."""
     pts, assign, cents = _kdet_iterate(spark, sf_dir)
-    ids = sorted(cents)
-    # one array literal per centroid (see _kdet_assign_expr)
-    carr = F.array(*[F.lit([float(v) for v in cents[c]]) for c in ids])
-    d2s = F.transform(
-        carr,
-        lambda c: F.aggregate(
-            F.zip_with(
-                "xi",
-                c,
-                lambda x, cc: (x / F.lit(KDET_SCALE) - cc) * (x / F.lit(KDET_SCALE) - cc),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-    )
     # distance to the OWN centroid == the argmin distance (assignment
     # is argmin over the same candidate expression)
-    d2_own = F.array_min(d2s)
+    d2_own = F.expr(f"array_min({_kdet_d2s(cents)[1]})")
     result = (
         pts.select(assign.alias("cluster"), d2_own.alias("d2"))
         .groupBy("cluster")
@@ -924,9 +908,6 @@ SELECT a.cluster, count(*) AS n_points,
 FROM a{KDET_ITERS} a JOIN c{KDET_ITERS} k USING (cluster)
 GROUP BY a.cluster ORDER BY a.cluster"""
     )
-
-
-
 
 
 def _kdet_oracle_sql() -> str:
@@ -1015,84 +996,84 @@ BDET_EPS = 1e-12    # variance floor (singleton clusters)
 
 def _bdet_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    xi = F.transform(
-        "embedding", lambda x: F.round(x.cast("double") * BDET_SCALE).cast("long")
-    )
     return emb.select(
-        "vec_id", xi.alias("xi"), (F.col("vec_id") % BDET_CHUNKS).cast("int").alias("chunk")
+        "vec_id",
+        _micro_units(BDET_SCALE).alias("xi"),
+        (F.col("vec_id") % BDET_CHUNKS).cast("int").alias("chunk"),
     )
 
 
-# count + per-dim Σx and Σx² — exact BIGINT moments, map-side
-# combined (one wide row per cluster) — as ONE parsed struct
-# expression: one py4j call instead of ~3·(1+2d) Column builds
+# _LLOYD_STRUCT plus per-dim Σx²: the exact BIGINT moments N/Σx/Σx²
 _BDET_MOM_STRUCT = (
-    "struct(count(*) as n, "
-    + ", ".join(f"sum(xi[{i}]) as s{i}" for i in range(KDET_DIMS))
-    + ", "
+    f"struct(count(*) as n, {_XI_SUMS}, "
     + ", ".join(f"sum(xi[{i}] * xi[{i}]) as q{i}" for i in range(KDET_DIMS))
     + ") as m"
 )
 
 
-def _bdet_fold(mom: dict[int, tuple[int, list[int], list[int]]], grouped: DataFrame) -> None:
-    """Fold collected per-cluster ``_BDET_MOM_STRUCT`` rows into the
-    exact integer moments ``mom`` (cluster → (n, Σx, Σx²))."""
-    for row in grouped.collect():
-        c = row["cluster"]
-        r = row["m"]
-        n0, s0, q0 = mom.get(c, (0, [0] * KDET_DIMS, [0] * KDET_DIMS))
-        mom[c] = (
-            n0 + r["n"],
-            [s0[i] + r[f"s{i}"] for i in range(KDET_DIMS)],
-            [q0[i] + r[f"q{i}"] for i in range(KDET_DIMS)],
+def _bdet_moments(k: int = BDET_K) -> Summaries:
+    """``k`` empty sets of exact int64 moments N/Σx/Σx²."""
+    return Summaries.empty(KDET_DIMS, k, np.int64)
+
+
+def _bdet_fold(mom: Summaries, assigned: DataFrame) -> dict[int, int]:
+    """Fold an assignment frame (vec_id, xi, cluster) into the exact
+    integer moments ``mom`` through ONE map-side-combined
+    ``_BDET_MOM_STRUCT`` aggregation (≤ K+1 rows to the driver).
+    Returns every cluster's row count, the retained −1 (not folded)
+    included — the round's stats, at no extra job."""
+    rows = assigned.groupBy("cluster").agg(F.expr(_BDET_MOM_STRUCT)).collect()
+    live = [r for r in rows if r["cluster"] >= 0]
+    if live:
+        m = np.array([list(r["m"]) for r in live], dtype=np.int64)
+        D = KDET_DIMS
+        mom.add_partials(
+            np.array([r["cluster"] for r in live]), m[:, 0], m[:, 1 : 1 + D], m[:, 1 + D :]
         )
+    return {r["cluster"]: r["m"]["n"] for r in rows}
 
 
-_BDET_LLOYD_STRUCT = (
-    "struct(count(*) as n, "
-    + ", ".join(f"sum(xi[{i}]) as s{i}" for i in range(KDET_DIMS))
-    + ") as m"
-)
+def _bdet_params(mom: Summaries) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(ids, μ, σ²) of the non-empty sets of exact integer moments, in
+    the oracle's op order: s/n/S, then max(q/n/S/S − μ·μ, ε). Every
+    integer is < 2^53 (``BDET_SCALE``), so the int→double conversions
+    are exact and each element is the same correctly-rounded IEEE754
+    value the oracle's SQL DOUBLEs compute. Serves DS and CS sets (a
+    Lloyd centroid is the μ of its cluster's moments)."""
+    ids = np.flatnonzero(mom.counts)
+    n = mom.counts[ids, None]
+    mu = mom.sums[ids] / n / BDET_SCALE
+    sg = np.maximum(mom.sqsums[ids] / n / BDET_SCALE / BDET_SCALE - mu * mu, BDET_EPS)
+    return ids, mu, sg
 
 
-def _bdet_params(mom: dict[int, tuple[int, list[int], list[int]]]):
-    """(cluster, μ, σ²) triples from the exact integer moments, in
-    the oracle's op order (s/n/S; q/n/S/S − μ·μ floored at ε) —
-    Python floats and SQL DOUBLEs are both correctly-rounded IEEE754,
-    so these values match the oracle's computed columns bit-for-bit.
-    Shared by the literal gate expression and the driver-side regate
-    scoring."""
-    S = BDET_SCALE
-    params = []
-    for c in sorted(mom):
-        n, s, q = mom[c]
-        mu = [s[i] / n / S for i in range(KDET_DIMS)]
-        sg = [max(q[i] / n / S / S - mu[i] * mu[i], BDET_EPS) for i in range(KDET_DIMS)]
-        params.append((c, mu, sg))
-    return params
+def _bdet_d2(P: np.ndarray, C: np.ndarray, sg: np.ndarray | None = None) -> np.ndarray:
+    """(points × sets) squared distances Σ_d (P_d − C_d)² [/ σ²_d] as a
+    LEFT FOLD over dims from 0.0 — the exact op order of the oracle's
+    ``list_sum(list_transform(…))`` and Spark's ``aggregate`` folds, so
+    these doubles equal the engines' bit for bit. Vectorized over
+    points × sets; ``argmin(axis=1)`` on the result sends ties to the
+    smaller set index. The one driver-side scorer of the det family:
+    seeds, Lloyd, CS merge edges, the regate and the final folds."""
+    acc = np.zeros((len(P), len(C)))
+    for i in range(P.shape[1]):
+        d = P[:, i, None] - C[None, :, i]
+        acc += d * d if sg is None else d * d / sg[None, :, i]
+    return acc
 
 
-def _bdet_gate_parts(mom: dict[int, tuple[int, list[int], list[int]]]):
+def _bdet_gate_parts(mom: Summaries) -> tuple[Column, Column]:
     """Mahalanobis assignment over DS-moment literals: returns
-    ``(best_cluster_expr, best_dist_expr)`` so callers can apply
-    either the α-threshold gate (``bfr_lloyd_det``) or the capped
-    retain (``bfr_lloyd_cs``).
-
-    μ and σ² are computed ON THE DRIVER from the exact integer
-    moments with the same op order the oracle uses in SQL
-    (s/n/S, q/n/S/S − μ·μ, greatest(·, ε)) — Python floats and SQL
-    DOUBLEs are both correctly-rounded IEEE754, so the literals match
-    the oracle's computed columns bit-for-bit."""
-    params = _bdet_params(mom)
+    ``(best_cluster_expr, best_dist_expr)`` — μ and σ² from
+    ``_bdet_params``, so the literals match the oracle's computed
+    columns bit-for-bit."""
+    ids, mu, sg = _bdet_params(mom)
     # two array<array<double>> literal matrices as single-node
-    # from_json literals (see _sql_json_lit) — identical VALUES to
-    # the array(...) spelling at a fraction of the per-chunk plan
-    # cost; the inner fold walks dims ascending via get(·, i), the
-    # same left-to-right order as the oracle's list_sum.
-    mus = _sql_djson([mu for _, mu, _ in params])
-    sgs = _sql_djson([sg for _, _, sg in params])
-    ids_arr = _sql_json_lit([int(c) for c, _, _ in params], "array<int>")
+    # from_json literals (see json_literal_sql); the inner fold walks
+    # dims ascending via get(·, i), the same left-to-right order as
+    # the oracle's list_sum.
+    mus, sgs = _sql_djson(mu), _sql_djson(sg)
+    ids_arr = json_literal_sql([int(c) for c in ids], "array<int>")
     sl = f"{float(BDET_SCALE)!r}D"
     d2s = (
         f"zip_with({mus}, {sgs}, (mu, sg) -> aggregate(sequence(0, {KDET_DIMS - 1}), "
@@ -1104,6 +1085,12 @@ def _bdet_gate_parts(mom: dict[int, tuple[int, list[int], list[int]]]):
         f"CAST({ids_arr}[array_position({d2s}, array_min({d2s})) - 1] AS INT)"
     )
     return bc, best
+
+
+def _bdet_alpha_label(bc: Column, best: Column) -> Column:
+    """The α-gated label (ref ``assign_to_ss``, bfr.py:363-374): the
+    nearest DS id iff its Mahalanobis d² ≤ α²·d, else −1 (retained)."""
+    return F.when(best <= F.lit(BDET_THRESH), bc).otherwise(F.lit(-1))
 
 
 # CS-tier face parameters (``bfr_lloyd_cs``). The driver corpus never
@@ -1121,17 +1108,28 @@ BDET_CS_ITERS = 2    # Lloyd rounds of the pool re-cluster
 # center-to-center Mahalanobis < 3·√d ⇔ squared distance < 9·d.
 BDET_CS_MERGE_T2 = 9.0 * KDET_DIMS
 
+# int_rs_to_ds parity (ref bfr.py:322-334, invoked every non-final
+# round at :451): retained points are RE-gated against the UPDATED
+# DS statistics with the reference's looser α=4 and absorbed if they
+# now fit. The det face bounds the absorption at the closest
+# BDET_REGATE_TAKE pool members per round (ties → smaller vec_id) so
+# the pool stays within its cap discipline and the selection is
+# rank-deterministic in both engines.
+BDET_REGATE_THRESH = 16.0 * KDET_DIMS  # α²·d with α=4 (ref :323)
+BDET_REGATE_TAKE = BDET_CS_RETAIN // 2
 
-# Session cache of the deterministic epoch, (frames, mom) per retain
-# mode: bfr_lloyd_det / bfr_lloyd_stats share the 'gate' epoch;
-# bfr_lloyd_cs / bfr_lloyd_cs_stats share the 'cap' epoch — the gate
-# runs them back-to-back and the K·d-state chunk loop must not run
-# twice. Doctrine in functions/cache.py.
+
+# Session cache of the deterministic epoch, one per retain rule:
+# bfr_lloyd_det / _stats / _predict share the 'gate' epoch; bfr_lloyd_cs
+# / _cs_stats / _final / bfr_nmi_eval share the 'cap' epoch;
+# bfr_lloyd_regate rides the 'regate' epoch — the gate runs them
+# back-to-back and the K·d-state chunk loop must not run twice.
+# Doctrine in functions/cache.py.
 _BDET_CACHE_MAX = 4
 _BDET_CACHE = SessionCache(_BDET_CACHE_MAX)
 
 
-def _bdet_init_assign(chunk0: DataFrame):
+def _bdet_init_assign(chunk0: DataFrame) -> Column:
     """Chunk-0 initialization, shared by the batch epoch and the
     streaming replay (``streaming/events_stream.stream_bfr_rounds``):
     farthest-point seeding (ref HCluster init, bfr.py:18-40 — first
@@ -1161,46 +1159,46 @@ def _bdet_init_assign(chunk0: DataFrame):
             .head()
         )
         seeds.append(list(nxt["xi"]))
-
-    cents = {j: [int(v) / S for v in sx] for j, sx in enumerate(seeds)}
-    a0 = _kdet_assign_expr(cents, scale=S)
-    for _ in range(BDET_INIT_ITERS - 1):
-        srows = (
-            chunk0.withColumn("cluster", a0)
-            .groupBy("cluster")
-            .agg(F.expr(_BDET_LLOYD_STRUCT))
-            .collect()
-        )
-        cents = {
-            r["cluster"]: [r["m"][f"s{i}"] / r["m"]["n"] / S for i in range(KDET_DIMS)]
-            for r in srows
-        }
-        a0 = _kdet_assign_expr(cents, scale=S)
-    return a0
+    a0 = _kdet_assign_expr(dict(enumerate(np.array(seeds, dtype=np.int64) / S)), scale=S)
+    return _lloyd_rounds(chunk0, a0, BDET_INIT_ITERS - 1, S)[0]
 
 
-def _bdet_epoch(
-    spark: SparkSession, sf_dir: str, retain: str = "gate"
-) -> tuple[list[DataFrame], dict]:
+@dataclass
+class _BdetEpoch:
+    """One deterministic chunked-BFR epoch; see ``_bdet_epoch``."""
+
+    frames: list[DataFrame]  # chunk t → (vec_id, xi, cluster), −1 = retained
+    mom: Summaries  # final DS moments, int64
+    rounds: list[dict[int, int]]  # per round: row count by cluster, −1 included
+    pool_ids: np.ndarray  # cap/regate: still retained at the end, vec_id ascending
+    pool_x: np.ndarray  # their int64 coordinates
+    regated: list[tuple[int, int, int]]  # regate: (vec_id, cluster, round absorbed)
+
+
+def _bdet_epoch(spark: SparkSession, sf_dir: str, retain: str = "gate") -> _BdetEpoch:
     """One deterministic chunked-BFR epoch (ref Runner.run chunk loop,
-    /root/reference/code/bfr.py:191-468). Returns ``(frames, mom)``:
-    ``frames[t]`` is the chunk-t assignment frame (vec_id, xi,
-    cluster) with cluster ∈ {0..K−1, −1=retained}, each an EAGER
-    localCheckpoint so downstream faces (membership, stats, CS pass)
-    never re-evaluate the gate expressions; ``mom`` is the final DS
-    integer-moment dict.
+    bfr.py:191-468) — the ONE chunk loop every
+    det-BFR face is a tail of. ``frames[t]`` is the chunk-t assignment
+    frame with cluster ∈ {0..K−1, −1=retained}, checkpointed so
+    downstream faces never re-evaluate the gate expressions; ``mom``
+    the final DS integer moments; ``rounds`` each round's per-cluster
+    counts (recorded by the fold, no extra job).
 
-    ``retain='gate'``: α-threshold Mahalanobis retain (bfr.py:363).
-    ``retain='cap'``: top-``BDET_CS_RETAIN``-by-distance retain per
-    chunk (deterministic tie-break by vec_id) — the bounded-RS-pool
-    variant the CS faces ride.
+    ``retain`` picks the rule for chunks 1.. :
+    - 'gate': α-threshold Mahalanobis retain (bfr.py:363);
+    - 'cap': the ``BDET_CS_RETAIN`` largest distances per chunk
+      (ties → smaller vec_id) are retained — the bounded-RS-pool
+      variant the CS faces ride; the top-R query collects them WITH
+      their coordinates, and that collection is the pool;
+    - 'regate': 'cap' plus, after each non-final chunk's fold, the
+      ref ``int_rs_to_ds`` step (``_bdet_regate``).
 
     Scale: per chunk, one checkpoint pass (assignment is a JVM
     literal-fold projection in whole-stage codegen) + one
-    map-side-combined wide aggregation whose result is K rows ×
+    map-side-combined wide aggregation whose result is ≤ K+1 rows ×
     (1+2d) integer columns — the only recurring driver
     materialization, O(k·d) exactly like the production ``bfr_fit``
-    broadcast state. The 'cap' mode adds a TakeOrdered(R) per chunk
+    broadcast state. 'cap'/'regate' add a TakeOrdered(R) per chunk
     (O(R) driver rows). No n-sized collect, no RNG, no Python
     workers."""
     return _BDET_CACHE.get_or_build(
@@ -1211,43 +1209,39 @@ def _bdet_epoch(
     )
 
 
-def _bdet_epoch_build(spark: SparkSession, sf_dir: str, retain: str):
+def _bdet_epoch_build(spark: SparkSession, sf_dir: str, retain: str) -> _BdetEpoch:
     pts = _bdet_points(spark, sf_dir).persist()
-    chunk0 = pts.where(F.col("chunk") == 0)
-    a0 = _bdet_init_assign(chunk0)
-
-    mom: dict[int, tuple[int, list[int], list[int]]] = {}
-
-    frames = [
-        chunk0.select("vec_id", "xi", a0.alias("cluster")).localCheckpoint(eager=True)
-    ]
-    _bdet_fold(mom, frames[0].groupBy("cluster").agg(F.expr(_BDET_MOM_STRUCT)))
-    for t in range(1, BDET_CHUNKS):
-        bc, best = _bdet_gate_parts(mom)
+    ep = _BdetEpoch(
+        [], _bdet_moments(), [], np.zeros(0, np.int64), np.zeros((0, KDET_DIMS), np.int64), []
+    )
+    for t in range(BDET_CHUNKS):
         ch = pts.where(F.col("chunk") == t)
-        if retain == "gate":
-            gate = F.when(best <= F.lit(BDET_THRESH), bc).otherwise(
-                F.lit(-1).cast("int")
+        if t == 0 or retain == "gate":
+            label = (
+                _bdet_init_assign(ch) if t == 0 else _bdet_alpha_label(*_bdet_gate_parts(ep.mom))
             )
-            asg = ch.select("vec_id", "xi", gate.alias("cluster")).localCheckpoint(
-                eager=True
-            )
+            fr = ch.select("vec_id", "xi", label.alias("cluster")).localCheckpoint(eager=True)
         else:
             # capped retain: checkpoint (vec_id, xi, nearest, maha)
             # once, take the R largest distances (ties → smaller
-            # vec_id — identical to the oracle's row_number order),
-            # relabel those −1. O(R) driver rows.
+            # vec_id — identical to the oracle's row_number order)
+            # into the pool, relabel those −1. O(R) driver rows.
+            bc, best = _bdet_gate_parts(ep.mom)
             g = ch.select(
                 "vec_id", "xi", bc.alias("bcluster"), best.alias("maha")
             ).localCheckpoint(eager=True)
-            rids = [
-                r["vec_id"]
-                for r in g.orderBy(F.desc("maha"), F.asc("vec_id"))
-                .select("vec_id")
+            ret = (
+                g.orderBy(F.desc("maha"), F.asc("vec_id"))
+                .select("vec_id", "xi")
                 .limit(BDET_CS_RETAIN)
                 .collect()
-            ]
-            asg = g.select(
+            )
+            rids = [r["vec_id"] for r in ret]
+            ep.pool_ids = np.concatenate([ep.pool_ids, np.array(rids, dtype=np.int64)])
+            ep.pool_x = np.concatenate(
+                [ep.pool_x, np.array([r["xi"] for r in ret], dtype=np.int64).reshape(-1, KDET_DIMS)]
+            )
+            fr = g.select(
                 "vec_id",
                 "xi",
                 F.when(F.col("vec_id").isin(rids), F.lit(-1))
@@ -1255,15 +1249,62 @@ def _bdet_epoch_build(spark: SparkSession, sf_dir: str, retain: str):
                 .cast("int")
                 .alias("cluster"),
             )
-        frames.append(asg)
-        _bdet_fold(
-            mom,
-            asg.where(F.col("cluster") >= 0)
-            .groupBy("cluster")
-            .agg(F.expr(_BDET_MOM_STRUCT))
-        )
+        ep.frames.append(fr)
+        ep.rounds.append(_bdet_fold(ep.mom, fr))
+        if retain == "regate" and t < BDET_CHUNKS - 1 and len(ep.pool_ids):
+            _bdet_regate(ep, t + 1)
+    order = np.argsort(ep.pool_ids)
+    ep.pool_ids, ep.pool_x = ep.pool_ids[order], ep.pool_x[order]
     pts.unpersist()
-    return frames, mom
+    return ep
+
+
+def _bdet_regate(ep: _BdetEpoch, round_id: int) -> None:
+    """Ref ``int_rs_to_ds`` on the pool: score it against the UPDATED
+    DS moments, absorb up to ``BDET_REGATE_TAKE`` members under
+    ``BDET_REGATE_THRESH`` — ranked by (distance, vec_id), the oracle's
+    row_number order exactly (NOT by cluster; the cluster is just the
+    argmin attached to the point) — and fold their exact moments in
+    before the next chunk."""
+    ids, mu, sg = _bdet_params(ep.mom)
+    d2 = _bdet_d2(ep.pool_x / BDET_SCALE, mu, sg)
+    j = d2.argmin(axis=1)
+    d = d2[np.arange(len(j)), j]
+    order = np.lexsort((ep.pool_ids, d))
+    take = order[d[order] <= BDET_REGATE_THRESH][:BDET_REGATE_TAKE]
+    x, c = ep.pool_x[take], ids[j[take]]
+    ep.mom.add_partials(c, np.ones(len(take), np.int64), x, x * x)
+    ep.regated += [(int(v), int(k), round_id) for v, k in zip(ep.pool_ids[take], c)]
+    keep = np.setdiff1d(np.arange(len(ep.pool_ids)), take)
+    ep.pool_ids, ep.pool_x = ep.pool_ids[keep], ep.pool_x[keep]
+
+
+def _rows_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A bounded driver-side row list as a DataFrame over ONE
+    constant-folded literal (``json_literal_sql``), JVM-only: a
+    plain-list ``createDataFrame`` is a Python RDD whose every
+    partition starts a Python worker (3-17 s for 36 rows on a 4-core
+    host)."""
+    cols = [col.split() for col in schema.split(",")]
+    struct = ",".join(f"{name}:{typ}" for name, typ in cols)
+    value = [dict(zip((name for name, _ in cols), r)) for r in rows]
+    return spark.range(1).select(
+        F.inline(F.expr(json_literal_sql(value, f"array<struct<{struct}>>")))
+    )
+
+
+def _bdet_tail(
+    spark: SparkSession, ep: _BdetEpoch, tag, rows: list[tuple], schema: str
+) -> DataFrame:
+    """A face's output: every frame's DS rows (cluster ≥ 0) with the
+    ``tag(t)`` columns, plus the driver-side pool ``rows`` — ordered by
+    vec_id."""
+    ds = [
+        fr.where(F.col("cluster") >= 0).select("vec_id", "cluster", *tag(t))
+        for t, fr in enumerate(ep.frames)
+    ]
+    pool = _rows_frame(spark, sorted(rows), schema)
+    return reduce(DataFrame.unionByName, ds + [pool]).orderBy("vec_id")
 
 
 def bfr_lloyd_det(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1271,11 +1312,32 @@ def bfr_lloyd_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vec_id, cluster) with cluster ∈ {0..K−1} for DS members and −1
     for retained (gate-rejected) points. See ``_bdet_epoch`` for the
     shared chunk loop and its scale contract."""
-    frames, _ = _bdet_epoch(spark, sf_dir, retain="gate")
-    out = frames[0].select("vec_id", "cluster")
-    for fr in frames[1:]:
-        out = out.unionByName(fr.select("vec_id", "cluster"))
-    return out.orderBy("vec_id")
+    ep = _bdet_epoch(spark, sf_dir, retain="gate")
+    frames = [fr.select("vec_id", "cluster") for fr in ep.frames]
+    return reduce(DataFrame.unionByName, frames).orderBy("vec_id")
+
+
+def _bdet_round_rows(rounds: list[dict[int, int]]):
+    """Each round's (round_id, per-cluster counts, running totals
+    after it), −1 = retained — the one accounting tail of the batch
+    and streaming stats faces."""
+    cum: Counter = Counter()
+    for t, counts in enumerate(rounds, 1):
+        cum.update(counts)
+        yield t, counts, dict(cum)
+
+
+def _bdet_stats_frame(spark: SparkSession, rounds: list[dict[int, int]]) -> DataFrame:
+    """(round_id, cluster, n_round, n_cum), one row per (round,
+    cluster) with cluster −1 = the retained set."""
+    rows = [
+        (t, int(c), int(counts[c]), int(cum[c]))
+        for t, counts, cum in _bdet_round_rows(rounds)
+        for c in sorted(counts)
+    ]
+    return _rows_frame(
+        spark, rows, "round_id int, cluster int, n_round long, n_cum long"
+    ).orderBy("round_id", "cluster")
 
 
 def bfr_lloyd_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1290,42 +1352,12 @@ def bfr_lloyd_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``nof_point_discard`` / ``nof_point_retained`` are the cluster-
     summed faces of these columns).
 
-    Scale: one count-only aggregation per checkpointed chunk frame +
-    a window over ≤ rounds·(K+1) rows — strictly cheaper than the
-    epoch itself."""
-    frames, _ = _bdet_epoch(spark, sf_dir, retain="gate")
-    per = None
-    for t, fr in enumerate(frames):
-        cnt = (
-            fr.groupBy("cluster")
-            .agg(F.count("*").alias("n_round"))
-            .select(F.lit(t + 1).cast("int").alias("round_id"), "cluster", "n_round")
-        )
-        per = cnt if per is None else per.unionByName(cnt)
-    w = W.partitionBy("cluster").orderBy("round_id").rowsBetween(
-        W.unboundedPreceding, W.currentRow
-    )
-    return per.select(
-        "round_id",
-        "cluster",
-        F.col("n_round").cast("long").alias("n_round"),
-        F.sum("n_round").over(w).cast("long").alias("n_cum"),
-    ).orderBy("round_id", "cluster")
+    Scale: the counts are recorded by the epoch's own folds — no job
+    beyond the epoch; ≤ rounds·(K+1) driver rows."""
+    return _bdet_stats_frame(spark, _bdet_epoch(spark, sf_dir, retain="gate").rounds)
 
 
-def _bdet_eu2(x: list[int], y: list[int], S: float) -> float:
-    """Left-fold Euclidean d² over micro-unit ints — the exact op
-    order of the SQL ``list_sum(list_transform(...))`` and Spark
-    ``F.aggregate`` folds (both strict left-to-right), so driver
-    floats match engine doubles bit-for-bit."""
-    acc = 0.0
-    for a, b in zip(x, y):
-        d = a / S - b / S
-        acc += d * d
-    return acc
-
-
-def _bdet_cs_pass(pool: list[tuple[int, list[int]]]):
+def _bdet_cs_pass(X: np.ndarray) -> tuple[np.ndarray, int, int]:
     """The compression (CS) pass over the bounded retained pool —
     driver-side parity of ref ``cluster_rs`` (/root/reference/code/
     bfr.py:259-288: cluster the RS, singletons stay retained, the
@@ -1340,129 +1372,55 @@ def _bdet_cs_pass(pool: list[tuple[int, list[int]]]):
     component min — order-free, so it is SQL-replayable).
 
     Every float op is a left fold in the oracle's op order
-    (``_bdet_eu2``), every moment an exact Python int — the unrolled
-    DuckDB CTEs reproduce this bit-for-bit. The pool is CONSTANT
-    size ((chunks−1)·cap) by construction, so this driver computation
-    is a counted small gate, not an n-sized collect.
+    (``_bdet_d2``), every moment an exact int64 — the unrolled DuckDB
+    CTEs reproduce this bit-for-bit. The pool (int coordinates ``X``,
+    rows in vec_id order) is CONSTANT size ((chunks−1)·cap) by
+    construction, so this driver computation is a counted small gate,
+    not an n-sized collect.
 
-    Returns ``(labels, n_cs_clusters, n_cs_points, n_rs)`` where
-    ``labels[vec_id]`` is −1 (RS singleton) or −(2+root) (CS member,
-    root = component-min stage-1 cluster id)."""
-    S = BDET_SCALE
-    if not pool:
-        return {}, 0, 0, 0
-    pool = sorted(pool)
+    Returns ``(labels, n_cs_clusters, n_cs_points)``: ``labels[i]`` is
+    −1 (RS singleton) or −(2+root) (CS member, root = component-min
+    stage-1 cluster id)."""
+    if not len(X):
+        return np.zeros(0, np.int64), 0, 0
+    P = X / BDET_SCALE
     # farthest-point seeds: min vec_id first, then argmax of
     # min-distance, ties → smaller vec_id
-    seeds = [pool[0][1]]
+    seeds = [0]
     for _ in range(BDET_CS_K - 1):
-        best_key, best_x = None, None
-        for vid, x in pool:
-            dmin = min(_bdet_eu2(x, s, S) for s in seeds)
-            key = (-dmin, vid)
-            if best_key is None or key < best_key:
-                best_key, best_x = key, x
-        seeds.append(best_x)
+        seeds.append(int(_bdet_d2(P, P[seeds]).min(axis=1).argmax()))
     # BDET_CS_ITERS Lloyd rounds (assign: ties → smaller cluster id;
     # update: exact int sums, s/n/S op order; empty clusters drop)
-    cents = {j: [v / S for v in sx] for j, sx in enumerate(seeds)}
-    asg: dict[int, int] = {}
+    cids, cents = np.arange(BDET_CS_K), P[seeds]
     for it in range(BDET_CS_ITERS):
-        ids = sorted(cents)
-        for vid, x in pool:
-            dists = []
-            for c in ids:
-                mu = cents[c]
-                acc = 0.0
-                for a, m in zip(x, mu):
-                    d = a / S - m
-                    acc += d * d
-                dists.append((acc, c))
-            asg[vid] = min(dists)[1]
+        asg = cids[_bdet_d2(P, cents).argmin(axis=1)]
         if it < BDET_CS_ITERS - 1:
-            sums: dict[int, tuple[int, list[int]]] = {}
-            for vid, x in pool:
-                c = asg[vid]
-                n0, s0 = sums.get(c, (0, [0] * KDET_DIMS))
-                sums[c] = (n0 + 1, [s0[i] + x[i] for i in range(KDET_DIMS)])
-            cents = {
-                c: [s[i] / n / S for i in range(KDET_DIMS)]
-                for c, (n, s) in sums.items()
-            }
-    # singleton clusters → members return to RS (ref bfr.py:264-281)
-    counts: dict[int, int] = {}
-    for vid in asg:
-        counts[asg[vid]] = counts.get(asg[vid], 0) + 1
-    keep = {c for c, n in counts.items() if n >= 2}
-    # exact integer moments per surviving CS cluster → μ/σ² in the
-    # gate's op order
-    momcs: dict[int, tuple[int, list[int], list[int]]] = {}
-    for vid, x in pool:
-        c = asg[vid]
-        if c not in keep:
-            continue
-        n0, s0, q0 = momcs.get(c, (0, [0] * KDET_DIMS, [0] * KDET_DIMS))
-        momcs[c] = (
-            n0 + 1,
-            [s0[i] + x[i] for i in range(KDET_DIMS)],
-            [q0[i] + x[i] * x[i] for i in range(KDET_DIMS)],
-        )
-    par = {}
-    for c, (n, s, q) in momcs.items():
-        mu = [s[i] / n / S for i in range(KDET_DIMS)]
-        sg = [max(q[i] / n / S / S - mu[i] * mu[i], BDET_EPS) for i in range(KDET_DIMS)]
-        par[c] = (mu, sg)
-    # pairwise merge edges (symmetric Mahalanobis² < 9d)
-    nodes = sorted(par)
-    edges: dict[int, set[int]] = {c: set() for c in nodes}
-    for i, a in enumerate(nodes):
-        for b in nodes[i + 1 :]:
-            mua, sga = par[a]
-            mub, sgb = par[b]
-            dab = 0.0
-            dba = 0.0
-            for d in range(KDET_DIMS):
-                x = mua[d] - mub[d]
-                dab += x * x / sgb[d]
-                y = mub[d] - mua[d]
-                dba += y * y / sga[d]
-            if min(dab, dba) < BDET_CS_MERGE_T2:
-                edges[a].add(b)
-                edges[b].add(a)
+            cids, cents, _ = _bdet_params(Summaries.from_points(X, asg, BDET_CS_K))
+    # singleton clusters → members return to RS (ref bfr.py:264-281);
+    # exact CS moments → μ/σ² → pairwise merge edges (symmetric
+    # Mahalanobis² < 9d)
+    member = np.bincount(asg, minlength=BDET_CS_K)[asg] >= 2
+    nodes, mu, sg = _bdet_params(Summaries.from_points(X[member], asg[member], BDET_CS_K))
+    d2 = _bdet_d2(mu, mu, sg)
+    edge = np.minimum(d2, d2.T) < BDET_CS_MERGE_T2
     # synchronous min-label propagation, BDET_CS_K−1 rounds — the
-    # exact unroll the oracle runs (≥ graph diameter, so converged)
-    lbl = {c: c for c in nodes}
+    # exact unroll the oracle runs (≥ graph diameter, so converged);
+    # every set is its own neighbour (d² = 0)
+    lbl = nodes
     for _ in range(BDET_CS_K - 1):
-        lbl = {
-            c: min([lbl[c]] + [lbl[u] for u in edges[c]]) for c in nodes
-        }
-    labels: dict[int, int] = {}
-    n_cs_points = 0
-    for vid, _x in pool:
-        c = asg[vid]
-        if c in keep:
-            labels[vid] = -(2 + lbl[c])
-            n_cs_points += 1
-        else:
-            labels[vid] = -1
-    n_cs_clusters = len(set(lbl[c] for c in nodes))
-    n_rs = len(pool) - n_cs_points
-    return labels, n_cs_clusters, n_cs_points, n_rs
+        lbl = np.where(edge, lbl, BDET_CS_K).min(axis=1, initial=BDET_CS_K)
+    root = np.full(BDET_CS_K, -1)
+    root[nodes] = lbl
+    labels = np.where(member, -2 - root[asg], -1)
+    return labels, len(np.unique(lbl)), int(member.sum())
 
 
 def _bdet_cs_state(spark: SparkSession, sf_dir: str):
-    """Shared assembly for the CS faces: run the capped-retain epoch,
-    collect the bounded pool ((chunks−1)·BDET_CS_RETAIN rows — a
-    counted small gate), run the compression pass. Returns
-    (frames, mom, pool, labels, n_cs_clusters, n_cs_points, n_rs)."""
-    frames, mom = _bdet_epoch(spark, sf_dir, retain="cap")
-    pooled = None
-    for fr in frames[1:]:
-        p = fr.where(F.col("cluster") == -1).select("vec_id", "xi")
-        pooled = p if pooled is None else pooled.unionByName(p)
-    pool = [(r["vec_id"], list(r["xi"])) for r in pooled.collect()]
-    labels, ncs, ncsp, nrs = _bdet_cs_pass(pool)
-    return frames, mom, pool, labels, ncs, ncsp, nrs
+    """Shared assembly for the CS faces: the capped-retain epoch (whose
+    pool the epoch already holds) + the compression pass. Returns
+    (epoch, labels, n_cs_clusters, n_cs_points)."""
+    ep = _bdet_epoch(spark, sf_dir, retain="cap")
+    return (ep, *_bdet_cs_pass(ep.pool_x))
 
 
 def bfr_lloyd_cs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1482,21 +1440,14 @@ def bfr_lloyd_cs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the epoch is the ``_bdet_epoch`` contract; the CS pass
     operates on a pool whose size is CONSTANT by construction
     ((chunks−1)·cap), so the driver stage is bounded at any SF."""
-    frames, _mom, _pool, labels, _ncs, _ncsp, _nrs = _bdet_cs_state(spark, sf_dir)
-    ds = None
-    for fr in frames:
-        d = fr.where(F.col("cluster") >= 0).select(
-            "vec_id", "cluster", F.lit("DS").alias("tier")
-        )
-        ds = d if ds is None else ds.unionByName(d)
+    ep, labels, _ncs, _ncsp = _bdet_cs_state(spark, sf_dir)
     rows = [
-        (int(vid), int(lbl), "CS" if lbl <= -2 else "RS")
-        for vid, lbl in sorted(labels.items())
+        (int(v), int(c), "CS" if c <= -2 else "RS") for v, c in zip(ep.pool_ids, labels)
     ]
-    pool_df = spark.createDataFrame(
-        rows, "vec_id long, cluster int, tier string"
-    ) if rows else spark.createDataFrame([], "vec_id long, cluster int, tier string")
-    return ds.unionByName(pool_df).orderBy("vec_id")
+    return _bdet_tail(
+        spark, ep, lambda t: [F.lit("DS").alias("tier")], rows,
+        "vec_id long, cluster int, tier string",
+    )
 
 
 def bfr_lloyd_cs_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1512,34 +1463,25 @@ def bfr_lloyd_cs_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     once after the final chunk, so earlier rounds carry 0 CS
     clusters/points and the raw cumulative retained count.
 
-    Scale: one count aggregation per checkpointed chunk frame
-    (bounded output) + the bounded CS pass shared via the epoch
-    cache."""
-    frames, _mom, _pool, _labels, ncs, ncsp, nrs = _bdet_cs_state(spark, sf_dir)
-    per = []
-    for fr in frames:
-        r = fr.agg(
-            F.sum((F.col("cluster") >= 0).cast("long")).alias("nd"),
-            F.sum((F.col("cluster") == -1).cast("long")).alias("nr"),
-        ).head()
-        per.append((int(r["nd"] or 0), int(r["nr"] or 0)))
+    Scale: the epoch's recorded per-round counts + the bounded CS
+    pass, shared via the epoch cache — no job of its own."""
+    ep, _labels, ncs, ncsp = _bdet_cs_state(spark, sf_dir)
+    nrs = len(ep.pool_ids) - ncsp
     rows = []
-    cum_d, cum_r = 0, 0
-    for t, (nd, nr) in enumerate(per):
-        cum_d += nd
-        cum_r += nr
-        last = t == len(per) - 1
+    for t, _counts, cum in _bdet_round_rows(ep.rounds):
+        last = t == len(ep.rounds)
         rows.append(
             (
-                t + 1,
+                t,
                 BDET_K,
-                cum_d,
+                sum(n for c, n in cum.items() if c >= 0),
                 ncs if last else 0,
                 ncsp if last else 0,
-                nrs if last else cum_r,
+                nrs if last else cum.get(-1, 0),
             )
         )
-    return spark.createDataFrame(
+    return _rows_frame(
+        spark,
         rows,
         "round_id int, nof_cluster_discard int, nof_point_discard long, "
         "nof_cluster_compression long, nof_point_compression long, "
@@ -1567,57 +1509,30 @@ def bfr_lloyd_final(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: epoch contract + bounded driver fold (pool and CS-set
     count are constant by construction; DS params are O(k·d))."""
-    frames, mom, pool, labels, _ncs, _ncsp, _nrs = _bdet_cs_state(spark, sf_dir)
-    params = _bdet_params(mom)
-    S = BDET_SCALE
-    coords = dict(pool)
-    groups: dict[int, list[int]] = {}
-    rs_vids: list[int] = []
-    for vid, lbl in labels.items():
-        if lbl <= -2:
-            groups.setdefault(-(lbl + 2), []).append(vid)
-        else:
-            rs_vids.append(vid)
-    rows: list[tuple[int, int, str]] = []
-    for root in sorted(groups):
-        vids = groups[root]
-        n = len(vids)
-        s = [0] * KDET_DIMS
-        for vid in vids:
-            x = coords[vid]
-            for i in range(KDET_DIMS):
-                s[i] += x[i]
-        gm = [s[i] / n / S for i in range(KDET_DIMS)]
-        best = None
-        for c, mu, sg in params:
-            acc = 0.0
-            for i in range(KDET_DIMS):
-                d = gm[i] - mu[i]
-                acc += d * d / sg[i]
-            if best is None or (acc, c) < best:
-                best = (acc, c)
-        for vid in vids:
-            rows.append((int(vid), int(best[1]), "cs_fold"))
-    for vid in rs_vids:
-        d, c = _bdet_maha_best(coords[vid], params)
-        if d <= BDET_REGATE_THRESH:
-            rows.append((int(vid), int(c), "rs_fold"))
-        else:
-            rows.append((int(vid), -1, "outlier"))
-    ds = None
-    for t, fr in enumerate(frames):
-        d = fr.where(F.col("cluster") >= 0).select(
-            "vec_id",
-            "cluster",
-            F.lit("init" if t == 0 else "gate").alias("via"),
-        )
-        ds = d if ds is None else ds.unionByName(d)
-    pool_df = (
-        spark.createDataFrame(sorted(rows), "vec_id long, cluster int, via string")
-        if rows
-        else spark.createDataFrame([], "vec_id long, cluster int, via string")
+    ep, labels, _ncs, _ncsp = _bdet_cs_state(spark, sf_dir)
+    ids, mu, sg = _bdet_params(ep.mom)
+    cs = labels <= -2
+    # merged CS groups: member moments summed per component root; each
+    # group's mean goes to its nearest DS set
+    roots, x = -2 - labels[cs], ep.pool_x[cs]
+    grp = _bdet_moments(BDET_CS_K)
+    grp.add_partials(roots, np.ones(len(roots), np.int64), x, x * x)
+    gids, gm, _ = _bdet_params(grp)
+    fold = np.full(BDET_CS_K, -1)
+    fold[gids] = ids[_bdet_d2(gm, mu, sg).argmin(axis=1)]
+    # RS singletons: α=4 re-gate against the same statistics
+    d2 = _bdet_d2(ep.pool_x[~cs] / BDET_SCALE, mu, sg)
+    j = d2.argmin(axis=1)
+    ok = d2[np.arange(len(j)), j] <= BDET_REGATE_THRESH
+    rows = [(int(v), int(fold[r]), "cs_fold") for v, r in zip(ep.pool_ids[cs], roots)]
+    rows += [
+        (int(v), int(ids[k]), "rs_fold") if o else (int(v), -1, "outlier")
+        for v, k, o in zip(ep.pool_ids[~cs], j, ok)
+    ]
+    return _bdet_tail(
+        spark, ep, lambda t: [F.lit("init" if t == 0 else "gate").alias("via")], rows,
+        "vec_id long, cluster int, via string",
     )
-    return ds.unionByName(pool_df).orderBy("vec_id")
 
 
 def bfr_lloyd_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1640,13 +1555,12 @@ def bfr_lloyd_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     model does. Scale: rides the session epoch cache; scoring is one
     O(k·d)-literal map-side projection in whole-stage codegen, no
     shuffle beyond the epoch itself."""
-    _frames, mom = _bdet_epoch(spark, sf_dir, retain="gate")
-    bc, best = _bdet_gate_parts(mom)
-    pts = _bdet_points(spark, sf_dir)
-    gate = F.when(best <= F.lit(BDET_THRESH), bc).otherwise(F.lit(-1)).cast("int")
-    return pts.select(
-        "vec_id", gate.alias("cluster"), best.alias("maha")
-    ).orderBy("vec_id")
+    bc, best = _bdet_gate_parts(_bdet_epoch(spark, sf_dir, retain="gate").mom)
+    return (
+        _bdet_points(spark, sf_dir)
+        .select("vec_id", _bdet_alpha_label(bc, best).alias("cluster"), best.alias("maha"))
+        .orderBy("vec_id")
+    )
 
 
 def _bdet_predict_sql() -> str:
@@ -1816,34 +1730,6 @@ FROM st, mi_, hi, hj"""
     )
 
 
-# int_rs_to_ds parity (ref bfr.py:322-334, invoked every non-final
-# round at :451): retained points are RE-gated against the UPDATED
-# DS statistics with the reference's looser α=4 and absorbed if they
-# now fit. The det face bounds the absorption at the closest
-# BDET_REGATE_TAKE pool members per round (ties → smaller vec_id) so
-# the pool stays within its cap discipline and the selection is
-# rank-deterministic in both engines.
-BDET_REGATE_THRESH = 16.0 * KDET_DIMS  # α²·d with α=4 (ref :323)
-BDET_REGATE_TAKE = BDET_CS_RETAIN // 2
-
-
-def _bdet_maha_best(x: list[int], params) -> tuple[float, int]:
-    """Driver-side nearest-DS scoring of one pool point: the exact
-    left-fold op order of the oracle's list_sum gate (see
-    ``_bdet_cs_pass`` for the doctrine). Returns (d², cluster) with
-    ties to the smaller cluster id."""
-    S = BDET_SCALE
-    best = None
-    for c, mu, sg in params:
-        acc = 0.0
-        for i in range(KDET_DIMS):
-            d = x[i] / S - mu[i]
-            acc += d * d / sg[i]
-        if best is None or (acc, c) < best:
-            best = (acc, c)
-    return best
-
-
 def bfr_lloyd_regate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The deterministic BFR epoch WITH mid-epoch RS re-gating — the
     hash-gated face of the reference's ``int_rs_to_ds``
@@ -1858,99 +1744,23 @@ def bfr_lloyd_regate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the point joined the DS (−1/cluster −1 for points still retained
     at epoch end).
 
-    Scale: the epoch is the capped-retain ``_bdet_epoch`` contract;
-    the pool is CONSTANT size by construction, so re-gating is a
-    bounded driver computation in the oracle's exact float op order
-    (``_bdet_maha_best``) — no extra Spark jobs beyond the per-chunk
-    checkpoint + fold."""
-    pts = _bdet_points(spark, sf_dir).persist()
-    chunk0 = pts.where(F.col("chunk") == 0)
-    a0 = _bdet_init_assign(chunk0)
-
-    mom: dict[int, tuple[int, list[int], list[int]]] = {}
-
-    f0 = chunk0.select("vec_id", "xi", a0.alias("cluster")).localCheckpoint(eager=True)
-    _bdet_fold(mom, f0.groupBy("cluster").agg(F.expr(_BDET_MOM_STRUCT)))
-    out = f0.select(
-        "vec_id",
-        "cluster",
-        F.lit(1).cast("int").alias("entry_round"),
-        F.lit("init").alias("via"),
+    Scale: the 'regate' ``_bdet_epoch`` contract; the pool is CONSTANT
+    size by construction, so re-gating is a bounded driver
+    computation in the oracle's exact float op order (``_bdet_d2``)
+    — no extra Spark jobs beyond the per-chunk checkpoint + fold."""
+    ep = _bdet_epoch(spark, sf_dir, retain="regate")
+    rows = [(v, c, r, "regate") for v, c, r in ep.regated]
+    rows += [(int(v), -1, -1, "retained") for v in ep.pool_ids]
+    return _bdet_tail(
+        spark,
+        ep,
+        lambda t: [
+            F.lit(t + 1).cast("int").alias("entry_round"),
+            F.lit("init" if t == 0 else "gate").alias("via"),
+        ],
+        rows,
+        "vec_id long, cluster int, entry_round int, via string",
     )
-    pool: list[tuple[int, list[int]]] = []
-    extra_rows: list[tuple[int, int, int, str]] = []
-    for t in range(1, BDET_CHUNKS):
-        bc, best = _bdet_gate_parts(mom)
-        ch = pts.where(F.col("chunk") == t)
-        g = ch.select(
-            "vec_id", "xi", bc.alias("bcluster"), best.alias("maha")
-        ).localCheckpoint(eager=True)
-        # the retained rows (top-R by distance) join the pool WITH
-        # their integer coordinates — O(cap) driver rows per chunk
-        ret = (
-            g.orderBy(F.desc("maha"), F.asc("vec_id"))
-            .select("vec_id", "xi")
-            .limit(BDET_CS_RETAIN)
-            .collect()
-        )
-        rids = [r["vec_id"] for r in ret]
-        pool.extend((r["vec_id"], list(r["xi"])) for r in ret)
-        asg = g.select(
-            "vec_id",
-            "xi",
-            F.when(F.col("vec_id").isin(rids), F.lit(-1))
-            .otherwise(F.col("bcluster"))
-            .cast("int")
-            .alias("cluster"),
-        )
-        kept = asg.where(F.col("cluster") >= 0)
-        _bdet_fold(mom, kept.groupBy("cluster").agg(F.expr(_BDET_MOM_STRUCT)))
-        out = out.unionByName(
-            kept.select(
-                "vec_id",
-                "cluster",
-                F.lit(t + 1).cast("int").alias("entry_round"),
-                F.lit("gate").alias("via"),
-            )
-        )
-        if t < BDET_CHUNKS - 1 and pool:
-            params = _bdet_params(mom)
-            # rank by (distance, vec_id) — the oracle's row_number
-            # order exactly (NOT by cluster; the cluster is just the
-            # argmin attached to the point)
-            scored = sorted(
-                ((*_bdet_maha_best(x, params), vid, x) for vid, x in pool),
-                key=lambda r: (r[0], r[2]),
-            )
-            absorbed = [
-                (d, c, vid, x)
-                for d, c, vid, x in scored
-                if d <= BDET_REGATE_THRESH
-            ][:BDET_REGATE_TAKE]
-            taken = {vid for _, _, vid, _ in absorbed}
-            for _d, c, vid, x in absorbed:
-                n0, s0, q0 = mom[c]
-                mom[c] = (
-                    n0 + 1,
-                    [s0[i] + x[i] for i in range(KDET_DIMS)],
-                    [q0[i] + x[i] * x[i] for i in range(KDET_DIMS)],
-                )
-                extra_rows.append((int(vid), int(c), t + 1, "regate"))
-            pool = [(vid, x) for vid, x in pool if vid not in taken]
-    extra_rows.extend((int(vid), -1, -1, "retained") for vid, _ in pool)
-    pool_df = (
-        spark.createDataFrame(
-            sorted(extra_rows),
-            "vec_id long, cluster int, entry_round int, via string",
-        )
-        if extra_rows
-        else spark.createDataFrame(
-            [], "vec_id long, cluster int, entry_round int, via string"
-        )
-    )
-    result = out.unionByName(pool_df).orderBy("vec_id")
-    pts.unpersist()
-    return result
 
 
 def _bdet_head() -> str:

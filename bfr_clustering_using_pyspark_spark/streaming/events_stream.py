@@ -483,7 +483,8 @@ def stream_bfr_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``foreachBatch`` — batch 0: farthest-point seeds + Lloyd init
     (the shared ``_bdet_init_assign``); later batches: the
     Mahalanobis α-gate against the accumulated exact integer moments
-    — and appends its per-cluster counts. Drained output ≡
+    — and folds through the epoch's ``_bdet_fold``, whose per-cluster
+    counts feed the epoch's stats tail. Drained output ≡
     ``bfr_lloyd_stats`` bit-for-bit (asserted in
     tests/test_streaming.py), tying the streaming DS-update face to
     the hash-gated accounting contract.
@@ -492,13 +493,14 @@ def stream_bfr_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation (O(k·d) driver state) — the ``stream_bfr_update``
     cost shape with the real gate."""
     from ..plans.ml_queries import (
-        _BDET_MOM_STRUCT,
+        BDET_SCALE,
+        _bdet_alpha_label,
+        _bdet_fold,
         _bdet_gate_parts,
         _bdet_init_assign,
-        BDET_CHUNKS,
-        BDET_THRESH,
-        KDET_DIMS,
-        BDET_SCALE,
+        _bdet_moments,
+        _bdet_stats_frame,
+        _micro_units,
     )
 
     # the chunked replay source is a pure function of
@@ -517,41 +519,16 @@ def stream_bfr_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load(os.path.join(src, "batch_*.parquet"))
     )
 
-    xi = F.transform(
-        "embedding",
-        lambda x: F.round(x.cast("double") * BDET_SCALE).cast("long"),
-    )
-    mom: dict[int, tuple[int, list[int], list[int]]] = {}
-    per_round: list[tuple[int, dict[int, int]]] = []
+    mom = _bdet_moments()
+    rounds: list[dict[int, int]] = []  # in batch order
 
     def step(bdf: DataFrame, bid: int) -> None:
-        ch = bdf.select("vec_id", xi.alias("xi"))
-        if not mom:
-            assign = _bdet_init_assign(ch)
+        ch = bdf.select("vec_id", _micro_units(BDET_SCALE).alias("xi"))
+        if rounds:
+            assign = _bdet_alpha_label(*_bdet_gate_parts(mom))
         else:
-            bc, best = _bdet_gate_parts(mom)
-            assign = F.when(best <= F.lit(BDET_THRESH), bc).otherwise(
-                F.lit(-1).cast("int")
-            )
-        grouped = (
-            ch.select("vec_id", "xi", assign.alias("cluster"))
-            .groupBy("cluster")
-            .agg(F.expr(_BDET_MOM_STRUCT))
-            .collect()
-        )
-        counts: dict[int, int] = {}
-        for row in grouped:
-            c, r = row["cluster"], row["m"]
-            counts[c] = r["n"]
-            if c < 0:
-                continue
-            n0, s0, q0 = mom.get(c, (0, [0] * KDET_DIMS, [0] * KDET_DIMS))
-            mom[c] = (
-                n0 + r["n"],
-                [s0[i] + r[f"s{i}"] for i in range(KDET_DIMS)],
-                [q0[i] + r[f"q{i}"] for i in range(KDET_DIMS)],
-            )
-        per_round.append((bid, counts))
+            assign = _bdet_init_assign(ch)
+        rounds.append(_bdet_fold(mom, ch.select("vec_id", "xi", assign.alias("cluster"))))
 
     with tempfile.TemporaryDirectory(prefix="ckpt_", dir=scratch_dir()) as ckpt:
         q = (
@@ -561,16 +538,7 @@ def stream_bfr_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-
-    rows = []
-    cum: dict[int, int] = {}
-    for bid, counts in sorted(per_round):
-        for c in sorted(counts):
-            cum[c] = cum.get(c, 0) + counts[c]
-            rows.append((bid + 1, int(c), int(counts[c]), int(cum[c])))
-    return spark.createDataFrame(
-        rows, "round_id int, cluster int, n_round long, n_cum long"
-    ).orderBy("round_id", "cluster")
+    return _bdet_stats_frame(spark, rounds)
 
 
 def _staged_bdet_chunks(spark: SparkSession, sf_dir: str) -> str:

@@ -29,7 +29,7 @@ WHITELIST = {
     "ml/bfr.py": (4, "1-row id-range agg; 1-row dim probe; seeded init sample; O(k*d) per-chunk suffstats feedback"),
     "ml/kmeans.py": (3, "seeded init sample; O(k*d) centroid frame per round; O(num_batches) inertia partial-sum fold (get_inertia)"),
     "ml/metrics.py": (1, "O(k^2) contingency table for NMI"),
-    "plans/ml_queries.py": (9, "O(k*d) centroids per Lloyd round (kmeans_lloyd_det); _bdet_epoch: K one-row farthest-point TakeOrdereds (2 head sites), O(k*d) init-Lloyd centroid collect, O(k*d) per-chunk moment folds (_bdet_fold, shared with bfr_lloyd_regate); cap-retain mode: <=BDET_CS_RETAIN ids per chunk; CS faces: constant (chunks-1)*cap pool collect + 4 count-pair heads (bfr_lloyd_cs_stats); bfr_lloyd_regate: <=cap retained rows per chunk — all bounded by k*d or the constant pool cap, never n"),
+    "plans/ml_queries.py": (5, "_lloyd_rounds: O(k*d) centroid sums per Lloyd round (kmeans_lloyd_det and the det-BFR init); _bdet_init_assign: K one-row farthest-point TakeOrdereds (2 head sites); _bdet_fold: <=K+1 integer-moment rows per chunk (every det-BFR face and stream_bfr_rounds); cap/regate epoch: <=BDET_CS_RETAIN (vec_id, xi) rows per chunk, which are the CS pool — all bounded by k*d or the constant pool cap, never n"),
     "plans/events.py": (1, "per-event-type counts (bounded by distinct types)"),
     "plans/tpch_ext.py": (2, "per-returnflag counts (3 rows) for rank medians; q_asof_grouped hot-group gate: <= total/group_cap over-cap user ids (map-side-combined count agg, empty on production-shaped corpora)"),
     "operators/ranking.py": (1, "bucket-cut sketch: <=MAX_BUCKETS doubles per expression"),
@@ -40,7 +40,7 @@ WHITELIST = {
     "operators/bpe.py": (1, "O(1) top-pair row per merge round (TakeOrderedAndProject limit 1, <= R_MERGES rounds) — the kmeans_lloyd_det per-round driver-feedback contract"),
     "operators/multimodal.py": (1, "1-row max(n_chars) agg sizing the Arrow record cap to the payload byte budget"),
     "streaming/docs_stream.py": (3, "CMS partial cells per batch (<= d*w counters); stream_components driver-tier fold: <=driver_gate pair rows per batch (counted before the collect; distributed incremental fold beyond the bounds); stream_ann_index probe-list ids (<= n_lists values, drives partition pruning)"),
-    "streaming/events_stream.py": (2, "8-bucket partial aggregates per batch (stream_bfr_update); stream_bfr_rounds: K×(1+2d) integer-moment rows per micro-batch (the _bdet_epoch O(k*d) feedback contract)"),
+    "streaming/events_stream.py": (1, "8-bucket partial aggregates per batch (stream_bfr_update); stream_bfr_rounds folds through plans/ml_queries._bdet_fold"),
 }
 
 

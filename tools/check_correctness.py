@@ -6,11 +6,15 @@ same parquet files, and compare row count, schema (column names), and
 an order-insensitive value hash (columns sorted by name, rows sorted,
 floats canonicalized).
 
-Usage: python tools/check_correctness.py [sf_dir] [only_key ...]
+Usage: python tools/check_correctness.py [sf_dir] [key_pattern ...]
+
+Key patterns are shell-style (``fnmatch``): ``'bfr_*'`` selects the
+whole family, a plain name selects only itself.
 """
 
 from __future__ import annotations
 
+import fnmatch
 import hashlib
 import os
 import sys
@@ -82,7 +86,7 @@ def main():
         scalable = overrides(sf_dir, con)
     n_pass = n_fail = n_rows_only = 0
     for name, fn in qs.items():
-        if only and name not in only:
+        if only and not any(fnmatch.fnmatchcase(name, p) for p in only):
             continue
         t0 = time.time()
         try:
