@@ -31,22 +31,25 @@ import json
 import os
 import sys
 
-from .ml.bfr import BFR, BFRConfig
+from .ml.bfr import BFR, BFRConfig, ChunkError
 from .session import get_spark
 from .sources.readers import points_from_indexed_csv
 
 
 def run(input_path: str, num_clusters: int, cluster_out: str, intermediate_out: str) -> None:
-    spark = get_spark("bfr_cli")
     files = sorted(
         os.path.join(input_path, f) for f in os.listdir(input_path) if not f.startswith(".")
     )
     if not files:
         raise SystemExit(f"no chunk files in {input_path}")
+    # validated before the session starts
+    bfr = BFR(BFRConfig(n_clusters=num_clusters, n_chunks=len(files)))
+    spark = get_spark("bfr_cli")
     chunks = [points_from_indexed_csv(spark, f) for f in files]
-
-    bfr = BFR(BFRConfig(n_clusters=num_clusters, n_chunks=len(chunks)))
-    assigned = bfr.fit_stream(chunks)
+    try:
+        assigned = bfr.fit_stream(chunks)
+    except ChunkError as err:
+        raise ValueError(f"{files[err.chunk]}: {err}") from err
 
     out_map = {str(r["id"]): int(r["cluster"]) for r in assigned.collect()}
     with open(cluster_out, "w") as f:

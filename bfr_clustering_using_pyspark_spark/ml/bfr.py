@@ -169,9 +169,36 @@ def nearest_summary(pts: np.ndarray, summ: Summaries, gate: float = np.inf) -> t
     return best, dist[np.arange(len(pts)), best] < gate
 
 
-def _require_finite(n_bad: int, where: str) -> None:
-    if n_bad:
-        raise ValueError(f"bfr: {n_bad} non-finite feature values in {where}")
+class ChunkError(ValueError):
+    """Malformed features in chunk ``chunk`` of a fit."""
+
+    def __init__(self, chunk: int, msg: str):
+        super().__init__(msg)
+        self.chunk = chunk
+
+
+def _stack_features(features: pd.Series, d: int) -> tuple[np.ndarray | None, int, int]:
+    """``(points, n_ragged, n_nonfinite)`` for a column of feature
+    arrays: points is the (n, d) array, or None when rows do not all
+    have ``d`` values. Those rows are counted only once the stack has
+    failed, so well-formed input pays nothing extra."""
+    try:
+        pts = np.stack(features.to_numpy())
+    except ValueError:
+        n_ragged = int((features.map(len) != d).sum())
+        if not n_ragged:
+            raise
+        return None, n_ragged, 0
+    if pts.shape[1] != d:
+        return None, len(pts), 0
+    return pts, 0, int((~np.isfinite(pts)).sum())
+
+
+def _require_valid(n_ragged: int, n_nonfinite: int, chunk: int, where: str, d: int) -> None:
+    if n_ragged:
+        raise ChunkError(chunk, f"bfr: {n_ragged} rows in {where} do not have d={d} feature values")
+    if n_nonfinite:
+        raise ChunkError(chunk, f"bfr: {n_nonfinite} non-finite feature values in {where}")
 
 
 @dataclass
@@ -189,6 +216,11 @@ class BFRConfig:
     kmeans_iterations: int = 5     # ref HCluster(…, 5) everywhere
     seed: int = 42
     use_cs: bool = True
+
+    def __post_init__(self):
+        for name in ("n_clusters", "n_chunks"):
+            if getattr(self, name) < 1:
+                raise ValueError(f"BFRConfig.{name} must be >= 1, got {getattr(self, name)}")
 
 
 @dataclass
@@ -222,8 +254,8 @@ class BFR:
 
     # fused-kernel row types: assignment (DS label or provisional CS
     # label), DS/CS partial sufficient stats, RS point, count of
-    # non-finite feature values in a batch
-    _RT_ASSIGN, _RT_P_DS, _RT_P_CS, _RT_RS, _RT_NONFINITE = -1, 0, 1, 2, 3
+    # non-finite feature values / of rows without d values in a batch
+    _RT_ASSIGN, _RT_P_DS, _RT_P_CS, _RT_RS, _RT_NONFINITE, _RT_RAGGED = -1, 0, 1, 2, 3, 4
     _FUSED_SCHEMA = (
         "rtype int, label long, n long, sums array<double>, "
         "sqsums array<double>, id long, features array<double>"
@@ -258,10 +290,9 @@ class BFR:
             for pdf in batches:
                 if not len(pdf):
                     continue
-                pts = np.stack(pdf["features"].to_numpy())
-                n_bad = int((~np.isfinite(pts)).sum())
-                if n_bad:
-                    yield rows(cls._RT_NONFINITE, n=[n_bad])
+                pts, n_ragged, n_bad = _stack_features(pdf["features"], d)
+                if n_ragged or n_bad:
+                    yield rows(cls._RT_RAGGED if n_ragged else cls._RT_NONFINITE, n=[n_ragged or n_bad])
                     continue
                 ids = pdf["id"].to_numpy().astype(np.int64)
                 best, in_ds = nearest_summary(pts, ds, gate)
@@ -608,7 +639,8 @@ class BFR:
         in ``run_dir``, completed rounds are skipped and the fit
         continues from the first unfinished chunk (see the
         checkpoint/resume contract above). A non-finite feature
-        value raises ``ValueError``."""
+        value, or a row without ``d`` values, raises ``ChunkError`` (a
+        ``ValueError``) naming the chunk."""
         cfg = self.cfg
         spark = chunks[0].sparkSession
         # an anonymous tempdir cannot be resumed (the caller can't
@@ -642,8 +674,8 @@ class BFR:
                 frac = min(max(cfg.init_sample_frac, min_frac), 1.0, cfg.init_sample_cap / chunk_n)
                 sample = chunk.sample(fraction=frac, seed=cfg.seed).select("id", "features").toPandas()
                 ids = sample["id"].to_numpy()
-                pts = np.stack(sample["features"].to_numpy())
-                _require_finite(int((~np.isfinite(pts)).sum()), "chunk 0's init sample")
+                pts, n_ragged, n_bad = _stack_features(sample["features"], d)
+                _require_valid(n_ragged, n_bad, 0, "chunk 0's init sample", d)
                 driver_assignments.append(self._init_from_sample(ids, pts))
                 # the non-sampled remainder of chunk 0 goes through
                 # the normal assignment path (ref assign_dsrsout on
@@ -673,11 +705,15 @@ class BFR:
                     # final recursive parquet read gone (guide §2.4).
                     ckpt_frames.append(asg.localCheckpoint(eager=True))
                 # job 2: tiny driver-bound feedback collect (partials,
-                # RS points, non-finite counts)
+                # RS points, bad-input counts)
                 fb = fused.filter(F.col("rtype") != self._RT_ASSIGN).toPandas()
             finally:
                 fused.unpersist()
-            _require_finite(int(fb.loc[fb["rtype"] == self._RT_NONFINITE, "n"].sum()), f"chunk {round_id}")
+
+            def n_of(rtype: int) -> int:
+                return int(fb.loc[fb["rtype"] == rtype, "n"].sum())
+
+            _require_valid(n_of(self._RT_RAGGED), n_of(self._RT_NONFINITE), round_id, f"chunk {round_id}", d)
             self._apply_feedback(fb)
 
             last = round_id == n_chunks - 1

@@ -1,53 +1,6 @@
 """LLM-data-pipeline operators: text analysis, deduplication,
 similarity search, multimodal column plumbing.
 
-Each module exposes QUERIES / ORACLES like ``plans/``.
+Each module exposes QUERIES / ORACLES like ``plans/``, which merges
+them into the registry.
 """
-
-from . import (
-    bpe,
-    curate,
-    dedup,
-    dq,
-    embeddings_ops,
-    formats,
-    graph,
-    merge,
-    multimodal,
-    retrieval,
-    sampling,
-    similarity,
-    sketches,
-    textstats,
-)
-
-_MODULES = (
-    textstats,
-    bpe,
-    curate,
-    dedup,
-    similarity,
-    retrieval,
-    multimodal,
-    embeddings_ops,
-    merge,
-    sampling,
-    graph,
-    sketches,
-    formats,
-    dq,
-)
-
-
-def all_queries():
-    out = {}
-    for mod in _MODULES:
-        out.update(mod.QUERIES)
-    return out
-
-
-def all_oracles():
-    out = {}
-    for mod in _MODULES:
-        out.update(mod.ORACLES)
-    return out

@@ -4,259 +4,28 @@ Each module exposes ``QUERIES: dict[name -> fn(spark, sf_dir) ->
 DataFrame]`` and ``ORACLES: dict[name -> duckdb-runnable SQL]`` for
 the correctness gate. Computed columns are aliased identically on
 both sides (the gate hashes values after sorting columns by name).
+The registry merges those dicts in ``_MODULES`` (source) order: the
+plans, the operators, then the streaming drains.
 """
 
-from ..operators import all_oracles as _op_oracles
-from ..operators import all_queries as _op_queries
-from .. import streaming as _streaming
+from ..operators import (
+    bpe, curate, dedup, dq, embeddings_ops, formats, graph, merge,
+    multimodal, retrieval, sampling, similarity, sketches, textstats,
+)
+from .. import streaming
 from . import events, ml_queries, tpch, tpch_deep, tpch_ext
 
-_MODULES = (tpch, tpch_ext, tpch_deep, events, ml_queries)
-
-# Measured sf0.01 wall-seconds per query (tools/check_correctness.py
-# full run, warm session — refreshed each round). The external gate
-# walks queries() in dict order under a time budget — cheapest-first
-# maximizes how many get a CORRECTNESS row before the budget runs
-# out. Unlisted keys sort at 1.0s.
-_COST_S = {
-    "points_source": 0.2, "q_weighted_sample": 0.2,
-    "q6_forecast_revenue": 0.3, "q_events_funnel": 0.3,
-    "text_fingerprint": 0.3, "q14_promo_revenue": 0.4,
-    "q18_large_orders": 0.4, "q_running_total": 0.4,
-    "q_scalar_subquery": 0.4, "q_unpivot": 0.4, "sample_train_split": 0.4,
-    "text_quality": 0.4, "text_tokens": 0.4, "text_top_terms": 0.4,
-    "mm_pgm_roundtrip": 0.5, "q19_disjunctive": 0.5, "q_cube": 0.5,
-    "q_date_funcs": 0.5, "q_events_json": 0.5, "q_histogram": 0.5,
-    "q_moving_avg": 0.5, "q_path_3grams": 0.5, "q_rfm_segmentation": 1.5,
-    "stream_bfr_update": 0.5, "suffstats": 0.5, "text_bigrams": 0.5,
-    "dedup_embedding": 0.6, "dedup_exact": 0.6, "mm_decode": 0.6,
-    "q12_shipmode": 0.6, "q_events_windowed": 0.6, "q_order_priority": 0.6,
-    "q_range_join": 0.6, "q_salted_agg": 0.6, "q_zorder_layout": 0.6,
-    "sample_stratified": 0.6, "text_clean_pipeline": 0.6,
-    "text_langid": 0.6, "cluster_profile": 0.7, "nmi_eval": 0.7,
-    "q15_top_supplier": 0.7, "q1_pricing_summary": 0.7, "q_asof_join": 0.7,
-    "q_events_anomaly": 0.7, "q_mad_outliers": 0.7, "q_regression": 0.7,
-    "ann_bruteforce": 0.8, "q10_returned_items": 0.8,
-    "q22_idle_customers": 0.8, "q2_min_cost_supplier": 0.8,
-    "q3_shipping_priority": 0.8, "q9_product_profit": 0.8,
-    "q_countmin_topk": 0.8, "q_drift_detect": 0.8, "q_gap_fill": 0.8,
-    "q_outer_join": 0.8, "q_rollup": 0.8, "dedup_simhash": 0.9,
-    "json_roundtrip": 0.9, "kmeans_assign": 0.9, "mahalanobis_assign": 0.9,
-    "orc_roundtrip": 0.9, "pca_project": 0.9, "pca_power_det": 3.0,
-    "q16_supplier_cnt": 0.9,
-    "q17_small_qty_revenue": 0.9, "q7_volume_shipping": 0.9,
-    "q_events_sessionize": 0.9, "q_linear_count": 0.9,
-    "q_merge_upsert": 0.9, "q_part_pivot": 0.9, "q_percentiles": 0.9,
-    "q_scd2_history": 0.9, "q_top_customers": 0.9, "q_window_funcs": 0.9,
-    "text_repetition": 0.9, "text_unigram_logprob": 0.9,
-    "tfidf_top_terms": 0.9, "decontaminate": 1.0,
-    "embedding_normalize": 1.0, "mm_pipeline": 1.0, "model_per_key": 1.0,
-    "q13_cust_distribution": 1.0, "q21_blame_supplier": 1.0,
-    "q5_local_supplier": 1.0, "q_corr_matrix": 1.0,
-    "q_events_retention": 1.0, "q_key_skew_profile": 1.0, "ann_pq": 3.0,
-    "knn_classify_eval": 1.1, "q8_market_share": 1.1,
-    "q_grouping_sets": 1.2, "q_set_ops": 1.3, "stream_static_join": 1.3,
-    "ann_lsh": 1.4, "q_market_basket": 1.4, "graph_triangles": 1.6,
-    "seq_pack": 1.6, "text_winnow_fingerprint": 1.6,
-    "ann_lsh_multiprobe": 1.7, "stream_events_window": 1.9,
-    "stream_dedup": 2.0, "stream_quality_filter": 2.0,
-    "stream_session_window": 2.0, "ann_ivf": 1.5, "mm_wav_roundtrip": 2.1,
-    "q_approx_distinct": 2.2, "ann_recall_eval": 2.3,
-    "q_bloom_filter_join": 2.3, "ann_ivf_rerank": 1.5,
-    "stream_countmin": 2.5, "q_asof_grouped": 2.7,
-    "stream_sessionize_stateful": 2.7, "corpus_mix": 2.8,
-    "graph_pagerank": 9.0, "kmeans_fit": 2.8, "intermediate_stats": 3.1,
-    "embedding_quantize": 3.5, "stream_stream_join": 3.7,
-    "dedup_ngram_jaccard": 5.0, "bfr_fit": 3.9, "dedup_containment": 6.0,
-    "dedup_minhash_lsh": 4.8, "dedup_fuzzy_names": 7.0,
-    "text_pii_scrub": 1.5, "dedup_components": 7.0, "dedup_recall_eval": 5.0,
-    "stream_components": 12.0, "silhouette_eval": 2.0, "q_survivorship": 0.7,
-    "q_ab_test": 0.7, "q_time_to_convert": 0.6, "q_mv_rollup": 1.0,
-    "doc_chunk": 0.4, "corpus_curate": 1.2, "chunk_boilerplate": 0.7,
-    "q11_important_stock": 0.9, "q20_potential_promo": 0.8,
-    "ann_ivf_partitioned": 2.0,
-    "q_kmv_distinct": 0.6, "q_cdc_snapshot_diff": 0.6, "q_dq_checks": 0.7,
-    "q_bucketed_join": 2.4, "stream_late_data": 5.0,
-    "q_time_range_agg": 0.6, "mm_pgm_resize": 0.9, "dedup_substring": 7.9, "sink_shard_manifest": 2.0, "q_ks_test": 0.9,
-    "stream_update_counts": 4.0, "source_custom_points": 2.0,
-    "stream_checkpoint_recovery": 6.0, "udtf_doc_chunk": 1.5, "graph_label_prop": 4.0, "ch_index_eval": 1.0, "q_null_semantics": 0.6,
-    "q_percentiles_dist": 6.0, "q_percentiles_approx": 1.0,
-    # ann_nndescent_graph: REAL standalone cost (fresh testdata →
-    # first touch of the shared index pays the full NN-Descent build;
-    # ADVICE r7: never encode the cache discount as the budget). When
-    # it runs after ann_graph_search (whose cost covers the build) or
-    # against an already-persisted warehouse index it's ~2s — the
-    # scheduler may finish early, never late.
-    # retrieval family: REAL standalone first-touch costs — whichever
-    # key runs first in a session pays the postings/tf cache build
-    # (ADVICE r7 doctrine: never encode the cache discount)
-    "text_bm25": 9.0, "q_hybrid_rrf": 10.0, "corpus_train_shuffle": 2.0,
-    "retrieval_eval": 10.0,
-    # BPE family: standalone first-touch pays the R_MERGES-round fit
-    # (whichever key runs first; the second is ~2s off the session
-    # cache — never encode the discount)
-    "text_bpe_train": 12.0, "text_bpe_encode": 13.0,
-    "text_bigram_logprob": 4.0, "seq_pack_contig": 2.0,
-    "mm_image_ahash": 2.5, "mm_audio_fingerprint": 2.5, "corpus_source_overlap": 3.0, "ann_ivfpq": 6.0, "text_bpe_vocab": 12.0, "stream_token_stats": 3.0,
-    "q_mad_outliers_approx": 1.2, "csv_roundtrip": 3.0, "ann_nndescent_graph": 15.0, "q_mad_outliers_dist": 6.0, "kmeans_lloyd_det": 3.0,
-    # bfr det-epoch family: REAL standalone first-touch (whichever key
-    # runs first in a session pays the epoch; siblings ride the epoch
-    # cache at ~0.5-1.5s — never encode the discount)
-    "bfr_lloyd_det": 13.0, "bfr_lloyd_stats": 13.0,
-    "bfr_lloyd_cs": 9.0, "bfr_lloyd_cs_stats": 9.0,
-    "bfr_lloyd_regate": 8.0, "bfr_lloyd_final": 9.0,
-    "bfr_nmi_eval": 10.0, "bfr_lloyd_predict": 10.0,
-    "stream_drift_detect": 5.0, "q_mv_incremental": 1.0,
-    "ann_recall_curve": 6.0,
-    # rides the BPE session cache when a sibling ran first; standalone
-    # pays the 12-round fit (cache doctrine: record the real cost)
-    "tokenizer_fertility": 13.0,
-    "dedup_cascade": 2.5,
-    # streaming replay: re-stages chunk files + one epoch per drain
-    # (no cache share with the batch epoch — different build path)
-    "stream_bfr_rounds": 17.0, "kmeans_inertia_eval": 4.0, "text_bm25_conj": 10.0, "retrieval_conj_eval": 11.0, "stream_ann_index": 8.0, "text_bpe_train_deep": 30.0, "contrastive_pairs": 2.0, "davies_bouldin_eval": 2.0, "seq_pack_eval": 2.0, "mm_image_dhash": 2.5, "emb_truncate_eval": 2.5, "corpus_epoch_plan": 1.5, "q_join_strategies": 3.0,
-    "sink_compact_small_files": 2.4, "q_range_frame": 0.7, "mm_video_frames": 1.5, "q_skew_join": 0.8, "stream_sliding_window": 2.0, "q_generator_funcs": 0.7,
-    "q_lateral_join": 0.8, "q_higher_order_funcs": 0.9, "stream_upsert_sink": 6.0, "q_recursive_cte": 1.0, "mm_audio_features": 2.0, "q_complex_types": 0.9, "udf_pandas_scalar": 1.2, "ann_graph_search": 20.0, "q_json_schema_roundtrip": 0.8, "q_schema_evolution": 2.0, "q_set_ops_all": 1.3, "q_variant_type": 0.8, "q_observed_metrics": 1.0, "q_explode_outer": 0.8, "q_ignore_nulls_window": 0.8, "q_try_arithmetic": 0.8, "q_group_by_all": 0.7,
-}
-
-
-# Coverage scheduling for the budgeted external gate, which only
-# ever reaches a prefix of queries() in dict order. This is a
-# schedule, not a result filter: nothing is exempted from sampling,
-# and no key's status is asserted here. Tiers:
-#
-#   tier 0 — keys whose implementation or oracle CHANGED this round
-#     (builder-maintained, one tuple per round). Changed code must
-#     be externally re-verified first — the opposite of hiding
-#     regressions.
-#   tier 1 — keys with NO external correctness row in any
-#     CORRECTNESS_r*.json artifact (computed, never hand-rotted).
-#   tier 2 — keys whose NEWEST external row is red (hash mismatch
-#     or harness error) — also computed from the artifacts.
-#   tier 3 — keys whose newest row was rows-only but which now have
-#     an oracle (they can graduate to hash-green).
-#   tier 4 — keys converted to the fixed-point numeric pattern this
-#     round (previously green; local strict gate re-verified).
-#   tier 5 — everything else, STALEST-FIRST (oldest newest external
-#     row, then cost-ascending within a round cohort), so spare
-#     budget refreshes r1/r3-era rows instead of re-sampling the
-#     same cheap keys forever.
-_CHANGED_THIS_ROUND = (
-    # round 15: NEW — the reference's headline metric hash-gated:
-    # NMI of bfr_lloyd_final's labels vs ground truth (get_nmi.py
-    # parity, −1 scored as its own class)
-    "bfr_nmi_eval",
-    # round 15: bfr_lloyd_final's oracle refactored to share its
-    # label CTEs with the NMI tail (finlab MATERIALIZED CTE — same
-    # values, new SQL text; re-verify first per convention), and the
-    # det-epoch cache freshness token switched to a directory-aware one
-    # (ADVICE r15 — affects every epoch-cache rider; re-gate the
-    # first-touch face)
-    "bfr_lloyd_final", "bfr_lloyd_det",
-    # round 15: _centroid_rank_expr rendered as ONE parsed SQL
-    # expression instead of an n_lists×dim F.lit Column build (1.7-
-    # 2.7 s of py4j construction per call → ~20 ms; bit-identical
-    # literals via {x!r}D round-trip) — re-verify every consumer
-    "ann_ivf", "ann_ivf_rerank", "ann_ivf_partitioned", "ann_ivfpq",
-    "ann_graph_search", "stream_ann_index",
-    # round 15: same recipe for the LSH plane fold and the PQ
-    # codebook/LUT matrices (~1 s and ~4 s of construction per plan
-    # build respectively) — re-verify the consumers
-    "ann_lsh", "ann_lsh_multiprobe", "ann_pq",
-    # round 15: NEW — the inference face of the det lifecycle;
-    # streaming face of the drift monitor (state-store moments)
-    "bfr_lloyd_predict", "stream_drift_detect",
-    # round 15: NEW — incremental MV delta-merge ≡ recompute;
-    # IVF operating curve (recall vs nprobe, whole curve hash-gated;
-    # ann_ivf body refactored onto the nprobe-param helper)
-    "q_mv_incremental", "ann_recall_curve",
-    # round 15: streaming batch-overhead surgery — stream_ann_index
-    # drains 2 fatter batches + eager-checkpointed probe queries;
-    # stream_components state lands at drain width (4 files per
-    # state subdir, not 32); shuffle-width conf parse guarded
-    # (ADVICE r15). Same rows/hashes, new build path.
-    "stream_components",
+_MODULES = (
+    tpch, tpch_ext, tpch_deep, events, ml_queries,
+    textstats, bpe, curate, dedup, similarity, retrieval, multimodal,
+    embeddings_ops, merge, sampling, graph, sketches, formats, dq,
+    streaming,
 )
-# round 15: no fixed-point conversions this round
-_CONVERTED_THIS_ROUND = ()
-
-
-def _external_history():
-    """key -> (status, round) where status is 'green' | 'rows' |
-    'red' from the NEWEST row per key across all driver
-    CORRECTNESS_r*.json artifacts and round is that newest
-    artifact's round number (for stalest-first re-sampling). Keys
-    absent from every artifact have never been externally sampled.
-    Reading the artifacts (instead of hardcoding grader state) keeps
-    the rotation honest and self-maintaining across rounds."""
-    import glob
-    import json
-    import os
-    import re
-
-    root = os.path.join(os.path.dirname(__file__), os.pardir, os.pardir)
-    hist: dict[str, tuple[str, int]] = {}
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        rnd = int(m.group(1)) if m else 0
-        try:
-            with open(path) as f:
-                data = json.load(f)
-        except Exception:
-            continue
-        for k, row in data.items():
-            if not isinstance(row, dict):
-                continue
-            if row.get("hash_match") is True:
-                hist[k] = ("green", rnd)
-            elif row.get("err") == "no_oracle" and row.get("spark_rows") is not None:
-                hist[k] = ("rows", rnd)
-            else:
-                hist[k] = ("red", rnd)
-    return hist
 
 
 def all_queries():
-    out = {}
-    for mod in _MODULES:
-        out.update(mod.QUERIES)
-    out.update(_op_queries())
-    out.update(_streaming.QUERIES)
-
-    hist = _external_history()
-    oracled = set(all_oracles())
-    changed = {k: i for i, k in enumerate(_CHANGED_THIS_ROUND)}
-    converted = {k: i for i, k in enumerate(_CONVERTED_THIS_ROUND)}
-
-    def tier(k: str) -> tuple:
-        if k in changed:
-            return (0, changed[k])
-        if k not in hist:
-            return (1, 0)
-        status, rnd = hist[k]
-        if status == "red":
-            return (2, 0)
-        if status == "rows" and k in oracled:
-            return (3, 0)
-        if k in converted:
-            return (4, converted[k])
-        # tier 5 orders STALEST-FIRST (oldest newest-row round before
-        # cost): cheapest-first alone re-sampled the same cheap keys
-        # every round and left r1/r3-era rows un-refreshed forever
-        return (5, rnd)
-
-    return dict(
-        sorted(
-            out.items(),
-            key=lambda kv: (*tier(kv[0]), _COST_S.get(kv[0], 1.0), kv[0]),
-        )
-    )
+    return {k: v for mod in _MODULES for k, v in mod.QUERIES.items()}
 
 
 def all_oracles():
-    out = {}
-    for mod in _MODULES:
-        out.update(mod.ORACLES)
-    out.update(_op_oracles())
-    out.update(_streaming.ORACLES)
-    return out
+    return {k: v for mod in _MODULES for k, v in mod.ORACLES.items()}

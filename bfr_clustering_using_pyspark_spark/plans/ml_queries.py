@@ -175,16 +175,13 @@ FROM best WHERE rn = 1 GROUP BY label, assigned ORDER BY label, assigned
 """
 
 
-def nmi_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Normalized mutual information computed fully relationally
-    (reference ``get_nmi.py`` parity): NMI between the ground-truth
-    label and a deterministic reference partition (vec_id mod 7).
-    Contingency → marginals → MI / mean-entropy, one tiny plan."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        (F.col("vec_id") % 7).alias("pred"), F.col("label").alias("truth")
-    )
-    n_total = emb.count()
-    cont = emb.groupBy("pred", "truth").agg(F.count("*").alias("nij"))
+def _nmi_frame(base: DataFrame) -> DataFrame:
+    """One-row ``nmi`` frame from a ``(pred, truth)`` frame, computed
+    fully relationally (reference ``get_nmi.py`` parity): contingency
+    → marginals → MI / arithmetic mean of the entropies, one tiny
+    plan over O(k_pred·k_truth) rows."""
+    n_total = base.count()
+    cont = base.groupBy("pred", "truth").agg(F.count("*").alias("nij"))
     pi = cont.groupBy("pred").agg(F.sum("nij").alias("ni"))
     pj = cont.groupBy("truth").agg(F.sum("nij").alias("nj"))
     joined = cont.join(F.broadcast(pi), "pred").join(F.broadcast(pj), "truth")
@@ -194,13 +191,22 @@ def nmi_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             * F.log((F.col("nij") * F.lit(float(n_total))) / (F.col("ni") * F.col("nj")))
         ).alias("mi")
     )
-    hi = pi.select(F.sum(-(F.col("ni") / n_total) * F.log(F.col("ni") / n_total)).alias("h"))
-    hj = pj.select(F.sum(-(F.col("nj") / n_total) * F.log(F.col("nj") / n_total)).alias("h"))
+    hi = pi.select(F.sum(-(F.col("ni") / n_total) * F.log(F.col("ni") / n_total)).alias("h_pred"))
+    hj = pj.select(F.sum(-(F.col("nj") / n_total) * F.log(F.col("nj") / n_total)).alias("h_truth"))
     return (
-        mi.crossJoin(hi.select(F.col("h").alias("h_pred")))
-        .crossJoin(hj.select(F.col("h").alias("h_truth")))
+        mi.crossJoin(hi)
+        .crossJoin(hj)
         .select(F.round(F.col("mi") / ((F.col("h_pred") + F.col("h_truth")) / 2.0), 6).alias("nmi"))
     )
+
+
+def nmi_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """NMI between the ground-truth label and a deterministic
+    reference partition (vec_id mod 7)."""
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        (F.col("vec_id") % 7).alias("pred"), F.col("label").alias("truth")
+    )
+    return _nmi_frame(emb)
 
 
 NMI_EVAL_SQL = """
@@ -1610,35 +1616,12 @@ def bfr_nmi_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(truth, "vec_id")
         .select("pred", "truth")
     )
-    n_total = base.count()
-    cont = base.groupBy("pred", "truth").agg(F.count("*").alias("nij"))
-    pi = cont.groupBy("pred").agg(F.sum("nij").alias("ni"))
-    pj = cont.groupBy("truth").agg(F.sum("nij").alias("nj"))
-    joined = cont.join(F.broadcast(pi), "pred").join(F.broadcast(pj), "truth")
-    mi = joined.select(
-        F.sum(
-            (F.col("nij") / n_total)
-            * F.log((F.col("nij") * F.lit(float(n_total))) / (F.col("ni") * F.col("nj")))
-        ).alias("mi")
-    )
-    hi = pi.select(F.sum(-(F.col("ni") / n_total) * F.log(F.col("ni") / n_total)).alias("h_pred"))
-    hj = pj.select(F.sum(-(F.col("nj") / n_total) * F.log(F.col("nj") / n_total)).alias("h_truth"))
     st = base.agg(
         F.count("*").cast("long").alias("n_points"),
         F.countDistinct("pred").cast("long").alias("n_pred"),
         F.coalesce(F.sum((F.col("pred") == -1).cast("long")), F.lit(0)).cast("long").alias("n_outliers"),
     )
-    return (
-        st.crossJoin(mi)
-        .crossJoin(hi)
-        .crossJoin(hj)
-        .select(
-            "n_points",
-            "n_pred",
-            "n_outliers",
-            F.round(F.col("mi") / ((F.col("h_pred") + F.col("h_truth")) / 2.0), 6).alias("nmi"),
-        )
-    )
+    return st.crossJoin(_nmi_frame(base))
 
 
 def _bdet_final_ctes() -> str:

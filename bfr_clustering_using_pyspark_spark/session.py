@@ -26,9 +26,12 @@ def default_driver_memory() -> str:
 
 
 def get_spark(app_name: str = "bfr_spark_engine", shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    raw = os.environ.get("SPARK_GRAFT_CPUS") or "32"
+    cpus = int(raw) if raw.strip().isdecimal() else 0
+    if cpus < 1:
+        raise ValueError(f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}")
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = cpus
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

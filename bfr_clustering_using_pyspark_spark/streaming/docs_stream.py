@@ -240,18 +240,6 @@ def stream_components(
             lbl_state["uf"] = None
 
         def process(batch_df: DataFrame, batch_id: int) -> None:
-            import time as _time
-
-            _prof = os.environ.get("SPARK_GRAFT_PROFILE") == "1"
-            _t0 = _time.time()
-
-            def _mark(phase: str) -> None:
-                nonlocal _t0
-                if _prof:
-                    t = _time.time()
-                    print(f"[streamcc b{batch_id}] {phase}: {t - _t0:.2f}s", flush=True)
-                    _t0 = t
-
             sp = batch_df.sparkSession
             # one chunk file = one input split — spread the batch
             # across the cores before the shingle build and Python
@@ -293,11 +281,9 @@ def stream_components(
                 bands.repartition(sw).write.mode("overwrite").parquet(
                     f"{sig_path}/b{batch_id:05d}"
                 )
-                _mark("minhash+sig_write")
                 base.repartition(sw).write.mode("overwrite").parquet(
                     f"{sh_path}/b{batch_id:05d}"
                 )
-                _mark("shingle_write")
                 new_bands = sp.read.parquet(f"{sig_path}/b{batch_id:05d}")
                 all_bands = sp.read.parquet(f"{sig_path}/b*")
                 cand = (
@@ -337,7 +323,6 @@ def stream_components(
                     .localCheckpoint(eager=True)
                 )
                 n_new = pairs.count()
-                _mark("bucket+verify")
                 if n_new == 0:
                     # no new verified pairs -> the component labelling
                     # is unchanged; skip the whole fold (common for
@@ -356,7 +341,6 @@ def stream_components(
                         # soft bound: crossed by at most one batch's
                         # worth of nodes before the flush lands
                         _flush_uf(sp, batch_id)
-                    _mark("uf_fold")
                     return
                 if lbl_state["uf"] is not None:
                     # this delta exceeds the driver gate — escalate:
@@ -454,7 +438,6 @@ def stream_components(
                     full = f"{lbl_path}/{stale}"
                     if full not in (out_dir, prev_dir):
                         shutil.rmtree(full, ignore_errors=True)
-                _mark("cc_fold+label_write")
             finally:
                 base.unpersist()
 
@@ -641,24 +624,11 @@ def stream_ann_index(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> Dat
     )
     from pyspark.sql import Window as W
 
-    import time as _time
-
-    _prof = os.environ.get("SPARK_GRAFT_PROFILE") == "1"
-    _t0 = _time.time()
-
-    def _mark(phase: str) -> None:
-        nonlocal _t0
-        if _prof:
-            t = _time.time()
-            print(f"[streamann] {phase}: {t - _t0:.2f}s", flush=True)
-            _t0 = t
-
     src = _chunked_emb_cached(spark, sf_dir, n_chunks)
     # quantizer sizing = deployment config: expected volume is known
     # to the index owner before the stream starts (metadata count of
     # the staged source — NOT read per batch)
     n_lists = _n_ivf_lists(spark.read.parquet(src).count())
-    _mark("setup")
 
     with tempfile.TemporaryDirectory(prefix="streamann_", dir=scratch_dir()) as tmp:
         idx_path = f"{tmp}/index"
@@ -691,7 +661,6 @@ def stream_ann_index(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> Dat
                 ).partitionBy("batch", "list_id").parquet(idx_path)
             finally:
                 sp.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-            _mark(f"batch{batch_id}_write")
 
         # the scoped width covers BOTH the drain and the probe: the
         # per-query window and final sort are over a bounded result
@@ -718,7 +687,6 @@ def stream_ann_index(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> Dat
                     .start()
                 )
                 q.awaitTermination()
-            _mark("drain_done")
 
             if not os.path.isdir(idx_path) or not os.listdir(idx_path):
                 return spark.createDataFrame(
@@ -748,7 +716,6 @@ def stream_ann_index(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> Dat
             probe_ids = sorted(
                 r[0] for r in queries.select("probe_list").distinct().collect()
             )
-            _mark("probe_ids")
             data = index.filter(F.col("list_id").isin(probe_ids))
             dot = F.aggregate(
                 F.zip_with("v", "q_v", lambda x, y: x * y),
@@ -774,7 +741,6 @@ def stream_ann_index(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> Dat
                 .orderBy("q_id", "rank")
                 .localCheckpoint(eager=True)
             )
-            _mark("probe_scored")
             return out
 
 

@@ -1,12 +1,16 @@
 """Reference-parity CLI: chunked indexed-CSV in, JSON cluster map +
-intermediate CSV out (reference sh_commands / Runner contract)."""
+intermediate CSV out (reference sh_commands / Runner contract), and
+the clear errors it gives for nonsense input and settings."""
 
 import csv
 import json
+import re
 
 import numpy as np
+import pytest
 
-from bfr_clustering_using_pyspark_spark import cli
+from bfr_clustering_using_pyspark_spark import cli, session
+from bfr_clustering_using_pyspark_spark.ml import BFRConfig
 
 
 def test_cli_end_to_end(spark, tmp_path):
@@ -44,3 +48,62 @@ def test_cli_end_to_end(spark, tmp_path):
         "nof_point_retained",
     ]
     assert len(rows) == 3  # header + one row per chunk
+
+
+def _write_chunks(indir, sizes, d, short=lambda ci, li: False):
+    """Chunk files of ``pidx,dim0,...`` lines; lines where
+    ``short(chunk, line)`` holds get one value fewer than the rest."""
+    rng = np.random.default_rng(3)
+    indir.mkdir()
+    pid = 0
+    for ci, n in enumerate(sizes):
+        with open(indir / f"chunk_{ci}.txt", "w") as f:
+            for li in range(n):
+                dims = d - 1 if short(ci, li) else d
+                f.write(f"{pid}," + ",".join(f"{v:.4f}" for v in rng.normal(0, 5, dims)) + "\n")
+                pid += 1
+
+
+# chunk 0 is small enough that the init sample takes all of it (the
+# driver-side check); chunk 1 goes through the assignment kernel, where
+# a batch of only short rows stacks fine and must still be caught
+@pytest.mark.parametrize(
+    "chunk, n_short, short",
+    [
+        (0, 1, lambda ci, li: (ci, li) == (0, 7)),
+        (1, 1, lambda ci, li: (ci, li) == (1, 123)),
+        (1, 400, lambda ci, li: ci == 1),
+    ],
+    ids=["init-sample", "kernel-row", "kernel-batch"],
+)
+def test_cli_ragged_rows_name_file_and_d(spark, tmp_path, chunk, n_short, short):
+    indir = tmp_path / "chunks"
+    _write_chunks(indir, [150, 400], d=4, short=short)
+    bad = re.escape(str(indir / f"chunk_{chunk}.txt"))
+    with pytest.raises(ValueError, match=rf"^{bad}: bfr: {n_short} rows in chunk {chunk}.* d=4 "):
+        cli.run(str(indir), 3, str(tmp_path / "c.json"), str(tmp_path / "i.csv"))
+
+
+@pytest.mark.parametrize("field", ["n_clusters", "n_chunks"])
+def test_config_rejects_nonpositive(field):
+    kw = {"n_clusters": 3, "n_chunks": 2, field: 0}
+    with pytest.raises(ValueError, match=f"BFRConfig.{field} must be >= 1"):
+        BFRConfig(**kw)
+
+
+def test_cli_rejects_bad_k_before_spark(tmp_path, monkeypatch):
+    def no_spark(*a, **kw):
+        raise AssertionError("the session started before num_clusters was checked")
+
+    monkeypatch.setattr(cli, "get_spark", no_spark)
+    indir = tmp_path / "chunks"
+    _write_chunks(indir, [10], d=2)
+    with pytest.raises(ValueError, match="n_clusters must be >= 1, got 0"):
+        cli.run(str(indir), 0, str(tmp_path / "c.json"), str(tmp_path / "i.csv"))
+
+
+@pytest.mark.parametrize("value", ["abc", "0"])
+def test_get_spark_rejects_bad_cpus(monkeypatch, value):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", value)
+    with pytest.raises(ValueError, match=f"SPARK_GRAFT_CPUS must be a positive integer, got '{value}'"):
+        session.get_spark("bad_cpus")

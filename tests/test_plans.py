@@ -47,6 +47,12 @@ def test_every_query_has_callable():
         assert callable(v), k
     # oracle keys must be a subset of query keys
     assert set(m.oracle_sql()) <= set(qs)
+    # the registry merges the module dicts: a key defined twice would
+    # silently shadow the earlier definition
+    from bfr_clustering_using_pyspark_spark.plans import _MODULES
+
+    assert len(qs) == sum(len(mod.QUERIES) for mod in _MODULES)
+    assert len(m.oracle_sql()) == sum(len(mod.ORACLES) for mod in _MODULES)
 
 
 def test_null_semantics_exercises_null_paths(spark):

@@ -6,7 +6,10 @@ same parquet files, and compare row count, schema (column names), and
 an order-insensitive value hash (columns sorted by name, rows sorted,
 floats canonicalized).
 
-Usage: python tools/check_correctness.py [sf_dir] [key_pattern ...]
+Usage: python tools/check_correctness.py [--scalable] [sf_dir] [key_pattern ...]
+
+``--scalable <sf_dir>`` is the sf sweep: every key at a larger scale,
+with tools/scalable_oracles.py's scale-tractable oracle variants.
 
 Key patterns are shell-style (``fnmatch``): ``'bfr_*'`` selects the
 whole family, a plain name selects only itself.

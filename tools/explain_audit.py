@@ -4,6 +4,8 @@ broadcast joins where expected, whole-stage codegen coverage,
 exchange (shuffle) counts.
 
 Usage: python tools/explain_audit.py [query ...]
+
+Naming keys audits only those and prints each one's formatted plan.
 """
 
 from __future__ import annotations
@@ -511,12 +513,12 @@ def run_audit(
                 print(f"{status} {name}: exchanges={n_exch} codegen_spans={codegen} "
                       f"pushed={bool(pushed)} broadcast={bcast} global_windows={n_gw}"
                       f"{warn} {'; '.join(probs)}", flush=True)
+            if verbose and only:
+                print(plan)
             if heavy_filters or narrow_pandas:
                 warned.append(name)
             if probs:
                 failures.append(name)
-                if verbose and only:
-                    print(plan)
         # executable grouped-pandas cardinality contracts: run each
         # stage's boundedness probe against the audit corpus — no
         # grouped-Python stage is whitelist-only

@@ -27,9 +27,10 @@ sf1 decade and beyond:
   IVF_SMALL_N the sweep builds the 32-list SQL matching the engine's
   constant large-regime layout.
 
-Used by tools/sf_sweep.py (and importable from tests). The per-round
-driver gate at sf0.01 keeps the original single-SQL oracles — this
-module exists so the SCALE decade is hash-verified too.
+Used by ``tools/check_correctness.py --scalable <sf_dir>`` (the sf
+sweep) and importable from tests. The gate at sf0.01 keeps the
+original single-SQL oracles — this module exists so the SCALE decade
+is hash-verified too.
 """
 
 from __future__ import annotations
