@@ -1,12 +1,11 @@
 from .bfr import BFR, BFRConfig
-from .kmeans import dataframe_kmeans, mllib_kmeans
+from .kmeans import mllib_kmeans
 from .local_kmeans import LocalKMeans
 from .metrics import nmi_from_contingency, nmi_score
 
 __all__ = [
     "BFR",
     "BFRConfig",
-    "dataframe_kmeans",
     "mllib_kmeans",
     "LocalKMeans",
     "nmi_from_contingency",

@@ -333,7 +333,8 @@ class BFR:
 
         self._n_discard_points += fold(self._RT_P_DS, self.ds)
         fold(self._RT_P_CS, self.cs)
-        rs = fb[fb["rtype"] == self._RT_RS]
+        # id order, not partition order: RS order feeds the CS k-means
+        rs = fb[fb["rtype"] == self._RT_RS].sort_values("id")
         if len(rs):
             self.rs_ids = np.concatenate([self.rs_ids, rs["id"].to_numpy().astype(np.int64)])
             self.rs_pts = np.concatenate([self.rs_pts, np.stack(rs["features"].to_numpy())])
@@ -672,7 +673,16 @@ class BFR:
                 # init, bounded by the driver-memory cap
                 min_frac = min(1.0, 50.0 * cfg.n_clusters / chunk_n)
                 frac = min(max(cfg.init_sample_frac, min_frac), 1.0, cfg.init_sample_cap / chunk_n)
-                sample = chunk.sample(fraction=frac, seed=cfg.seed).select("id", "features").toPandas()
+                # a seeded hash of the id decides membership, so the
+                # sample (sorted by id) is the same however the chunk
+                # is partitioned — a chunk.sample draw is not
+                in_sample = F.pmod(F.xxhash64("id", F.lit(cfg.seed)), F.lit(10**6)) < round(
+                    frac * 10**6
+                )
+                sample = (
+                    chunk.filter(in_sample).select("id", "features").toPandas()
+                    .sort_values("id", ignore_index=True)
+                )
                 ids = sample["id"].to_numpy()
                 pts, n_ragged, n_bad = _stack_features(sample["features"], d)
                 _require_valid(n_ragged, n_bad, 0, "chunk 0's init sample", d)
@@ -680,8 +690,7 @@ class BFR:
                 # the non-sampled remainder of chunk 0 goes through
                 # the normal assignment path (ref assign_dsrsout on
                 # points_rest, bfr.py:429)
-                sample_ids = spark.createDataFrame(pd.DataFrame({"id": ids}))
-                chunk = chunk.join(F.broadcast(sample_ids), "id", "left_anti")
+                chunk = chunk.filter(~in_sample)
 
             fused = chunk.mapInPandas(self._assign_kernel(d), schema=self._FUSED_SCHEMA).persist()
             try:

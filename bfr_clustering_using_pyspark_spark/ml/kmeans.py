@@ -1,16 +1,10 @@
-"""Distributed k-means, two flavors.
+"""Distributed k-means.
 
 ``mllib_kmeans`` — the Spark-first default: delegate to MLlib's
 KMeans (k-means|| init, DataFrame-native, JVM execution). This is
 what replaces the reference's driver-side ``HCluster`` whenever the
-point set is distributed.
-
-``dataframe_kmeans`` — an explicit DataFrame-native Lloyd's loop with
-broadcast centers and map-side partial aggregation. Exists to (a)
-mirror the reference's algorithm exactly (farthest-point init,
-fixed iteration count) and (b) demonstrate the scale pattern used by
-BFR: per-iteration shuffle volume is O(num_batches × k × d),
-independent of n.
+point set is distributed. ``get_inertia`` scores any center set
+against a distributed point frame.
 """
 
 from __future__ import annotations
@@ -95,96 +89,3 @@ def get_inertia(points: DataFrame, centers: np.ndarray,
     partials = points.select(features_col).mapInPandas(fn, schema="sse double")
     row = partials.agg(F.sum("sse").alias("sse")).head()
     return float(row["sse"] or 0.0)
-
-
-def _assign_and_partials(centers: np.ndarray):
-    """mapInPandas kernel: for each Arrow batch, assign points to the
-    nearest broadcast center and emit ONE partial row per touched
-    cluster: (cluster, n, sums). Map-side combine by construction."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        c = centers
-        c_sq = (c**2).sum(axis=1)
-        for pdf in batches:
-            pts = np.stack(pdf["features"].to_numpy())
-            d2 = (pts**2).sum(axis=1)[:, None] - 2.0 * pts @ c.T + c_sq[None, :]
-            labels = d2.argmin(axis=1)
-            uniq = np.unique(labels)
-            rows = {
-                "cluster": uniq.astype(np.int64),
-                "n": np.array([(labels == u).sum() for u in uniq], dtype=np.int64),
-                "sums": [pts[labels == u].sum(axis=0).tolist() for u in uniq],
-            }
-            yield pd.DataFrame(rows)
-
-    return fn
-
-
-def dataframe_kmeans(points: DataFrame, k: int, n_iterations: int = 5, seed: int = 42,
-                     sample_cap: int = 100_000,
-                     n_seeds: int = 1) -> tuple[DataFrame, np.ndarray]:
-    """DataFrame-native Lloyd's with the reference's semantics
-    (farthest-point init — ref bfr.py:18-40; fixed iterations with
-    empty-cluster carry-over — ref bfr.py:60-90).
-
-    ``n_seeds > 1`` restarts the whole fit with seeds ``seed+i`` and
-    keeps the run with the lowest inertia (reference restart loop,
-    test_sklearn.py:16/:50; ties → lower seed — deterministic).
-
-    Init runs on a driver-side sample capped at ``sample_cap``;
-    iterations are fully distributed: broadcast centers → one
-    mapInPandas pass emitting per-batch partial sums → tiny collect
-    (num_batches × k rows) → NumPy center update.
-    """
-    if n_seeds > 1:
-        cached = points.persist()
-        best = None
-        for i in range(n_seeds):
-            assigned, centers = dataframe_kmeans(
-                cached, k, n_iterations=n_iterations, seed=seed + i,
-                sample_cap=sample_cap, n_seeds=1,
-            )
-            sse = get_inertia(cached, centers)
-            if best is None or sse < best[0]:
-                best = (sse, assigned, centers)
-        # materialize the winning assignments while the input is still
-        # cached — the lazy mapInPandas would otherwise replay the
-        # whole lineage post-unpersist (ADVICE r13)
-        winner = best[1].localCheckpoint(eager=True)
-        cached.unpersist()
-        return winner, best[2]
-
-    from .local_kmeans import LocalKMeans
-
-    spark = points.sparkSession
-    n_total = points.count()
-    frac = min(1.0, sample_cap / max(n_total, 1))
-    sample = np.stack(
-        points.sample(fraction=frac, seed=seed).select("features").toPandas()["features"].to_numpy()
-    )
-    centers = LocalKMeans(k, n_iterations=1, seed=seed).fit(sample).centers
-
-    partial_schema = "cluster long, n long, sums array<double>"
-    for _ in range(n_iterations):
-        partials = points.select("features").mapInPandas(
-            _assign_and_partials(centers), schema=partial_schema
-        ).toPandas()
-        agg = partials.groupby("cluster")
-        new_centers = centers.copy()
-        for cluster, grp in agg:
-            total_n = grp["n"].sum()
-            if total_n > 0:
-                new_centers[int(cluster)] = np.sum(np.stack(grp["sums"].to_numpy()), axis=0) / total_n
-        centers = new_centers
-
-    final_centers = centers
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        c_sq = (final_centers**2).sum(axis=1)
-        for pdf in batches:
-            pts = np.stack(pdf["features"].to_numpy())
-            d2 = (pts**2).sum(axis=1)[:, None] - 2.0 * pts @ final_centers.T + c_sq[None, :]
-            yield pd.DataFrame({"id": pdf["id"], "cluster": d2.argmin(axis=1).astype(np.int64)})
-
-    assigned = points.select("id", "features").mapInPandas(assign, schema="id long, cluster long")
-    return assigned, centers

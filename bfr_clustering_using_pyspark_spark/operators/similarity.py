@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..functions.cache import SessionCache, corpus_version
+from ..functions.cache import SessionCache
 from ..functions.tuning import scoped_shuffle_width, shuffle_width, sized_width
 from ..sources.readers import load_table
 
@@ -1251,13 +1251,14 @@ def _nnd_cos(a_col: str, b_col: str):
 # warehouse as parquet, then queried. Both faces (`ann_nndescent_graph`
 # returns it, `ann_graph_search` walks it) resolve through two cache
 # tiers: a session cache of pinned DataFrames (functions/cache.py),
-# backed by an on-disk parquet index keyed by the same source version
-# — so a FRESH session (or process) reloads the stored index instead
-# of rebuilding, exactly as a production deployment reads its ANN
-# index table from storage.
+# backed by the ``nnd_index`` fixture store (sources/fixtures.py — keyed
+# by the embeddings' corpus version, the build params and the format,
+# published atomically, retention-pruned) — so a FRESH session (or
+# process) reloads the stored index instead of rebuilding, exactly as a
+# production deployment reads its ANN index table from storage.
 _NND_GRAPH_CACHE = SessionCache(4)
 
-# incremented by _nnd_graph_build only — lets tests assert that a
+# incremented by the index build only — lets tests assert that a
 # warehouse hit performs NO rebuild
 NND_BUILD_COUNT = 0
 
@@ -1265,21 +1266,6 @@ NND_BUILD_COUNT = 0
 # invalidate artifacts produced by older build code, or a code change
 # would silently keep serving stale indexes
 NND_INDEX_FORMAT = 1
-
-
-def _nnd_index_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Warehouse path for the persisted index. The key digests the
-    source path, build params, AND the embeddings' ``corpus_version``
-    — editing the source data invalidates the artifact automatically."""
-    import hashlib
-    import os
-
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    version = corpus_version(os.path.join(sf_dir, "embeddings.parquet"))
-    digest = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{NND_K}|{NND_ITERS}|{version}|v{NND_INDEX_FORMAT}".encode()
-    ).hexdigest()[:16]
-    return os.path.join(wh, "nnd_index", digest)
 
 
 def _nnd_graph_and_n(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
@@ -1299,61 +1285,38 @@ def _nnd_graph_and_n(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
 
 
 def _nnd_graph_load_or_build(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
-    global NND_BUILD_COUNT
-    import json
     import os
 
-    idx_dir = _nnd_index_dir(spark, sf_dir)
-    meta_path = os.path.join(idx_dir, "_index_meta.json")
-    if os.path.exists(meta_path):
-        # warehouse hit: reload the stored artifact — no rebuild
-        with open(meta_path) as fh:
-            n = int(json.load(fh)["n_vectors"])
-        graph = spark.read.parquet(os.path.join(idx_dir, "graph")).localCheckpoint(
-            eager=True
-        )
-        return graph, n
+    from ..sources.fixtures import ensure_fixture
 
-    # Size the build's shuffle width to its data: every exchange in
-    # the build moves O(n·K²) candidate edges, so at gate SF the
-    # session default (200) is ~25 tasks of scheduler overhead per
-    # row of work. ~1M candidate rows per partition, floored at 8,
-    # never above the deployment default — at real n the formula
-    # returns the default. The swap is safe because the write
-    # executes the whole build inside it.
-    n = _base(spark, sf_dir).count()
-    with scoped_shuffle_width(spark, sized_width(spark, n * NND_K * NND_K)):
-        NND_BUILD_COUNT += 1
-        built = _nnd_graph_build(spark, sf_dir, n)
-        # persist the artifact, then serve reads from it (overwrite:
-        # a concurrent/interrupted earlier write must not poison the
-        # path; the meta file is written LAST so a torn write is
-        # indistinguishable from a miss)
-        built.write.mode("overwrite").parquet(os.path.join(idx_dir, "graph"))
-    with open(meta_path, "w") as fh:
-        json.dump({"n_vectors": n, "k": NND_K, "iters": NND_ITERS}, fh)
-    _prune_nnd_store(os.path.dirname(idx_dir), keep=idx_dir)
+    def stage(d: str) -> None:
+        global NND_BUILD_COUNT
+        # Size the build's shuffle width to its data: every exchange
+        # in the build moves O(n·K²) candidate edges, so at gate SF the
+        # session default (200) is ~25 tasks of scheduler overhead per
+        # row of work. ~1M candidate rows per partition, floored at 8,
+        # never above the deployment default — at real n the formula
+        # returns the default. The swap is safe because the write
+        # executes the whole build inside it.
+        n = _base(spark, sf_dir).count()
+        with scoped_shuffle_width(spark, sized_width(spark, n * NND_K * NND_K)):
+            NND_BUILD_COUNT += 1
+            _nnd_graph_build(spark, sf_dir, n).write.parquet(os.path.join(d, "graph"))
+        with open(os.path.join(d, "n_vectors"), "w") as fh:
+            fh.write(str(n))
+
+    idx_dir = ensure_fixture(
+        spark,
+        "nnd_index",
+        sf_dir,
+        "embeddings.parquet",
+        f"k={NND_K},it={NND_ITERS},v{NND_INDEX_FORMAT}",
+        stage,
+    )
+    with open(os.path.join(idx_dir, "n_vectors")) as fh:
+        n = int(fh.read())
     graph = spark.read.parquet(os.path.join(idx_dir, "graph")).localCheckpoint(eager=True)
     return graph, n
-
-
-# retention bound for the on-disk index store: every distinct
-# (source path, params, data version) writes its own digest dir, so
-# transient corpora (tests, one-off fuzz datasets) would otherwise
-# accumulate dead artifacts forever
-NND_STORE_MAX = 12
-
-
-def _prune_nnd_store(store_dir: str, keep: str) -> None:
-    """Bounded retention via the shared warehouse-store pruner
-    (sources/fixtures.py): dirs only (stray plain files neither
-    occupy slots nor get rmtree'd), oldest-meta-first, and an hour's
-    grace window protecting both in-flight concurrent builds
-    (meta-less young dirs) and concurrent readers mid-scan of a
-    just-published dir."""
-    from ..sources.fixtures import prune_store
-
-    prune_store(store_dir, keep=keep, meta_name="_index_meta.json", max_keep=NND_STORE_MAX)
 
 
 def _nnd_graph(spark: SparkSession, sf_dir: str) -> DataFrame:

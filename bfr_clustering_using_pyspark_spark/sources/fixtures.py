@@ -2,17 +2,16 @@
 
 The staged-replay streaming operators drain a deterministic re-layout
 of a source table (weekly micro-batch splits of ``events``, chunked
-copies of ``documents``).  That layout is a pure function of the
-source data and the staging parameters, so it is persisted ONCE under
-the Spark warehouse and reused by every later session/process — the
-same artifact pattern as the NN-Descent index
-(operators/similarity.py): digest keyed by source path, params, the
+copies of ``documents``); the MinHash signature store and the
+NN-Descent index are built artifacts of the same kind.  Each is a pure
+function of the source data and its parameters, so it is persisted
+ONCE under the Spark warehouse and reused by every later
+session/process: digest keyed by source path, params, the
 source's ``corpus_version`` (functions/cache.py — data edits
 invalidate, also a part file rewritten inside a directory-layout
 table), and a format version (staging-code changes invalidate).
 
-Durability protocol (shared with the NND index store via
-``prune_store``):
+Durability protocol:
 
 - staging happens in a sibling temp dir, promoted by ONE atomic
   ``os.rename`` — a concurrent second stager loses the rename and
@@ -55,11 +54,9 @@ FIXTURE_STORE_MAX = 12
 PRUNE_GRACE_SEC = 3600.0
 
 
-def prune_store(
-    store_dir: str, keep: str, meta_name: str, max_keep: int = FIXTURE_STORE_MAX
-) -> None:
-    """Drop the oldest digest DIRS beyond ``max_keep``, never the one
-    just written. Meta-file mtime orders recency (it is written last,
+def prune_store(store_dir: str, keep: str, meta_name: str) -> None:
+    """Drop the oldest digest DIRS beyond ``FIXTURE_STORE_MAX``, never
+    the one just written. Meta-file mtime orders recency (it is written last,
     so a dir without one is torn and sorts first-to-prune). Nothing
     younger than ``PRUNE_GRACE_SEC`` is touched — see the module
     docstring — and plain files are skipped entirely so a stray lock
@@ -100,7 +97,7 @@ def prune_store(
     digests = sorted(
         (d for d in entries if not is_staging(d)), key=meta_mtime, reverse=True
     )
-    for d in digests[max_keep:]:
+    for d in digests[FIXTURE_STORE_MAX:]:
         full = os.path.join(store_dir, d)
         if os.path.abspath(full) != os.path.abspath(keep) and age_sec(d) > PRUNE_GRACE_SEC:
             shutil.rmtree(full, ignore_errors=True)

@@ -47,12 +47,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.tuning import (
-    drain_width,
-    scoped_shuffle_width,
-    scratch_dir,
-    shuffle_width,
-)
+from ..functions.tuning import scratch_dir, shuffle_width
 from ..operators.dedup import (
     CC_SMALL_PAIRS,
     _minhash_kernel,
@@ -63,7 +58,10 @@ from ..operators.dedup import (
     uf_labels,
     uf_union,
 )
-from ..sources.readers import load_table
+from .events_stream import drain, replay, staged_fixture
+
+# the documents table's stream schema
+_DOCS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
 
 
 def stream_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -73,19 +71,14 @@ def stream_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline actually watches). Stateless row-wise filter + one
     bounded aggregation: state is O(languages), not O(documents)."""
     from ..operators.textstats import quality_flag_expr
-    from .events_stream import _run_to_memory
 
-    docs = (
-        spark.readStream.schema("doc_id long, text string, lang string, source string, n_chars long")
-        .format("parquet")
-        .load(f"{sf_dir}/documents*.parquet")
-    )
+    docs = replay(spark, f"{sf_dir}/documents*.parquet", _DOCS_SCHEMA)
     agg = (
         docs.select("lang", quality_flag_expr(F.col("text")).cast("int").alias("passes_quality"))
         .groupBy("lang", "passes_quality")
         .agg(F.count("*").alias("n_docs"))
     )
-    out = _run_to_memory(agg, "stream_quality_filter_sink", mode="complete")
+    out = drain(agg, "stream_quality_filter_sink", mode="complete")
     return out.orderBy("lang", "passes_quality")
 
 
@@ -120,15 +113,8 @@ def stream_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch oracle under any batch split."""
     from ..functions.numeric import fixed_avg_int
     from ..operators.textstats import _tokens
-    from .events_stream import _run_to_memory
 
-    docs = (
-        spark.readStream.schema(
-            "doc_id long, text string, lang string, source string, n_chars long"
-        )
-        .format("parquet")
-        .load(f"{sf_dir}/documents*.parquet")
-    )
+    docs = replay(spark, f"{sf_dir}/documents*.parquet", _DOCS_SCHEMA)
     agg = (
         docs.select(
             "source",
@@ -143,7 +129,7 @@ def stream_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             fixed_avg_int(F.col("cnt_tokens"), 2).alias("avg_tokens_per_doc"),
         )
     )
-    out = _run_to_memory(agg, "stream_token_stats_sink", mode="complete")
+    out = drain(agg, "stream_token_stats_sink", mode="complete")
     return out.orderBy("source")
 
 
@@ -163,21 +149,11 @@ FROM t GROUP BY source ORDER BY source
 """
 
 
-def _chunked_docs_cached(spark: SparkSession, sf_dir: str, n_chunks: int) -> str:
-    """The chunked source corpus is a pure function of
-    (documents.parquet, n_chunks): persisted once under the warehouse
-    (sources/fixtures.py — version/format-keyed digest) and reused by
-    every session and process. The STATE dirs used by the drain stay
-    per-call — they accumulate and must start empty."""
-    from ..sources.fixtures import ensure_fixture
-
-    def stage(d: str) -> None:
-        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        docs.repartition(n_chunks).write.mode("overwrite").parquet(d)
-
-    return ensure_fixture(
-        spark, "streamcc_src", sf_dir, "documents.parquet", f"chunks={n_chunks}", stage
-    )
+def _batch_dirs(root: str) -> list[str]:
+    """The per-batch state subdirs written so far under ``root``, read
+    by explicit path: a glob read (``root/b*``) makes Spark probe the
+    glob as a literal path and log a FileNotFoundException stack."""
+    return [os.path.join(root, d) for d in sorted(os.listdir(root))]
 
 
 def stream_components(
@@ -214,7 +190,9 @@ def stream_components(
       is what runs at 100 TB; the driver tier only short-circuits
       deltas that provably fit in a few MB."""
     a_p, b_p = _minhash_params()
-    src = _chunked_docs_cached(spark, sf_dir, n_chunks)
+    src = staged_fixture(
+        spark, sf_dir, "streamcc_src", "documents", ["doc_id", "text"], n_chunks
+    )
 
     with tempfile.TemporaryDirectory(prefix="streamcc_", dir=scratch_dir()) as tmp:
         sig_path = f"{tmp}/state/sigs"
@@ -272,7 +250,7 @@ def stream_components(
                 # state lands at the DRAIN width, not the kernel width:
                 # the kernel stays n_part-wide (the repartition above),
                 # but writing its output from 32 tasks left 32 files
-                # per state subdir and every later b* glob scan paid
+                # per state subdir and every later scan of the state paid
                 # for all of them — the repartition here is a trivial
                 # shuffle of (doc_id, band, sig) triples that keeps
                 # the accumulated state scan-cheap (r15 surgery; same
@@ -285,7 +263,7 @@ def stream_components(
                     f"{sh_path}/b{batch_id:05d}"
                 )
                 new_bands = sp.read.parquet(f"{sig_path}/b{batch_id:05d}")
-                all_bands = sp.read.parquet(f"{sig_path}/b*")
+                all_bands = sp.read.parquet(*_batch_dirs(sig_path))
                 cand = (
                     new_bands.alias("n")
                     .join(
@@ -300,7 +278,7 @@ def stream_components(
                     )
                     .distinct()
                 )
-                all_sh = sp.read.parquet(f"{sh_path}/b*")
+                all_sh = sp.read.parquet(*_batch_dirs(sh_path))
                 sa = all_sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
                 sb = all_sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
                 inter = F.size(F.array_intersect("sh_a", "sh_b"))
@@ -441,26 +419,14 @@ def stream_components(
             finally:
                 base.unpersist()
 
-        # per-batch state is tiny relative to the cluster — bound the
-        # shuffle width during the drain (same reasoning as
-        # events_stream._run_to_memory: partition count is a
-        # per-deployment knob, not a per-query one). Width 4 measured
-        # ~1 s/drain faster than 8 at sf0.1 (identical labels): the
-        # fold's many small jobs are task-scheduling-bound, not
-        # data-bound, at any gate SF
-        with scoped_shuffle_width(spark, drain_width(spark)):
-            with tempfile.TemporaryDirectory(prefix="ckpt_", dir=scratch_dir()) as ckpt:
-                q = (
-                    spark.readStream.schema("doc_id long, text string")
-                    .format("parquet")
-                    .option("maxFilesPerTrigger", 1)
-                    .load(src)
-                    .writeStream.foreachBatch(process)
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
+        # the drain's narrow width: drain_width measured ~1 s/drain
+        # faster than 8 at sf0.1 (identical labels) — the fold's many
+        # small jobs are task-scheduling-bound, not data-bound
+        drain(
+            replay(spark, src, "doc_id long, text string", files_per_trigger=1),
+            "stream_components_sink",
+            sink=process,
+        )
 
         if lbl_state["uf"] is not None:
             # the whole corpus stayed under the driver bounds: emit
@@ -481,22 +447,6 @@ def stream_components(
             .orderBy("doc_id")
             .localCheckpoint(eager=True)
         )
-
-
-def _chunked_emb_labeled_cached(spark: SparkSession, sf_dir: str, n_chunks: int) -> str:
-    """Chunked (vec_id, embedding, label) source for the drift
-    stream — same fixture contract as ``_chunked_docs_cached``."""
-    from ..sources.fixtures import ensure_fixture
-
-    def stage(d: str) -> None:
-        emb = load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", "embedding", "label"
-        )
-        emb.repartition(n_chunks).write.mode("overwrite").parquet(d)
-
-    return ensure_fixture(
-        spark, "streamdrift_src", sf_dir, "embeddings.parquet", f"chunks={n_chunks}", stage
-    )
 
 
 def stream_drift_detect(spark: SparkSession, sf_dir: str, n_chunks: int = 3) -> DataFrame:
@@ -520,14 +470,12 @@ def stream_drift_detect(spark: SparkSession, sf_dir: str, n_chunks: int = 3) -> 
     aggregate. No driver-side fold at all (the aggregation lives in
     the streaming state store)."""
     from ..operators.embeddings_ops import DRIFT_SCALE, DRIFT_T
-    from .events_stream import _run_to_memory
 
-    src = _chunked_emb_labeled_cached(spark, sf_dir, n_chunks)
-    ev = (
-        spark.readStream.schema("vec_id long, embedding array<float>, label int")
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
+    src = staged_fixture(
+        spark, sf_dir, "streamdrift_src", "embeddings", ["vec_id", "embedding", "label"], n_chunks
+    )
+    ev = replay(
+        spark, src, "vec_id long, embedding array<float>, label int", files_per_trigger=1
     )
     cells = ev.select(
         "label",
@@ -541,7 +489,7 @@ def stream_drift_detect(spark: SparkSession, sf_dir: str, n_chunks: int = 3) -> 
     agg = cells.groupBy("label", "half", "pos").agg(
         F.sum("col").alias("s"), F.count("*").alias("n")
     )
-    sums = _run_to_memory(agg, "stream_drift_sink", mode="complete")
+    sums = drain(agg, "stream_drift_sink", mode="complete")
     # halves paired by conditional aggregation instead of a
     # self-join of the memory sink (a self-join of the same sink
     # lineage trips Spark's ambiguous-reference internal error);
@@ -574,20 +522,6 @@ def stream_drift_detect(spark: SparkSession, sf_dir: str, n_chunks: int = 3) -> 
         "centroid_shift",
         (F.col("centroid_shift") > DRIFT_T).alias("drifted"),
     ).orderBy("label")
-
-
-def _chunked_emb_cached(spark: SparkSession, sf_dir: str, n_chunks: int) -> str:
-    """Chunked embeddings source for the ANN index stream — same
-    fixture contract as ``_chunked_docs_cached``."""
-    from ..sources.fixtures import ensure_fixture
-
-    def stage(d: str) -> None:
-        emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        emb.repartition(n_chunks).write.mode("overwrite").parquet(d)
-
-    return ensure_fixture(
-        spark, "streamann_src", sf_dir, "embeddings.parquet", f"chunks={n_chunks}", stage
-    )
 
 
 def stream_ann_index(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> DataFrame:
@@ -624,7 +558,9 @@ def stream_ann_index(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> Dat
     )
     from pyspark.sql import Window as W
 
-    src = _chunked_emb_cached(spark, sf_dir, n_chunks)
+    src = staged_fixture(
+        spark, sf_dir, "streamann_src", "embeddings", ["vec_id", "embedding"], n_chunks
+    )
     # quantizer sizing = deployment config: expected volume is known
     # to the index owner before the stream starts (metadata count of
     # the staged source — NOT read per batch)
@@ -662,86 +598,76 @@ def stream_ann_index(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> Dat
             finally:
                 sp.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
 
-        # the scoped width covers BOTH the drain and the probe: the
-        # per-query window and final sort are over a bounded result
-        # (queries × top-k), so the narrow width costs nothing at
-        # scale while removing idle-task overhead at gate SFs
-        with scoped_shuffle_width(spark, drain_width(spark)):
-            with tempfile.TemporaryDirectory(prefix="ckpt_", dir=scratch_dir()) as ckpt:
-                # two chunk files per trigger: the face's contracts
-                # (multi-batch accumulation, per-batch idempotent
-                # retry) need >=2 batches, not one batch per file —
-                # halving the batch count halves the fixed micro-batch
-                # cost (offset commit, plan, write job) the r14 verdict
-                # flagged. In production the trigger size is the
-                # latency/throughput knob; the drained index is
-                # row-identical either way.
-                q = (
-                    spark.readStream.schema("vec_id long, embedding array<float>")
-                    .format("parquet")
-                    .option("maxFilesPerTrigger", max(1, n_chunks // 2))
-                    .load(src)
-                    .writeStream.foreachBatch(process)
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
+        # two chunk files per trigger: the face's contracts
+        # (multi-batch accumulation, per-batch idempotent retry) need
+        # >=2 batches, not one batch per file — halving the batch
+        # count halves the fixed micro-batch cost (offset commit,
+        # plan, write job). In production the trigger size is the
+        # latency/throughput knob; the drained index is row-identical
+        # either way.
+        drain(
+            replay(
+                spark, src, "vec_id long, embedding array<float>",
+                files_per_trigger=max(1, n_chunks // 2),
+            ),
+            "stream_ann_index_sink",
+            sink=process,
+        )
 
-            if not os.path.isdir(idx_path) or not os.listdir(idx_path):
-                return spark.createDataFrame(
-                    [], "q_id long, vec_id long, cosine double, rank int"
-                )
-            index = spark.read.parquet(idx_path).drop("batch")
+        if not os.path.isdir(idx_path) or not os.listdir(idx_path):
+            return spark.createDataFrame(
+                [], "q_id long, vec_id long, cosine double, rank int"
+            )
+        index = spark.read.parquet(idx_path).drop("batch")
 
-            ranked_q = _centroid_rank_expr("v", n_lists)
-            # eager checkpoint: the bounded query set (queries ×
-            # N_PROBE rows) feeds TWO consumers — the probe-list
-            # collect and the broadcast side of the scored join —
-            # and must not re-scan the index for each
-            queries = (
-                _bounded_query_filter(index)
-                .select(
-                    F.col("vec_id").alias("q_id"),
-                    F.col("v").alias("q_v"),
-                    F.col("nrm").alias("q_nrm"),
-                    F.explode(
-                        F.transform(F.slice(ranked_q, 1, N_PROBE), lambda s: s["j"])
-                    ).alias("probe_list"),
-                )
-                .localCheckpoint(eager=True)
+        ranked_q = _centroid_rank_expr("v", n_lists)
+        # eager checkpoint: the bounded query set (queries ×
+        # N_PROBE rows) feeds TWO consumers — the probe-list
+        # collect and the broadcast side of the scored join —
+        # and must not re-scan the index for each
+        queries = (
+            _bounded_query_filter(index)
+            .select(
+                F.col("vec_id").alias("q_id"),
+                F.col("v").alias("q_v"),
+                F.col("nrm").alias("q_nrm"),
+                F.explode(
+                    F.transform(F.slice(ranked_q, 1, N_PROBE), lambda s: s["j"])
+                ).alias("probe_list"),
             )
-            # union of probed lists is bounded by n_lists values, never
-            # data size — collecting it drives the partition pruning
-            probe_ids = sorted(
-                r[0] for r in queries.select("probe_list").distinct().collect()
-            )
-            data = index.filter(F.col("list_id").isin(probe_ids))
-            dot = F.aggregate(
-                F.zip_with("v", "q_v", lambda x, y: x * y),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            scored = data.join(
-                F.broadcast(queries),
-                (F.col("list_id") == F.col("probe_list"))
-                & (F.col("vec_id") != F.col("q_id")),
-            ).select(
-                "q_id",
-                "vec_id",
-                F.round(dot / (F.col("nrm") * F.col("q_nrm")), 4).alias("cosine"),
-            )
-            w = W.partitionBy("q_id").orderBy(F.desc("cosine"), "vec_id")
-            # eager checkpoint pins the tiny top-k before the index
-            # tempdir is removed
-            out = (
-                scored.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= TOP_K)
-                .select("q_id", "vec_id", "cosine", "rank")
-                .orderBy("q_id", "rank")
-                .localCheckpoint(eager=True)
-            )
-            return out
+            .localCheckpoint(eager=True)
+        )
+        # union of probed lists is bounded by n_lists values, never
+        # data size — collecting it drives the partition pruning
+        probe_ids = sorted(
+            r[0] for r in queries.select("probe_list").distinct().collect()
+        )
+        data = index.filter(F.col("list_id").isin(probe_ids))
+        dot = F.aggregate(
+            F.zip_with("v", "q_v", lambda x, y: x * y),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+        scored = data.join(
+            F.broadcast(queries),
+            (F.col("list_id") == F.col("probe_list"))
+            & (F.col("vec_id") != F.col("q_id")),
+        ).select(
+            "q_id",
+            "vec_id",
+            F.round(dot / (F.col("nrm") * F.col("q_nrm")), 4).alias("cosine"),
+        )
+        w = W.partitionBy("q_id").orderBy(F.desc("cosine"), "vec_id")
+        # eager checkpoint pins the tiny top-k before the index
+        # tempdir is removed
+        out = (
+            scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= TOP_K)
+            .select("q_id", "vec_id", "cosine", "rank")
+            .orderBy("q_id", "rank")
+            .localCheckpoint(eager=True)
+        )
+        return out
 
 
 def stream_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -761,7 +687,6 @@ def stream_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     from ..operators.sketches import CMS_D, CMS_W, _md5_bucket
-    from .events_stream import _run_to_memory  # noqa: F401  (shared pattern)
 
     state = np.zeros((CMS_D, CMS_W), dtype=np.int64)
 
@@ -788,21 +713,11 @@ def stream_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
         for row in cells:
             state[int(row["seed"]), int(row["bucket"])] += int(row["cnt"])
 
-    with scoped_shuffle_width(spark, drain_width(spark)):
-        with tempfile.TemporaryDirectory(prefix="ckpt_", dir=scratch_dir()) as ckpt:
-            q = (
-                spark.readStream.schema(
-                    "doc_id long, text string, lang string, source string, n_chars long"
-                )
-                .format("parquet")
-                .option("maxFilesPerTrigger", 1)
-                .load(f"{sf_dir}/documents*.parquet")
-                .writeStream.foreachBatch(update)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+    drain(
+        replay(spark, f"{sf_dir}/documents*.parquet", _DOCS_SCHEMA, files_per_trigger=1),
+        "stream_countmin_sink",
+        sink=update,
+    )
 
     rows = [
         {

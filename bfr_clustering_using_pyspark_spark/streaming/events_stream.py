@@ -12,21 +12,27 @@ At scale: watermark bounds the window state store; ``foreachBatch``
 keeps the BFR summary update incremental — each micro-batch
 contributes map-side partial N/Σ/Σ² rows, so state stays O(k·d)
 regardless of stream volume.
+
+Every streaming key in the package is built from three helpers here:
+``replay`` (the one file-source reader), ``drain`` (the one
+AvailableNow run, which records ``LAST_PROGRESS``) and
+``staged_fixture`` (the one persisted replay layout).
 """
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import tempfile
-from typing import Iterator
+from contextlib import ExitStack
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..functions.tuning import drain_width, scoped_shuffle_width, scratch_dir
 
@@ -39,63 +45,153 @@ def _half_away(x: float) -> float:
     banker's and must never feed a hash-gated value."""
     return float(np.floor(x + 0.5)) if x >= 0 else float(np.ceil(x - 0.5))
 
+def replay(
+    spark: SparkSession,
+    path: str,
+    schema=None,
+    files_per_trigger: int | None = None,
+) -> DataFrame:
+    """The one file-source reader: a parquet stream over ``path`` (a
+    file, a directory or a glob). File-source streams need an explicit
+    schema; without one it is read from the footer of the first file
+    the glob matches — a batch read of one path, never of the glob
+    itself (Spark probes a glob read as a literal path and logs a
+    FileNotFoundException stack per read). ``files_per_trigger`` caps
+    each micro-batch at that many files, which is what gives a staged
+    replay its batch boundaries."""
+    if schema is None:
+        schema = spark.read.parquet((sorted(glob.glob(path)) or [path])[0]).schema
+    reader = spark.readStream.schema(schema).format("parquet")
+    if files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", files_per_trigger)
+    return reader.load(path)
+
+
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # File-source streams need an explicit schema; derive it from a
-    # batch scan of the same path (footer metadata only — no data
-    # read) so the stream always agrees with what's on disk, then
-    # normalize ts exactly as the batch reader does.
+    # normalize ts exactly as the batch reader does
     from ..sources.readers import enable_nanos_scan, ensure_utc, normalize_ts
 
     ensure_utc(spark)
     # same nanos defense as the batch reader — without it, a
-    # TIMESTAMP(NANOS) events file would fail this schema probe (and
+    # TIMESTAMP(NANOS) events file would fail the schema probe (and
     # the stream scan) before normalize_ts's LONG branch could fire
     enable_nanos_scan(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    raw = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        # glob (not bare file path) so the file-stream source treats
-        # the parent as basePath and picks up late-arriving files
-        .load(f"{sf_dir}/events*.parquet")
-    )
+    # glob (not bare file path) so the file-stream source treats the
+    # parent as basePath and picks up late-arriving files; the schema
+    # comes from events.parquet, the glob's first match
+    raw = replay(spark, f"{sf_dir}/events*.parquet")
     # Watermarks require TIMESTAMP (not TIMESTAMP_NTZ); ensure_utc
     # above pins the session tz so the cast is value-preserving even
     # under a caller-provided vanilla session on a non-UTC host.
     return normalize_ts(raw).withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-# per-query StreamingQueryProgress dicts from the most recent drain —
-# tests assert engine metrics (e.g. numRowsDroppedByWatermark) against
-# oracle predictions
+# name -> StreamingQueryProgress list of the most recent drain of that
+# name; every drain records here (tests assert engine metrics such as
+# numRowsDroppedByWatermark against oracle predictions, and perfbench
+# sums the micro-batch machinery from it)
 LAST_PROGRESS: dict[str, list] = {}
 
 
-def _run_to_memory(
-    stream_df: DataFrame, query_name: str, mode: str = "append", width: int | None = None
-) -> DataFrame:
+def drain(
+    stream_df: DataFrame,
+    name: str,
+    sink: Callable[[DataFrame, int], None] | str | None = None,
+    mode: str = "append",
+    width: int | None = None,
+    checkpoint: str | None = None,
+) -> DataFrame | None:
+    """The one AvailableNow drain: run ``stream_df`` until everything
+    available is processed, then record ``LAST_PROGRESS[name]``.
+
+    - ``sink``: ``None`` is a memory sink named ``name``, returned as
+      ``spark.table(name)``; a callable runs as ``foreachBatch``; a
+      string is the path of a parquet file sink. The last two return
+      ``None``.
+    - ``width``: the shuffle width while the drain runs, by default
+      ``drain_width`` — each stateful partition is one state store
+      paying per-micro-batch restore/commit I/O (4 measured faster
+      than 8, 8 beat 32 by ~4×). A drain whose per-row work
+      dominates that cost passes a wider one.
+    - ``checkpoint``: a fresh ``TemporaryDirectory`` under
+      ``scratch_dir`` (tmpfs takes the per-batch metadata writes),
+      unless the caller passes one that must outlive the drain — a
+      restart resuming from it."""
     spark = stream_df.sparkSession
-    # Stateful streaming pays a per-partition state-store cost each
-    # micro-batch (drain_width: 4 measured faster than 8, 8 beat 32 by
-    # ~4× — a real cluster sizes this per deployment via
-    # $SPARK_GRAFT_STREAM_WIDTH, since the partition count is fixed at
-    # first checkpoint). ``width`` overrides for drains whose per-row
-    # work dominates the store cost (the Python-stateful sessionizer).
-    # The checkpoint is ephemeral per drain → scratch_dir puts its
-    # per-batch metadata writes on tmpfs.
-    with scoped_shuffle_width(spark, width or drain_width(spark)):
-        with tempfile.TemporaryDirectory(prefix="ckpt_", dir=scratch_dir()) as ckpt:
-            q = (
-                stream_df.writeStream.format("memory")
-                .queryName(query_name)
-                .outputMode(mode)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+    writer = stream_df.writeStream.queryName(name).outputMode(mode)
+    if sink is None:
+        writer = writer.format("memory")
+    elif callable(sink):
+        writer = writer.foreachBatch(sink)
+    else:
+        writer = writer.format("parquet").option("path", sink)
+    with ExitStack() as stack:
+        if checkpoint is None:
+            checkpoint = stack.enter_context(
+                tempfile.TemporaryDirectory(prefix="ckpt_", dir=scratch_dir())
             )
-            q.awaitTermination()
-            LAST_PROGRESS[query_name] = list(q.recentProgress)
-    return spark.table(query_name)
+        stack.enter_context(scoped_shuffle_width(spark, width or drain_width(spark)))
+        q = (
+            writer.option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        LAST_PROGRESS[name] = list(q.recentProgress)
+    return spark.table(name) if sink is None else None
+
+
+def _pin_batch_mtime(path: str, b: int) -> None:
+    """File-source replay order is (mtime, path): pin a staged batch
+    directory (and its part files) to a deterministic stamp so
+    micro-batch order is stable across filesystems. The ONE copy of
+    the stamp formula — staging and cache-copying must agree."""
+    stamp = (1_000_000 + b, 1_000_000 + b)
+    os.utime(path, stamp)
+    for part in os.listdir(path):
+        os.utime(os.path.join(path, part), stamp)
+
+
+def staged_fixture(
+    spark: SparkSession,
+    sf_dir: str,
+    kind: str,
+    table: str,
+    columns: list,
+    n: int,
+    batch: Column | None = None,
+) -> str:
+    """The one staged-replay source: ``columns`` of ``table`` laid out
+    for file-source replay and persisted once under the warehouse by
+    ``ensure_fixture`` (keyed by the table's corpus version and n),
+    so every session and process reuses it. The caller's per-drain state dirs stay per call.
+
+    - ``batch=None``: ``repartition(n)`` into the fixture dir, i.e. n
+      part files replayed as chunks;
+    - otherwise ``batch`` gives each row its micro-batch index in
+      ``0..n-1``: one single-part-file ``batch_{b:03d}.parquet`` per
+      index (``files_per_trigger=1`` replays FILES, so a slice of many
+      part files would split into many batches), mtime-pinned so the
+      replay runs in index order."""
+    from ..sources.fixtures import ensure_fixture
+    from ..sources.readers import load_table
+
+    def stage(d: str) -> None:
+        base = load_table(spark, sf_dir, table).select(*columns)
+        if batch is None:
+            base.repartition(n).write.mode("overwrite").parquet(d)
+            return
+        staged = base.withColumn("_batch", batch)
+        for b in range(n):
+            path = os.path.join(d, f"batch_{b:03d}.parquet")
+            staged.filter(F.col("_batch") == b).drop("_batch").coalesce(1).write.mode(
+                "overwrite"
+            ).parquet(path)
+            _pin_batch_mtime(path, b)
+
+    return ensure_fixture(
+        spark, kind, sf_dir, f"{table}.parquet", f"chunks={n}", stage
+    )
 
 
 def stream_events_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -120,7 +216,7 @@ def stream_events_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    out = _run_to_memory(agg, "stream_events_window_sink", mode="append")
+    out = drain(agg, "stream_events_window_sink", mode="append")
     return out.orderBy("window_start", "event_type")
 
 
@@ -147,7 +243,7 @@ def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    out = _run_to_memory(agg, "stream_sliding_window_sink", mode="append")
+    out = drain(agg, "stream_sliding_window_sink", mode="append")
     return out.orderBy("window_start", "event_type")
 
 
@@ -175,40 +271,19 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     (read previous version ∪ batch → re-aggregate → write next
     version — the read-modify-write every lakehouse MERGE performs,
     with versioned directories standing in for table-format
-    transactions). Four deterministic staged batches (event_id % 4)
-    replay through maxFilesPerTrigger=1; the per-user totals are
-    associative, so the final state equals the one-shot batch
-    aggregate REGARDLESS of batch boundaries — which is exactly what
-    the oracle checks, making the exactly-once upsert loop itself
-    the thing under test."""
-    import os
-    import shutil
-
-    from ..sources.readers import load_table
-
-    root = tempfile.mkdtemp(prefix="upsert_", dir=scratch_dir())
-    try:
-        src = os.path.join(root, "src")
-        base = load_table(spark, sf_dir, "events").select(
-            "user_id", "event_id", "value"
-        )
-        for b in range(4):
-            # one part-file per staged slice: maxFilesPerTrigger=1
-            # replays FILES, not directories, so without the
-            # coalesce each slice's many part-files would each
-            # become a micro-batch and the intended four batch
-            # boundaries would never occur
-            base.filter(F.pmod("event_id", F.lit(4)) == b).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(src, f"batch_{b:03d}.parquet"))
-        schema = spark.read.parquet(os.path.join(src, "batch_000.parquet")).schema
-        raw = (
-            spark.readStream.schema(schema)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(os.path.join(src, "batch_*.parquet"))
-        )
-
+    transactions). Four deterministic staged batches (event_id % 4,
+    the persisted ``upsert_slices`` fixture) replay one file per
+    trigger; the per-user totals are associative, so the final state
+    equals the one-shot batch aggregate REGARDLESS of batch
+    boundaries — which is exactly what the oracle checks, making the
+    exactly-once upsert loop itself the thing under test. The state
+    dirs stay per call: they accumulate and must start empty."""
+    src = staged_fixture(
+        spark, sf_dir, "upsert_slices", "events", ["user_id", "event_id", "value"],
+        4, batch=F.pmod("event_id", F.lit(4)),
+    )
+    raw = replay(spark, os.path.join(src, "batch_*.parquet"), files_per_trigger=1)
+    with tempfile.TemporaryDirectory(prefix="upsert_", dir=scratch_dir()) as root:
         state = {"dir": None}
         cents = F.round(F.col("value") * 100.0).cast("long")
 
@@ -231,14 +306,7 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             agg.write.mode("overwrite").parquet(new_dir)
             state["dir"] = new_dir
 
-        with tempfile.TemporaryDirectory(prefix="ckpt_", dir=scratch_dir()) as ckpt:
-            q = (
-                raw.writeStream.foreachBatch(upsert)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        drain(raw, "stream_upsert_sink", sink=upsert)
         return (
             spark.read.parquet(state["dir"])
             .select(
@@ -249,8 +317,6 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("user_id")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 STREAM_UPSERT_SINK_SQL = """
@@ -268,7 +334,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events_stream(spark, sf_dir)
     deduped = ev.withWatermark("ts", "2 hours").dropDuplicates(["event_id"])
     agg = deduped.groupBy("event_type").agg(F.count("*").alias("n_unique_events"))
-    out = _run_to_memory(agg, "stream_dedup_sink", mode="complete")
+    out = drain(agg, "stream_dedup_sink", mode="complete")
     return out.orderBy("event_type")
 
 
@@ -294,7 +360,7 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "session_value",
         )
     )
-    out = _run_to_memory(agg, "stream_session_window_sink", mode="append")
+    out = drain(agg, "stream_session_window_sink", mode="append")
     return out.orderBy("user_id", "session_start")
 
 
@@ -330,7 +396,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
         & (F.col("c_ts") <= F.col("p_ts")),
     ).select("p_user", "p_id", "c_id")
-    out = _run_to_memory(joined, "stream_stream_join_sink", mode="append")
+    out = drain(joined, "stream_stream_join_sink", mode="append")
     return (
         out.groupBy(F.col("p_user").alias("user_id"))
         .agg(F.count("*").alias("n_pairs"), F.countDistinct("p_id").alias("n_purchases_with_click"))
@@ -402,7 +468,7 @@ def stream_sessionize_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf0.1 — cap at 16, still bounded by the session width
     from ..functions.tuning import shuffle_width
 
-    res = _run_to_memory(
+    res = drain(
         out,
         "stream_sessionize_sink",
         mode="append",
@@ -440,14 +506,7 @@ def stream_bfr_update(spark: SparkSession, sf_dir: str) -> DataFrame:
             acc = state.setdefault(int(row["bucket"]), np.zeros(3, dtype=np.int64))
             acc += np.array([row["n"], row["s"], row["sq"]], dtype=np.int64)
 
-    with tempfile.TemporaryDirectory(prefix="ckpt_", dir=scratch_dir()) as ckpt:
-        q = (
-            ev.writeStream.foreachBatch(update)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(ev, "stream_bfr_update_sink", sink=update)
 
     def _fixed4(x: float) -> float:
         # scale-0 round at 1e-4 units, half away from zero like the
@@ -493,6 +552,7 @@ def stream_bfr_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation (O(k·d) driver state) — the ``stream_bfr_update``
     cost shape with the real gate."""
     from ..plans.ml_queries import (
+        BDET_CHUNKS,
         BDET_SCALE,
         _bdet_alpha_label,
         _bdet_fold,
@@ -503,69 +563,31 @@ def stream_bfr_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         _micro_units,
     )
 
-    # the chunked replay source is a pure function of
-    # (embeddings.parquet, BDET_CHUNKS): persisted once under the
-    # warehouse (sources/fixtures.py — version/format-keyed digest;
-    # the pinned mtimes survive on disk, so replay order is stable)
-    # and reused by every session and process, exactly like the
-    # staged weekly events replay — re-staging per call cost ~0.8 s
-    # of coalesce(1) write jobs at sf0.1
-    src = _staged_bdet_chunks(spark, sf_dir)
-    schema = spark.read.parquet(os.path.join(src, "batch_000.parquet")).schema
-    raw = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(os.path.join(src, "batch_*.parquet"))
+    # the chunked replay source is a persisted fixture — re-staging
+    # per call cost ~0.8 s of coalesce(1) write jobs at sf0.1
+    src = staged_fixture(
+        spark, sf_dir, "bdet_chunks", "embeddings", ["vec_id", "embedding"],
+        BDET_CHUNKS, batch=F.pmod("vec_id", F.lit(BDET_CHUNKS)),
     )
+    raw = replay(spark, os.path.join(src, "batch_*.parquet"), files_per_trigger=1)
 
     mom = _bdet_moments()
     rounds: list[dict[int, int]] = []  # in batch order
 
     def step(bdf: DataFrame, bid: int) -> None:
-        ch = bdf.select("vec_id", _micro_units(BDET_SCALE).alias("xi"))
+        # pinned: the init's seed and Lloyd jobs would each re-read
+        # the batch file (and count it again in numInputRows)
+        ch = bdf.select("vec_id", _micro_units(BDET_SCALE).alias("xi")).localCheckpoint(
+            eager=True
+        )
         if rounds:
             assign = _bdet_alpha_label(*_bdet_gate_parts(mom))
         else:
             assign = _bdet_init_assign(ch)
         rounds.append(_bdet_fold(mom, ch.select("vec_id", "xi", assign.alias("cluster"))))
 
-    with tempfile.TemporaryDirectory(prefix="ckpt_", dir=scratch_dir()) as ckpt:
-        q = (
-            raw.writeStream.foreachBatch(step)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(raw, "stream_bfr_rounds_sink", sink=step)
     return _bdet_stats_frame(spark, rounds)
-
-
-def _staged_bdet_chunks(spark: SparkSession, sf_dir: str) -> str:
-    """The BDET chunk replay layout (``vec_id % BDET_CHUNKS`` slices of
-    ``embeddings``, one part-file each, mtime-pinned) as a persisted
-    fixture — same contract as ``_staged_weekly_cached``."""
-    from ..plans.ml_queries import BDET_CHUNKS
-    from ..sources.fixtures import ensure_fixture
-    from ..sources.readers import load_table
-
-    def stage(d: str) -> None:
-        base = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        for b in range(BDET_CHUNKS):
-            p = os.path.join(d, f"batch_{b:03d}.parquet")
-            base.filter(
-                F.pmod("vec_id", F.lit(BDET_CHUNKS)) == b
-            ).coalesce(1).write.mode("overwrite").parquet(p)
-            _pin_batch_mtime(p, b)
-
-    return ensure_fixture(
-        spark,
-        "bdet_chunks",
-        sf_dir,
-        "embeddings.parquet",
-        f"chunks={BDET_CHUNKS}",
-        stage,
-    )
 
 
 # ---------------- batch-equivalent oracles ----------------
@@ -710,7 +732,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         # integer-cents partial: the two-level sum stays exact
         F.sum(F.round(F.col("value") * 100.0).cast("long")).alias("s"),
     )
-    out = _run_to_memory(agg, "stream_static_join_sink", mode="complete")
+    out = drain(agg, "stream_static_join_sink", mode="complete")
     return (
         out.groupBy("c_mktsegment")
         .agg(
@@ -756,65 +778,17 @@ def stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("window_start")
 
 
-def _pin_batch_mtime(path: str, b: int) -> None:
-    """File-source replay order is (mtime, path): pin a staged batch
-    directory (and its part files) to a deterministic stamp so
-    micro-batch order is stable across filesystems. The ONE copy of
-    the stamp formula — staging and cache-copying must agree."""
-    stamp = (1_000_000 + b, 1_000_000 + b)
-    os.utime(path, stamp)
-    for part in os.listdir(path):
-        os.utime(os.path.join(path, part), stamp)
-
-
-def _stage_weekly_batches(spark: SparkSession, sf_dir: str, stage_dir: str) -> None:
-    """Stage events into four mtime-ordered micro-batch parquet files
-    (weekly splits, 4% two-batch stragglers) for deterministic
-    file-source replay, written into ``stage_dir``. Ops that need a
-    subset or a two-sitting layout copy from the persisted fixture
-    with ``_copy_staged_batches``."""
-    from ..sources.readers import ensure_utc, load_table
-
-    ensure_utc(spark)
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", F.col("ts").cast("timestamp").alias("ts"), "value"
-    )
+def _weekly_replay(spark: SparkSession, sf_dir: str) -> str:
+    """The staged weekly replay of events: four files by calendar week
+    (days 1-8 / 9-16 / 17-24 / 25-31), every 25th event held back two
+    batches. Three keys replay it (late_data / update_counts
+    append+update drains, checkpoint_recovery's two-sitting restart,
+    which file-copies its sittings from the fixture)."""
     week = F.floor((F.dayofmonth("ts") - 1) / 8).cast("int")
-    batch = (
-        F.when(F.col("event_id") % 25 == 0, F.least(week + 2, F.lit(3)))
-        .otherwise(week)
-    )
-    staged = ev.withColumn("batch", batch)
-    for b in range(4):
-        path = os.path.join(stage_dir, f"batch_{b:03d}.parquet")
-        (
-            staged.filter(F.col("batch") == b)
-            .drop("batch")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-        _pin_batch_mtime(path, b)
-
-
-def _staged_weekly_cached(spark: SparkSession, sf_dir: str) -> str:
-    """The staged weekly replay is a pure function of events.parquet:
-    three keys replay it (late_data / update_counts append+update
-    drains, checkpoint_recovery's two-sitting restart). It is
-    persisted ONCE under the warehouse (sources/fixtures.py —
-    version/format-keyed digest) and reused by every session AND
-    process; checkpoint_recovery file-copies its two sittings from
-    the fixture instead of re-running Spark filters. The pinned
-    absolute mtimes survive on disk, so replay order is stable."""
-    from ..sources.fixtures import ensure_fixture
-
-    return ensure_fixture(
-        spark,
-        "staged_weekly",
-        sf_dir,
-        "events.parquet",
-        "weekly4",
-        lambda d: _stage_weekly_batches(spark, sf_dir, d),
+    return staged_fixture(
+        spark, sf_dir, "staged_weekly", "events",
+        ["event_id", F.col("ts").cast("timestamp").alias("ts"), "value"], 4,
+        batch=F.when(F.col("event_id") % 25 == 0, F.least(week + 2, F.lit(3))).otherwise(week),
     )
 
 
@@ -850,21 +824,11 @@ def _hourly_agg(raw: DataFrame) -> DataFrame:
 def _staged_replay_agg(
     spark: SparkSession, sf_dir: str, sink: str, mode: str
 ) -> DataFrame:
-    """The shared windowed aggregation over the staged 4-batch replay
-    (1-hour tumbling windows, 30-minute watermark), drained in the
-    given output mode. The staged dir is the session-cached one —
-    the drain only READS it, so sharing is safe."""
-    stage_dir = _staged_weekly_cached(spark, sf_dir)
-    schema = spark.read.parquet(
-        os.path.join(stage_dir, "batch_000.parquet")
-    ).schema
-    raw = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(os.path.join(stage_dir, "batch_*.parquet"))
-    )
-    return _run_to_memory(_hourly_agg(raw), sink, mode=mode)
+    """The shared windowed aggregation over the staged 4-batch replay,
+    drained in the given output mode. The drain only READS the
+    persisted fixture, so sharing it is safe."""
+    src = os.path.join(_weekly_replay(spark, sf_dir), "batch_*.parquet")
+    return drain(_hourly_agg(replay(spark, src, files_per_trigger=1)), sink, mode=mode)
 
 
 def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -887,42 +851,17 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     delay). The oracle encodes that collapsed-lag rule; emission is
     unchanged (window end ≤ global max − delay — the file-sink
     commit log makes the append exactly-once across the restart)."""
-    stage_dir = tempfile.mkdtemp(prefix="ckpt_rec_", dir=scratch_dir())
-    out = os.path.join(stage_dir, "out")
-    ck = os.path.join(stage_dir, "ck")
-    src_glob = os.path.join(stage_dir, "batch_*.parquet")
-
-    def run_phase() -> None:
-        schema = spark.read.parquet(
-            os.path.join(stage_dir, "batch_000.parquet")
-        ).schema
-        raw = (
-            spark.readStream.schema(schema)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(src_glob)
-        )
-        with scoped_shuffle_width(spark, drain_width(spark)):
-            q = (
-                _hourly_agg(raw)
-                .writeStream.format("parquet")
-                .option("path", out)
-                .outputMode("append")
-                .option("checkpointLocation", ck)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-    try:
-        # two sittings from the session-cached staging (identical
-        # files — _stage_weekly_batches is deterministic per batch):
-        # phase 1 must see ONLY files 0-1, so copy incrementally
-        cached = _staged_weekly_cached(spark, sf_dir)
-        _copy_staged_batches(cached, stage_dir, [0, 1])
-        run_phase()
-        _copy_staged_batches(cached, stage_dir, [2, 3])
-        run_phase()
+    with tempfile.TemporaryDirectory(prefix="ckpt_rec_", dir=scratch_dir()) as stage_dir:
+        out = os.path.join(stage_dir, "out")
+        ck = os.path.join(stage_dir, "ck")
+        src = os.path.join(stage_dir, "batch_*.parquet")
+        # two sittings copied from the persisted staging: phase 1 must
+        # see ONLY files 0-1, so copy incrementally
+        cached = _weekly_replay(spark, sf_dir)
+        for batches in ([0, 1], [2, 3]):
+            _copy_staged_batches(cached, stage_dir, batches)
+            raw = replay(spark, src, files_per_trigger=1)
+            drain(_hourly_agg(raw), "stream_checkpoint_recovery_sink", sink=out, checkpoint=ck)
         # pin the sink table on executors before the staging dir dies
         # (eager localCheckpoint, not a driver collect — the hourly
         # window table is calendar-bounded but there is no reason to
@@ -937,8 +876,6 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("window_start")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(stage_dir, ignore_errors=True)
 
 
 STREAM_CHECKPOINT_RECOVERY_SQL = """

@@ -270,39 +270,6 @@ class TestNNDIndexPersistence:
         S._nnd_graph(spark, str(d))
         assert S.NND_BUILD_COUNT == builds + 1
 
-    def test_store_retention_prunes_oldest_never_current(self, tmp_path):
-        """The on-disk store is bounded: transient corpora (tests,
-        fuzz datasets) each write a digest dir, so the store prunes
-        the OLDEST beyond NND_STORE_MAX — never the dir just written.
-        STALE torn dirs (no meta file, older than an hour) prune
-        first; a FRESH torn dir is spared (it may be a concurrent
-        build in another process that hasn't written its meta yet)."""
-        import json
-        import os
-
-        import bfr_clustering_using_pyspark_spark.operators.similarity as S
-
-        store = tmp_path / "nnd_index"
-        store.mkdir()
-        for i in range(S.NND_STORE_MAX + 3):
-            d = store / f"digest{i:02d}"
-            d.mkdir()
-            with open(d / "_index_meta.json", "w") as fh:
-                json.dump({"n_vectors": 1}, fh)
-            os.utime(d / "_index_meta.json", (1000 + i, 1000 + i))
-        stale_torn = store / "stale_torn"
-        stale_torn.mkdir()
-        os.utime(stale_torn, (1000, 1000))  # ancient, no meta: prunes
-        fresh_torn = store / "fresh_torn"
-        fresh_torn.mkdir()  # just created: possibly a live build
-        current = store / f"digest{S.NND_STORE_MAX + 2:02d}"
-        S._prune_nnd_store(str(store), keep=str(current))
-        left = sorted(os.listdir(store))
-        assert "stale_torn" not in left
-        assert "fresh_torn" in left  # spared: could be mid-write
-        assert current.name in left  # newest (just written) survives
-        assert "digest00" not in left and "digest01" not in left
-
 
 def test_pq_recall_and_determinism(spark):
     """PQ at 8×4-bit codes (64× compression) + exact re-rank of the

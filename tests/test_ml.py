@@ -14,7 +14,7 @@ import pytest
 
 from bfr_clustering_using_pyspark_spark.ml import BFR, BFRConfig, LocalKMeans, nmi_score
 from bfr_clustering_using_pyspark_spark.ml.bfr import Summaries, mahalanobis_to_all
-from bfr_clustering_using_pyspark_spark.ml.kmeans import dataframe_kmeans, mllib_kmeans
+from bfr_clustering_using_pyspark_spark.ml.kmeans import mllib_kmeans
 from bfr_clustering_using_pyspark_spark.ml.metrics import nmi_from_contingency
 from tests.conftest import SF_SMALL
 
@@ -87,14 +87,6 @@ class TestDistributedKMeans:
         pdf = assigned.toPandas()
         truth = pd.Series(y, index=np.arange(len(y)))
         assert local_nmi(pdf["cluster"], truth[pdf["id"]].to_numpy()) > 0.99
-
-    def test_dataframe_kmeans_recovers_blobs(self, spark):
-        X, y = make_blobs()
-        assigned, centers = dataframe_kmeans(to_df(spark, X, y), k=8, n_iterations=5)
-        pdf = assigned.toPandas()
-        truth = pd.Series(y, index=np.arange(len(y)))
-        assert local_nmi(pdf["cluster"], truth[pdf["id"]].to_numpy()) > 0.99
-        assert centers.shape == (8, 16)
 
 
 class TestBFR:
@@ -346,22 +338,6 @@ class TestMultiSeedRestart:
         )
         got = get_inertia(to_df(spark, X, y), centers)
         assert abs(got - want) / want < 1e-9
-
-    def test_multiseed_is_deterministic_and_never_worse(self, spark):
-        from bfr_clustering_using_pyspark_spark.ml.kmeans import get_inertia
-
-        X, y = make_blobs(n=800, k=6, d=8, seed=3)
-        df = to_df(spark, X, y).persist()
-        _, c1a = dataframe_kmeans(df, k=6, n_iterations=3, seed=11, n_seeds=3)
-        _, c1b = dataframe_kmeans(df, k=6, n_iterations=3, seed=11, n_seeds=3)
-        assert np.array_equal(c1a, c1b)  # same seeds → same selection
-        single = min(
-            get_inertia(df, dataframe_kmeans(df, k=6, n_iterations=3, seed=11 + i)[1])
-            for i in range(3)
-        )
-        multi = get_inertia(df, c1a)
-        assert multi <= single + 1e-6  # best-of-3 == min over the 3 runs
-        df.unpersist()
 
     def test_mllib_multiseed_never_worse(self, spark):
         X, y = make_blobs(n=600, k=5, d=8, seed=9)

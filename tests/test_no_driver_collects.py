@@ -27,7 +27,7 @@ WHITELIST = {
     "cli.py": (1, "reference output contract: point->cluster JSON map (bfr.py:453-468 parity)"),
     "sources/sinks.py": (1, "same reference output contract, library face"),
     "ml/bfr.py": (4, "1-row id-range agg; 1-row dim probe; seeded init sample; O(k*d) per-chunk suffstats feedback"),
-    "ml/kmeans.py": (3, "seeded init sample; O(k*d) centroid frame per round; O(num_batches) inertia partial-sum fold (get_inertia)"),
+    "ml/kmeans.py": (1, "O(num_batches) inertia partial-sum fold (get_inertia)"),
     "ml/metrics.py": (1, "O(k^2) contingency table for NMI"),
     "plans/ml_queries.py": (5, "_lloyd_rounds: O(k*d) centroid sums per Lloyd round (kmeans_lloyd_det and the det-BFR init); _bdet_init_assign: K one-row farthest-point TakeOrdereds (2 head sites); _bdet_fold: <=K+1 integer-moment rows per chunk (every det-BFR face and stream_bfr_rounds); cap/regate epoch: <=BDET_CS_RETAIN (vec_id, xi) rows per chunk, which are the CS pool — all bounded by k*d or the constant pool cap, never n"),
     "plans/events.py": (1, "per-event-type counts (bounded by distinct types)"),

@@ -77,3 +77,43 @@ def test_key_is_bit_identical_under_any_shuffle_width(spark, key):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     assert len(hashes) == 1, f"{key}: result depends on shuffle width"
+
+
+def test_bfr_fit_stream_is_partition_invariant(spark):
+    """The user-facing BFR must label every point the same however its
+    chunks are partitioned: ``fit_stream`` over the same chunks read as
+    1 and as 4 partitions returns identical (id, cluster) rows. The
+    init sample is the partition-sensitive step (a per-partition RNG
+    draw would pick a different sample), so it is drawn by a seeded
+    hash of the id; outliers and a small ``rs_max`` put points through
+    RS and CS too."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from bfr_clustering_using_pyspark_spark.ml import BFR, BFRConfig
+
+    rng = np.random.default_rng(5)
+    centers = rng.normal(0, 10.0, (5, 6))
+    X = np.vstack(
+        [centers[rng.integers(0, 5, 3000)] + rng.normal(0, 0.5, (3000, 6)),
+         rng.normal(0, 50.0, (60, 6))]
+    )
+    pts = spark.createDataFrame(
+        pd.DataFrame({"id": np.arange(len(X)), "features": list(X)})
+    ).localCheckpoint(eager=True)
+    bounds = np.linspace(0, len(X), 4).astype(int)
+    chunks = [
+        pts.filter((F.col("id") >= int(lo)) & (F.col("id") < int(hi)))
+        for lo, hi in zip(bounds[:-1], bounds[1:])
+    ]
+    cfg = BFRConfig(n_clusters=5, n_chunks=3, rs_max=20)
+    got = [
+        sorted(
+            tuple(r)
+            for r in BFR(cfg).fit_stream([layout(c) for c in chunks]).collect()
+        )
+        for layout in (lambda c: c.coalesce(1), lambda c: c.repartition(4))
+    ]
+    assert len(got[0]) == len(X)
+    assert got[0] == got[1]

@@ -534,3 +534,23 @@ def test_stream_drift_detect_matches_batch(spark):
     want = [tuple(r) for r in q_drift_detect(spark, SF_SMALL).collect()]
     assert got == want
     assert len(got) > 0
+
+
+@pytest.mark.parametrize(
+    "key,table",
+    [("stream_bfr_rounds", "embeddings"), ("stream_countmin", "documents")],
+)
+def test_foreach_batch_drain_records_progress(spark, key, table):
+    """Every drain records its micro-batch progress, foreachBatch
+    drains included: the recorded batches must account for every
+    source row exactly once."""
+    from bfr_clustering_using_pyspark_spark.sources.readers import load_table
+    from bfr_clustering_using_pyspark_spark.streaming.events_stream import (
+        LAST_PROGRESS,
+    )
+
+    LAST_PROGRESS.pop(f"{key}_sink", None)
+    QUERIES[key](spark, SF_SMALL).collect()
+    progress = LAST_PROGRESS[f"{key}_sink"]
+    assert progress
+    assert sum(p.numInputRows for p in progress) == load_table(spark, SF_SMALL, table).count()
