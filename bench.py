@@ -1,9 +1,13 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+"""Time registry keys on the corpus at $SPARK_GRAFT_SF_DIR (default:
+the sf0.1 test corpus) through ``time_key``, the measurement every
+timing tool outside perfbench shares.
 
-Prints ONE JSON line:
-{"metric": "...", "value": total_sec, "unit": "sec",
- "queries": {name: sec, ...}, "sf": ...}
+Usage: python bench.py [key ...]   (default: KEYS)
+
+Each key runs once cold (its first run in this session) and twice
+warm. Prints ONE JSON line: per-key ``cold_s``/``warm_s``/``build_s``,
+their best-warm total as ``value``, and the session's ``cpus``,
+``sf``, ``load1`` and ``canary_s``.
 """
 
 from __future__ import annotations
@@ -15,7 +19,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-HEADLINE = [
+# scans, joins, sessionization, dedup, ANN, k-means and BFR, then the
+# iterative graph and streaming families, the retrieval faces and the
+# hash-gated det-BFR
+KEYS = [
     "q1_pricing_summary",
     "q3_shipping_priority",
     "q5_local_supplier",
@@ -29,94 +36,21 @@ HEADLINE = [
     "ann_bruteforce",
     "kmeans_fit",
     "bfr_fit",
-]
-
-# Expensive families the headline set never times — tracked separately
-# (single iteration, NOT in the headline total, which stays comparable
-# to the frozen r1 baseline) so round-over-round regressions here are
-# visible in BENCH_r{N}.json.
-EXTRAS = [
     "dedup_components",
     "stream_components",
     "graph_pagerank",
-    # r11 retrieval faces — tracked so ranking-path regressions show
     "text_bm25",
     "q_hybrid_rrf",
     "corpus_train_shuffle",
-    # r13: the namesake hash gate + the streaming IVF index fold
     "bfr_lloyd_det",
     "stream_ann_index",
 ]
 
 
-LOAD_GATE = 1.5  # accept the record only below this 1-min loadavg
-LOAD5_GATE = 3.0  # ...and this 5-min loadavg (a momentary dip in
-# load1 while load5 is high means the co-tenant merely paused —
-# observed: gate passed at load1 1.09 / load5 5.91 and the record
-# came out 1.85x on byte-identical plans)
-LOAD_WAIT_SEC = 30  # between retries
-# r12's official BENCH was recorded after a mere 5-min wait at
-# load5≈3.3 and came out 20% slower than the same-day quiet-host run
-# — wait up to ~20 min before conceding, and stamp load_gate_passed
-# so a loaded-host record is never mistaken for a regression
-LOAD_MAX_WAITS = 40
-
-
-def _load1() -> float:
-    try:
-        with open("/proc/loadavg") as fh:
-            return float(fh.read().split()[0])
-    except OSError:
-        return -1.0
-
-
-def _load5() -> float:
-    try:
-        with open("/proc/loadavg") as fh:
-            return float(fh.read().split()[1])
-    except OSError:
-        return -1.0
-
-
-def _wait_for_quiet_host() -> tuple[float, int, bool]:
-    """BENCH_r08 was recorded at load1 4.1 on a box where local[32]
-    wants every core — per-query times inflated ~1.5x on
-    byte-identical plans. Wait (bounded) for a quiet window so the
-    official artifact measures the ENGINE, not the co-tenant; if none
-    opens, record anyway — load1_start and load_waited_sec in the
-    JSON carry the context."""
-    waits = 0
-    while (_load1() > LOAD_GATE or _load5() > LOAD5_GATE) and waits < LOAD_MAX_WAITS:
-        print(
-            f"# load1={_load1():.2f}/load5={_load5():.2f} over gate"
-            f" ({LOAD_GATE}/{LOAD5_GATE}); waiting {LOAD_WAIT_SEC}s"
-            f" ({waits + 1}/{LOAD_MAX_WAITS})",
-            file=sys.stderr,
-            flush=True,
-        )
-        time.sleep(LOAD_WAIT_SEC)
-        waits += 1
-    passed = _load1() <= LOAD_GATE and _load5() <= LOAD5_GATE
-    return _load1(), waits * LOAD_WAIT_SEC, passed
-
-
-# Host-drift canary (r15, VERDICT item 3): a FIXED synthetic Spark
-# job — range → hash-shuffle agg → sort — that never changes across
-# rounds, timed min-of-3 right before the headline queries. Its time
-# relative to the frozen quiet-host baseline below gives a host-speed
-# factor that separates co-tenant/OS drift from plan changes: r14 vs
-# r13 moved +5..47% on byte-identical sub-second plans with the load
-# gate formally passing (long-uptime host). The canary exercises the
-# same resources the sub-second headline queries are bound by
-# (task scheduling, shuffle, whole-stage codegen) and no parquet
-# input, so it is SF-independent. vs_baseline_adjusted divides the
-# headline total by the factor before comparing to r1 — judge
-# cross-round deltas against the ADJUSTED ratio.
-CANARY_BASELINE = 0.416  # frozen r15: quiet host (load1 0.1), mean of
-# two fresh-session min-of-5 readings (0.406 / 0.425) in bench's own
-# context (get_spark("bench"), post-warmup)
-
-
+# Host-drift canary: a FIXED synthetic Spark job — range →
+# hash-shuffle agg → sort — that never changes. It exercises task
+# scheduling, shuffle and whole-stage codegen with no parquet input,
+# so it is SF-independent; perfbench stamps it as host.canary_s.
 def _canary_sec(spark) -> float:
     from pyspark.sql import functions as F
 
@@ -140,114 +74,60 @@ def _canary_sec(spark) -> float:
     return round(min(once() for _ in range(5)), 3)
 
 
+def time_key(build) -> tuple[float, float]:
+    """``(build_s, exec_s)`` of one key: ``build()`` returns its
+    DataFrame (eager jobs inside it count as build), then the full
+    result is written to the ``noop`` sink — every column of every
+    row, with nothing pruned and nothing collected."""
+    t0 = time.perf_counter()
+    df = build()
+    t1 = time.perf_counter()
+    df.write.format("noop").mode("overwrite").save()
+    return t1 - t0, time.perf_counter() - t1
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
+    keys = sys.argv[1:] or KEYS
 
     from bfr_clustering_using_pyspark_spark.plans import all_queries
     from bfr_clustering_using_pyspark_spark.session import get_spark
 
-    # no console progress bars in the recorded artifact
+    qs = all_queries()
+    unknown = [k for k in keys if k not in qs]
+    if unknown:
+        raise SystemExit(f"unknown keys: {unknown}")
+    # no console progress bars in the recorded line
     os.environ.setdefault("SPARK_GRAFT_NO_PROGRESS", "1")
     spark = get_spark("bench")
-    # Silence executor/streaming log output for the artifact: the
-    # AvailableNow drains in the extras log a benign termination stack
-    # trace (rc=0, rows delivered) through log4j at query stop, which
-    # pollutes the recorded tail without carrying information.
+    # the AvailableNow drains log a benign termination stack trace
+    # at query stop
     spark.sparkContext.setLogLevel("OFF")
-    qs = all_queries()
-
-    load_start, load_waited, load_gate_passed = _wait_for_quiet_host()
-
-    # warm the JVM + parquet footers with a trivial action
-    spark.read.parquet(f"{sf_dir}/region.parquet").count()
-
+    load1 = os.getloadavg()[0]
     canary = _canary_sec(spark)
-    host_speed_factor = round(canary / CANARY_BASELINE, 3)
 
-    # best-of-3 per query: the first run pays Python-worker and scan
-    # warmup that a long-lived cluster wouldn't, and min-of-3 damps
-    # host-load noise (observed same-commit swings of 1.5x)
-    timings: dict[str, float] = {}
-    for name in HEADLINE:
-        fn = qs[name]
-        best, n = None, 0
-        for _ in range(3):
-            t0 = time.time()
-            n = fn(spark, sf_dir).count()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-        timings[name] = round(best, 3)
-        print(f"# {name}: {timings[name]}s ({n} rows)", file=sys.stderr)
-
-    extra_timings: dict[str, float] = {}
-    for name in EXTRAS:
-        fn = qs[name]
-        t0 = time.time()
-        n = fn(spark, sf_dir).count()
-        extra_timings[name] = round(time.time() - t0, 3)
-        print(f"# extra {name}: {extra_timings[name]}s ({n} rows)", file=sys.stderr)
-
-    # second canary reading AFTER the extras: the single-iteration
-    # extras run last, when the bench session itself has loaded the
-    # host for minutes — canary_sec_end tells the reader how much of
-    # an extra's cross-round delta is that heat (r15: a 14.4 s
-    # bfr_lloyd_det extra reading reproduced at 9.3 s on a quiet
-    # host with byte-identical plans)
-    canary_end = _canary_sec(spark)
-
-    total = round(sum(timings.values()), 3)
-    # frozen comparators (see BASELINE.md): r1 total at sf0.1,
-    # r14 total at sf1 — the decade that actually stresses plans
-    # (re-frozen from r10's 16.879 after two rounds of plan wins;
-    # BENCH_sf1_r14.json, load-gate-clean)
-    baseline_total = 13.838
-    baseline_sf1 = 14.900
-    sf_num = float(sf) if sf.replace(".", "").isdigit() else None
-    ratios = {
-        "vs_baseline_total": round(total / baseline_total, 3),
-        # drift-corrected ratio: headline total normalized by the
-        # canary host-speed factor before comparing to the frozen r1
-        # total — this is the number to read for plan regressions
-        "vs_baseline_adjusted": round(
-            total / max(host_speed_factor, 1e-9) / baseline_total, 3
-        ),
-    }
-    if sf_num == 1.0:
-        ratios["vs_baseline_sf1"] = round(total / baseline_sf1, 3)
-        ratios["vs_baseline_sf1_adjusted"] = round(
-            total / max(host_speed_factor, 1e-9) / baseline_sf1, 3
-        )
+    queries: dict[str, dict[str, float]] = {}
+    for key in keys:
+        cold, *warm = (time_key(lambda: qs[key](spark, sf_dir)) for _ in range(3))
+        best = min(warm, key=sum)
+        queries[key] = {
+            "cold_s": round(sum(cold), 3),
+            "warm_s": round(sum(best), 3),
+            "build_s": round(best[0], 3),
+        }
+        print(f"# {key}: {queries[key]}", file=sys.stderr)
     print(
         json.dumps(
             {
-                "metric": "headline_queries_total_runtime",
-                "value": total,
-                "unit": "sec",
-                "iterations": 3,
-                "aggregation": "min_per_query",
-                "queries": timings,
-                "extra_queries": extra_timings,
-                "sf": sf_num if sf_num is not None else sf,
-                **ratios,
-                # host-drift canary (fixed synthetic job; see
-                # CANARY_BASELINE comment / BASELINE.md)
-                "canary_sec": canary,
-                "canary_sec_end": canary_end,
-                "host_speed_factor": host_speed_factor,
-                # co-tenant load context: same-commit totals have been
-                # observed to swing ~1.5x with host load (SURVEY r6/r7);
-                # judge cross-round deltas against these numbers
-                "load1_start": load_start,
-                "load1_end": _load1(),
-                # seconds spent waiting for a quiet host before the
-                # run (LOAD_GATE); >0 with load1_start still above
-                # the gate means no clean window existed
-                "load_waited_sec": load_waited,
-                # False => the gate never opened and this record was
-                # taken on a LOADED host: treat per-query deltas as
-                # noise and prefer the round's quiet-host rerun
-                "load_gate_passed": load_gate_passed,
+                "metric": "registry_keys_warm_total",
+                "value": round(sum(q["warm_s"] for q in queries.values()), 3),
+                "unit": "s",
+                "queries": queries,
+                "cpus": spark.sparkContext.defaultParallelism,
+                "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+                "load1": load1,
+                "canary_s": canary,
             }
         )
     )

@@ -28,12 +28,31 @@ bfr.py:431-451). Outputs match the reference byte-for-byte in shape:
 from __future__ import annotations
 
 import json
+import math
 import os
 import sys
 
 from .ml.bfr import BFR, BFRConfig, ChunkError
 from .session import get_spark
 from .sources.readers import points_from_indexed_csv
+
+
+def _first_bad_line(path: str, d: int | None) -> str:
+    """``"; first offending line N: '...'"`` for the first line of
+    chunk file ``path`` that is not an integer id and ``d`` finite
+    numbers (any count while ``d`` is unknown), else ``""``. Read only
+    once a fit has failed on the file."""
+    with open(path) as f:
+        for no, line in enumerate(f, 1):
+            pidx, *values = line.rstrip("\r\n").split(",")
+            try:
+                int(pidx)
+                ok = all(math.isfinite(float(v)) for v in values)
+            except ValueError:
+                ok = False
+            if not ok or (d is not None and len(values) != d):
+                return f"; first offending line {no}: {line.rstrip()!r}"
+    return ""
 
 
 def run(input_path: str, num_clusters: int, cluster_out: str, intermediate_out: str) -> None:
@@ -49,7 +68,8 @@ def run(input_path: str, num_clusters: int, cluster_out: str, intermediate_out: 
     try:
         assigned = bfr.fit_stream(chunks)
     except ChunkError as err:
-        raise ValueError(f"{files[err.chunk]}: {err}") from err
+        path = files[err.chunk]
+        raise ValueError(f"{path}: {err}{_first_bad_line(path, err.d)}") from err
 
     out_map = {str(r["id"]): int(r["cluster"]) for r in assigned.collect()}
     with open(cluster_out, "w") as f:

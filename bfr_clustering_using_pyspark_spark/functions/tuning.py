@@ -30,6 +30,8 @@ from typing import Iterator
 
 from pyspark.sql import SparkSession
 
+from ..session import int_knob
+
 _CONF = "spark.sql.shuffle.partitions"
 
 
@@ -67,11 +69,9 @@ def drain_width(spark: SparkSession) -> int:
     first checkpoint, so it is a per-deployment knob, not a per-query
     one); the session width still caps it so the swap only narrows.
     A zero or negative knob is clamped to 1: Spark rejects a shuffle
-    width below 1 with an opaque error inside every drain."""
-    try:
-        cap = int(os.environ.get("SPARK_GRAFT_STREAM_WIDTH", "4"))
-    except ValueError:
-        cap = 4
+    width below 1 with an opaque error inside every drain. A value
+    that is not an integer raises ValueError naming the knob."""
+    cap = int_knob("SPARK_GRAFT_STREAM_WIDTH", 4)
     return max(1, min(shuffle_width(spark), cap))
 
 

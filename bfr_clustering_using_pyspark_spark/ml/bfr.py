@@ -49,6 +49,7 @@ import os
 import re
 import shutil
 import tempfile
+from contextlib import contextmanager
 from dataclasses import dataclass
 from functools import reduce
 from typing import Iterator
@@ -56,6 +57,7 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 
+from pyspark.errors import NumberFormatException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -170,11 +172,24 @@ def nearest_summary(pts: np.ndarray, summ: Summaries, gate: float = np.inf) -> t
 
 
 class ChunkError(ValueError):
-    """Malformed features in chunk ``chunk`` of a fit."""
+    """Malformed points in chunk ``chunk`` of a fit; ``d`` is the
+    feature count the fit expects, once it is known."""
 
-    def __init__(self, chunk: int, msg: str):
+    def __init__(self, chunk: int, msg: str, d: int | None = None):
         super().__init__(msg)
         self.chunk = chunk
+        self.d = d
+
+
+@contextmanager
+def _chunk_casts(chunk: int, d: int | None) -> Iterator[None]:
+    """A Spark cast failure (a non-numeric id or feature value) while
+    a fit reads chunk ``chunk`` raises ChunkError for that chunk."""
+    try:
+        yield
+    except NumberFormatException as err:
+        bad = (err.getMessageParameters() or {}).get("expression", "a value")
+        raise ChunkError(chunk, f"bfr: {bad} in chunk {chunk} is not a number", d) from err
 
 
 def _stack_features(features: pd.Series, d: int) -> tuple[np.ndarray | None, int, int]:
@@ -196,9 +211,9 @@ def _stack_features(features: pd.Series, d: int) -> tuple[np.ndarray | None, int
 
 def _require_valid(n_ragged: int, n_nonfinite: int, chunk: int, where: str, d: int) -> None:
     if n_ragged:
-        raise ChunkError(chunk, f"bfr: {n_ragged} rows in {where} do not have d={d} feature values")
+        raise ChunkError(chunk, f"bfr: {n_ragged} rows in {where} do not have d={d} feature values", d)
     if n_nonfinite:
-        raise ChunkError(chunk, f"bfr: {n_nonfinite} non-finite feature values in {where}")
+        raise ChunkError(chunk, f"bfr: {n_nonfinite} non-finite feature values in {where}", d)
 
 
 @dataclass
@@ -640,8 +655,9 @@ class BFR:
         in ``run_dir``, completed rounds are skipped and the fit
         continues from the first unfinished chunk (see the
         checkpoint/resume contract above). A non-finite feature
-        value, or a row without ``d`` values, raises ``ChunkError`` (a
-        ``ValueError``) naming the chunk."""
+        value, a row without ``d`` values, or an id or feature that is not
+        a number raises ``ChunkError`` (a ``ValueError``) naming the
+        chunk."""
         cfg = self.cfg
         spark = chunks[0].sparkSession
         # an anonymous tempdir cannot be resumed (the caller can't
@@ -650,7 +666,8 @@ class BFR:
         ckpt_enabled = run_dir is not None
         run_dir = run_dir or tempfile.mkdtemp(prefix="bfr_run_")
         if d is None:
-            d = len(chunks[0].select("features").first()[0])
+            with _chunk_casts(0, None):
+                d = len(chunks[0].select("features").first()[0])
 
         out_path = f"{run_dir}/assignments"
         n_chunks = len(chunks)
@@ -665,59 +682,60 @@ class BFR:
         for round_id, chunk in enumerate(chunks):
             if round_id < start_round:
                 continue
-            if round_id == 0:
-                if approx_chunk_n is None:
-                    approx_chunk_n = chunk.count()
-                chunk_n = max(approx_chunk_n, 1)
-                # at least ~50 points per target cluster for a sane
-                # init, bounded by the driver-memory cap
-                min_frac = min(1.0, 50.0 * cfg.n_clusters / chunk_n)
-                frac = min(max(cfg.init_sample_frac, min_frac), 1.0, cfg.init_sample_cap / chunk_n)
-                # a seeded hash of the id decides membership, so the
-                # sample (sorted by id) is the same however the chunk
-                # is partitioned — a chunk.sample draw is not
-                in_sample = F.pmod(F.xxhash64("id", F.lit(cfg.seed)), F.lit(10**6)) < round(
-                    frac * 10**6
-                )
-                sample = (
-                    chunk.filter(in_sample).select("id", "features").toPandas()
-                    .sort_values("id", ignore_index=True)
-                )
-                ids = sample["id"].to_numpy()
-                pts, n_ragged, n_bad = _stack_features(sample["features"], d)
-                _require_valid(n_ragged, n_bad, 0, "chunk 0's init sample", d)
-                driver_assignments.append(self._init_from_sample(ids, pts))
-                # the non-sampled remainder of chunk 0 goes through
-                # the normal assignment path (ref assign_dsrsout on
-                # points_rest, bfr.py:429)
-                chunk = chunk.filter(~in_sample)
+            with _chunk_casts(round_id, d):
+                if round_id == 0:
+                    if approx_chunk_n is None:
+                        approx_chunk_n = chunk.count()
+                    chunk_n = max(approx_chunk_n, 1)
+                    # at least ~50 points per target cluster for a sane
+                    # init, bounded by the driver-memory cap
+                    min_frac = min(1.0, 50.0 * cfg.n_clusters / chunk_n)
+                    frac = min(max(cfg.init_sample_frac, min_frac), 1.0, cfg.init_sample_cap / chunk_n)
+                    # a seeded hash of the id decides membership, so the
+                    # sample (sorted by id) is the same however the chunk
+                    # is partitioned — a chunk.sample draw is not
+                    in_sample = F.pmod(F.xxhash64("id", F.lit(cfg.seed)), F.lit(10**6)) < round(
+                        frac * 10**6
+                    )
+                    sample = (
+                        chunk.filter(in_sample).select("id", "features").toPandas()
+                        .sort_values("id", ignore_index=True)
+                    )
+                    ids = sample["id"].to_numpy()
+                    pts, n_ragged, n_bad = _stack_features(sample["features"], d)
+                    _require_valid(n_ragged, n_bad, 0, "chunk 0's init sample", d)
+                    driver_assignments.append(self._init_from_sample(ids, pts))
+                    # the non-sampled remainder of chunk 0 goes through
+                    # the normal assignment path (ref assign_dsrsout on
+                    # points_rest, bfr.py:429)
+                    chunk = chunk.filter(~in_sample)
 
-            fused = chunk.mapInPandas(self._assign_kernel(d), schema=self._FUSED_SCHEMA).persist()
-            try:
-                asg = fused.filter(F.col("rtype") == self._RT_ASSIGN).select(
-                    "id", F.col("label").alias("cluster")
-                )
-                if ckpt_enabled:
-                    # job 1: distributed write of the assignments — one
-                    # subdirectory per round, OVERWRITE, so a resumed
-                    # re-run of an interrupted round is idempotent
-                    asg.write.mode("overwrite").parquet(f"{out_path}/round_{round_id:05d}")
-                else:
-                    # no run_dir → nothing can ever resume from the
-                    # anonymous tempdir, so per-round parquet
-                    # durability is pure committer overhead; pin the
-                    # round's assignments as an eager localCheckpoint
-                    # instead (executor block store, MEMORY_AND_DISK —
-                    # the same per-executor footprint class as the
-                    # shuffle) and union the rounds at the end. Same
-                    # rows, ~0.15 s less fixed cost per round plus the
-                    # final recursive parquet read gone (guide §2.4).
-                    ckpt_frames.append(asg.localCheckpoint(eager=True))
-                # job 2: tiny driver-bound feedback collect (partials,
-                # RS points, bad-input counts)
-                fb = fused.filter(F.col("rtype") != self._RT_ASSIGN).toPandas()
-            finally:
-                fused.unpersist()
+                fused = chunk.mapInPandas(self._assign_kernel(d), schema=self._FUSED_SCHEMA).persist()
+                try:
+                    asg = fused.filter(F.col("rtype") == self._RT_ASSIGN).select(
+                        "id", F.col("label").alias("cluster")
+                    )
+                    if ckpt_enabled:
+                        # job 1: distributed write of the assignments — one
+                        # subdirectory per round, OVERWRITE, so a resumed
+                        # re-run of an interrupted round is idempotent
+                        asg.write.mode("overwrite").parquet(f"{out_path}/round_{round_id:05d}")
+                    else:
+                        # no run_dir → nothing can ever resume from the
+                        # anonymous tempdir, so per-round parquet
+                        # durability is pure committer overhead; pin the
+                        # round's assignments as an eager localCheckpoint
+                        # instead (executor block store, MEMORY_AND_DISK —
+                        # the same per-executor footprint class as the
+                        # shuffle) and union the rounds at the end. Same
+                        # rows, ~0.15 s less fixed cost per round plus the
+                        # final recursive parquet read gone (guide §2.4).
+                        ckpt_frames.append(asg.localCheckpoint(eager=True))
+                    # job 2: tiny driver-bound feedback collect (partials,
+                    # RS points, bad-input counts)
+                    fb = fused.filter(F.col("rtype") != self._RT_ASSIGN).toPandas()
+                finally:
+                    fused.unpersist()
 
             def n_of(rtype: int) -> int:
                 return int(fb.loc[fb["rtype"] == rtype, "n"].sum())

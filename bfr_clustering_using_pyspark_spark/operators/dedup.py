@@ -838,9 +838,9 @@ def connected_components(
         labels, converged = _propagate(edges, labels, max_rounds)
     if not converged:
         # Auto-switch (r11): rounds = diameter for propagation, so a
-        # deep component (the 90%-of-edges-one-chain probe shape,
-        # tools/skew_probe_cc.py) exhausts max_rounds with labels
-        # still moving. Returning them would be silently WRONG —
+        # deep component (a long chain, as in tests/test_graph.py
+        # test_cc_deep_graph_auto_switches_to_star) exhausts
+        # max_rounds with labels still moving. Returning them would be silently WRONG —
         # fall back to the O(log n)-round large/small-star face
         # (equivalence-tested on chains, hubs, random graphs) over
         # the same pinned pair list.

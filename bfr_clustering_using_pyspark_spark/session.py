@@ -1,6 +1,7 @@
 """SparkSession factory tuned for this engine.
 
-Local-mode testing uses ``local[$SPARK_GRAFT_CPUS]``; the same
+Local-mode testing uses ``local[$SPARK_GRAFT_CPUS]`` (default: the
+cores this process may run on); the same
 configs (AQE, Arrow, sane shuffle partitioning) are what we'd set on
 a real cluster — only master/memory change. ``$SPARK_GRAFT_DRIVER_MEM``
 sets the driver heap; it defaults to half of physical RAM, capped at
@@ -25,11 +26,24 @@ def default_driver_memory() -> str:
     return f"{max(1024, min(48 << 10, ram // 2 >> 20))}m"
 
 
+def int_knob(name: str, default: int, positive: bool = False) -> int:
+    """The integer in ``$name``, or ``default`` when it is unset or
+    empty. Anything else that is not an integer, or not above 0 when
+    ``positive``, raises ValueError naming the knob."""
+    raw = os.environ.get(name, "")
+    if not raw.strip():
+        return default
+    try:
+        value = int(raw)
+    except ValueError:
+        value = None
+    if value is None or (positive and value < 1):
+        raise ValueError(f"{name} must be a positive integer, got {raw!r}")
+    return value
+
+
 def get_spark(app_name: str = "bfr_spark_engine", shuffle_partitions: int | None = None) -> SparkSession:
-    raw = os.environ.get("SPARK_GRAFT_CPUS") or "32"
-    cpus = int(raw) if raw.strip().isdecimal() else 0
-    if cpus < 1:
-        raise ValueError(f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}")
+    cpus = int_knob("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)), positive=True)
     if shuffle_partitions is None:
         shuffle_partitions = cpus
     builder = (

@@ -4,6 +4,7 @@ the clear errors it gives for nonsense input and settings."""
 
 import csv
 import json
+import os
 import re
 
 import numpy as np
@@ -68,19 +69,47 @@ def _write_chunks(indir, sizes, d, short=lambda ci, li: False):
 # driver-side check); chunk 1 goes through the assignment kernel, where
 # a batch of only short rows stacks fine and must still be caught
 @pytest.mark.parametrize(
-    "chunk, n_short, short",
+    "chunk, n_short, line, short",
     [
-        (0, 1, lambda ci, li: (ci, li) == (0, 7)),
-        (1, 1, lambda ci, li: (ci, li) == (1, 123)),
-        (1, 400, lambda ci, li: ci == 1),
+        (0, 1, 8, lambda ci, li: (ci, li) == (0, 7)),
+        (1, 1, 124, lambda ci, li: (ci, li) == (1, 123)),
+        (1, 400, 1, lambda ci, li: ci == 1),
     ],
     ids=["init-sample", "kernel-row", "kernel-batch"],
 )
-def test_cli_ragged_rows_name_file_and_d(spark, tmp_path, chunk, n_short, short):
+def test_cli_ragged_rows_name_file_and_d(spark, tmp_path, chunk, n_short, line, short):
     indir = tmp_path / "chunks"
     _write_chunks(indir, [150, 400], d=4, short=short)
     bad = re.escape(str(indir / f"chunk_{chunk}.txt"))
-    with pytest.raises(ValueError, match=rf"^{bad}: bfr: {n_short} rows in chunk {chunk}.* d=4 "):
+    with pytest.raises(
+        ValueError,
+        match=rf"^{bad}: bfr: {n_short} rows in chunk {chunk}.* d=4 .*; first offending line {line}: '",
+    ):
+        cli.run(str(indir), 3, str(tmp_path / "c.json"), str(tmp_path / "i.csv"))
+
+
+# a cast that fails inside Spark: on chunk 0's first line it is the d
+# probe, elsewhere in chunk 0 the init sample (the id is hashed), in
+# chunk 1 of 3 the assignment kernel's input
+@pytest.mark.parametrize(
+    "chunk, li, field",
+    [(0, 0, 2), (0, 7, 0), (1, 123, 2)],
+    ids=["d-probe-feature", "init-sample-id", "kernel-feature"],
+)
+def test_cli_non_numeric_field_names_file_and_line(spark, tmp_path, chunk, li, field):
+    indir = tmp_path / "chunks"
+    _write_chunks(indir, [150, 400, 200], d=4)
+    path = indir / f"chunk_{chunk}.txt"
+    lines = path.read_text().splitlines(keepends=True)
+    fields = lines[li].split(",")
+    fields[field] = "abc"
+    lines[li] = ",".join(fields)
+    path.write_text("".join(lines))
+    bad = re.escape(str(path))
+    with pytest.raises(
+        ValueError,
+        match=rf"^{bad}: bfr: 'abc' in chunk {chunk} is not a number; first offending line {li + 1}: ",
+    ):
         cli.run(str(indir), 3, str(tmp_path / "c.json"), str(tmp_path / "i.csv"))
 
 
@@ -107,3 +136,43 @@ def test_get_spark_rejects_bad_cpus(monkeypatch, value):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", value)
     with pytest.raises(ValueError, match=f"SPARK_GRAFT_CPUS must be a positive integer, got '{value}'"):
         session.get_spark("bad_cpus")
+
+
+class _SessionConf(Exception):
+    """Raised by a fake builder in place of starting Spark."""
+
+
+class _RecordingBuilder:
+    def __init__(self):
+        self.conf = {}
+
+    def master(self, master):
+        self.conf["master"] = master
+        return self
+
+    def appName(self, name):
+        return self
+
+    def config(self, key, value):
+        self.conf[key] = value
+        return self
+
+    def getOrCreate(self):
+        raise _SessionConf
+
+
+@pytest.mark.parametrize("value", [None, ""], ids=["unset", "empty"])
+def test_get_spark_defaults_to_usable_cores(monkeypatch, value):
+    """Without the knob the session is as wide as the cores this
+    process may run on, not a fixed width."""
+    if value is None:
+        monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    else:
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", value)
+    builder = _RecordingBuilder()
+    monkeypatch.setattr(session, "SparkSession", type("FakeSession", (), {"builder": builder}))
+    with pytest.raises(_SessionConf):
+        session.get_spark("default_cpus")
+    cpus = len(os.sched_getaffinity(0))
+    assert builder.conf["master"] == f"local[{cpus}]"
+    assert builder.conf["spark.sql.shuffle.partitions"] == str(cpus)

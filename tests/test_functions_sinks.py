@@ -123,6 +123,13 @@ def test_nonpositive_stream_width_is_clamped(spark, monkeypatch, knob):
     test_stream_dedup_counts(spark)
 
 
+@pytest.mark.parametrize("knob", ["abc", "1.5"])
+def test_non_integer_stream_width_is_rejected(spark, monkeypatch, knob):
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_WIDTH", knob)
+    with pytest.raises(ValueError, match=f"SPARK_GRAFT_STREAM_WIDTH must be a positive integer, got '{knob}'"):
+        drain_width(spark)
+
+
 def test_sink_shard_manifest_covers_all_docs(spark):
     from bfr_clustering_using_pyspark_spark.operators.formats import (
         N_SHARDS,

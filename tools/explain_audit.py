@@ -10,10 +10,11 @@ Naming keys audits only those and prints each one's formatted plan.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 AUDIT = {
     # name: (expect_pushed_filter, expect_broadcast, max_exchanges)

@@ -6,8 +6,11 @@ Usage: python tools/run_all.py [--fast]   (--fast skips bench)
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 STEPS = [
     ("gate", [sys.executable, "tools/check_correctness.py", "/root/testdata/sf0.01"]),
@@ -24,7 +27,7 @@ def main() -> int:
         if fast and name == "bench":
             continue
         print(f"==== {name}: {' '.join(cmd[1:])}")
-        r = subprocess.run(cmd, cwd="/root/repo")
+        r = subprocess.run(cmd, cwd=ROOT)
         if r.returncode != 0:
             print(f"==== {name} FAILED (exit {r.returncode})")
             rc = 1

@@ -1,10 +1,15 @@
 """Empirical scale-up probe: replicate the FACT tables (lineitem /
 orders / events / documents / embeddings) K-fold with key offsets —
 dimensions stay small, like a real warehouse — and time headline
-operators at x1 / x10 / x30. The point is measured CURVATURE: an
-operator whose time grows ~linearly in rows has no hidden all-pairs
-stage, driver materialization, or width cliff; super-linear growth
-at 30x flags exactly the failure class that kills a 100 TB run.
+operators at x1 / x10 / x30 through ``bench.time_key`` (build, then
+the full result to the ``noop`` sink). At x1 the source directory is
+timed in place, so ``scale_probe.py 1`` times any key list
+(``SPARK_GRAFT_PROBE_QUERIES``) on any corpus (``SPARK_GRAFT_SF_DIR``).
+
+The point is measured CURVATURE: an operator whose time grows
+~linearly in rows has no hidden all-pairs stage, driver
+materialization, or width cliff; super-linear growth at 30x flags
+exactly the failure class that kills a 100 TB run.
 
 Replication is done BY SPARK (crossJoin with a small replica-index
 range + key offsets), so the probe itself exercises the distributed
@@ -13,7 +18,7 @@ write path instead of pandas-side generation.
 Usage:
     python tools/scale_probe.py [multipliers...]   # default: 1 10 30
 
-Prints one line per (multiplier, query): wall seconds + output rows,
+Prints one line per (multiplier, query): build and execute seconds,
 then a per-query linearity ratio table (t_K / (K * t_1)) — ~1.0 is
 linear, <1 is sub-linear (fixed overhead amortizing), >>1 is the
 red flag.
@@ -23,9 +28,10 @@ import os
 import shutil
 import sys
 import tempfile
-import time
 
-sys.path.insert(0, os.path.join(os.path.dirname(__file__), os.pardir))
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), os.pardir))
+
+from bench import time_key  # noqa: E402
 
 DIM_TABLES = ("region", "nation", "customer", "supplier", "part")
 FACTS = {
@@ -39,7 +45,9 @@ FACTS = {
 
 # headline operators spanning the main scale designs: hash-agg,
 # shuffle join, banded LSH, bucketed ANN, windowed sessionize,
-# distributed MAD, text Arrow kernel
+# distributed MAD and exact rank, text Arrow kernel, the iterative
+# graph and streaming-component families, index-backed graph search
+# and the retrieval faces; SPARK_GRAFT_PROBE_QUERIES replaces the list
 PROBE_QUERIES = [
     "q1_pricing_summary",
     "q3_shipping_priority",
@@ -51,49 +59,17 @@ PROBE_QUERIES = [
     "dedup_embedding",
     "q_events_sessionize",
     "q_mad_outliers_dist",
-    # iterative/stateful families (added r8): the two-tier streaming
-    # component maintainer and the graph iteration ops
     "stream_components",
     "dedup_components",
     "graph_pagerank",
-    # r9: distributed exact rank (the other grouped_rank user is
-    # q_mad_outliers_dist above) and index-backed graph search (query
-    # cost should stay near-flat once the NND build amortizes)
     "q_percentiles_dist",
     "ann_graph_search",
-    # r11: retrieval faces (inverted-index postings join + salted
-    # top-k; the fused two-leg ranker) and the shuffle-and-shard rank
     "text_bm25",
     "q_hybrid_rrf",
     "corpus_train_shuffle",
 ]
-# probed r9 via SPARK_GRAFT_PROBE_QUERIES (kept off the default
-# tier-0 list for cost): stream_late_data / stream_update_counts /
-# stream_checkpoint_recovery x10 ratios 0.05 / 0.09 / 0.09;
-# ann_nndescent_graph 0.18; q_asof_grouped via skew_probe_asof.py
-# targeted runs: SPARK_GRAFT_PROBE_QUERIES=dedup_containment,text_tokens
 if os.environ.get("SPARK_GRAFT_PROBE_QUERIES"):
     PROBE_QUERIES = os.environ["SPARK_GRAFT_PROBE_QUERIES"].split(",")
-
-# Duplicate-heavy probe shape (SPARK_GRAFT_PROBE_DUPHEAVY=1): every
-# CLIQUE_MOD-th base doc/vector additionally spawns CLIQUE_PER_K * k
-# UNMUTATED replicas — exact-copy cliques whose size grows with the
-# multiplier (x10 -> 200-clique, x30 -> 600-clique with the defaults)
-# and crosses the hot-bucket caps (LSH_BUCKET_CAP 128 /
-# CONTAIN_DF_CAP 256 / EMB_BUCKET_CAP 256). This is the corpus shape
-# the standard replica mutation deliberately avoids (mutation keeps
-# the dup graph sparse so the x-ratios measure corpus growth); here
-# the point is the opposite — proving the capped band-bucket joins
-# stay bounded when a shard IS boilerplate.
-DUPHEAVY = os.environ.get("SPARK_GRAFT_PROBE_DUPHEAVY") == "1"
-CLIQUE_MOD = 200
-CLIQUE_PER_K = 20
-# r10 measured rows (src sf0.01, x1/x10/x30 cliques of 20/200/600):
-#   dedup_minhash_lsh   t1=9.05s x10=0.04 x30=0.02  (star at >=x10)
-#   dedup_containment   t1=2.58s x10=0.15 x30=0.32  (cap at x30)
-#   dedup_embedding     t1=1.65s x10=0.26 x30=0.11  (61k all-pairs
-#                       rows at x10's 200-clique -> 4.5k star at x30)
-#   dedup_components    t1=3.81s x10=0.07 x30=0.05  (one comp/clique)
 
 
 def _scale_table(spark, src_dir: str, dst_dir: str, table: str, k: int) -> None:
@@ -101,9 +77,6 @@ def _scale_table(spark, src_dir: str, dst_dir: str, table: str, k: int) -> None:
 
     df = spark.read.parquet(os.path.join(src_dir, f"{table}.parquet"))
     out = os.path.join(dst_dir, f"{table}.parquet")
-    if k == 1 and not (DUPHEAVY and table in ("documents", "embeddings")):
-        df.write.mode("overwrite").parquet(out)
-        return
     keys = FACTS[table]
     # one offset unit per key column = (max over the source) + 1, so
     # replicas never collide; FK pairs (o_orderkey / l_orderkey) use
@@ -116,11 +89,9 @@ def _scale_table(spark, src_dir: str, dst_dir: str, table: str, k: int) -> None:
         .collect()[0][0]
         + 1
     )
-    if k == 1:
-        scaled = df.withColumn("__rep", F.lit(0))
-    else:
-        rep = spark.range(k).withColumnRenamed("id", "__rep")
-        scaled = df.crossJoin(F.broadcast(rep))
+    # replica 0 is the source row unchanged
+    rep = spark.range(k).withColumnRenamed("id", "__rep")
+    scaled = df.crossJoin(F.broadcast(rep))
     for c in keys:
         scaled = scaled.withColumn(c, F.col(c) + F.col("__rep") * F.lit(int(unit)))
     if table == "events":
@@ -168,19 +139,6 @@ def _scale_table(spark, src_dir: str, dst_dir: str, table: str, k: int) -> None:
             ),
         ).withColumn("n_chars", F.length("text").cast("long"))
     scaled = scaled.drop("__rep")
-    if DUPHEAVY and table in ("documents", "embeddings"):
-        # exact-copy cliques from the ORIGINAL rows (no mutation, no
-        # rotation): ids live in the offset range [k, k + 10*k*...)
-        # above the replicas' [0, k), so nothing collides
-        key = keys[0]
-        seeds = df.filter(F.col(key) % CLIQUE_MOD == 0)
-        reps = spark.range(CLIQUE_PER_K * k).withColumnRenamed("id", "__crep")
-        clique = (
-            seeds.crossJoin(F.broadcast(reps))
-            .withColumn(key, F.col(key) + (F.col("__crep") + F.lit(k)) * F.lit(int(unit)))
-            .drop("__crep")
-        )
-        scaled = scaled.unionByName(clique)
     scaled.write.mode("overwrite").parquet(out)
 
 
@@ -214,16 +172,15 @@ def main() -> None:
     base = tempfile.mkdtemp(prefix="scale_probe_")
     try:
         for k in mults:
-            d = os.path.join(base, f"x{k}")
-            t0 = time.time()
-            build_scaled_dir(spark, src, d, k)
-            print(f"# built x{k} corpus in {time.time() - t0:.1f}s", flush=True)
+            d = src
+            if k != 1:
+                d = os.path.join(base, f"x{k}")
+                build_scaled_dir(spark, src, d, k)
+                print(f"# built x{k} corpus", flush=True)
             for q in PROBE_QUERIES:
-                t0 = time.time()
-                n = len(qs[q](spark, d).collect())
-                dt = time.time() - t0
-                results[q][k] = dt
-                print(f"x{k:<3d} {q:24s} {dt:7.2f}s  ({n} rows)", flush=True)
+                build_s, exec_s = time_key(lambda: qs[q](spark, d))
+                results[q][k] = build_s + exec_s
+                print(f"x{k:<3d} {q:24s} build {build_s:7.2f}s  exec {exec_s:7.2f}s", flush=True)
         print("\n# linearity ratios t_K / (K * t_1)  (~1 linear, >>1 red flag)")
         for q in PROBE_QUERIES:
             t1 = results[q].get(1)
