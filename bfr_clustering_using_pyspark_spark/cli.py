@@ -60,7 +60,7 @@ def run(input_path: str, num_clusters: int, cluster_out: str, intermediate_out: 
         os.path.join(input_path, f) for f in os.listdir(input_path) if not f.startswith(".")
     )
     if not files:
-        raise SystemExit(f"no chunk files in {input_path}")
+        raise ValueError(f"{input_path}: no chunk files to cluster")
     # validated before the session starts
     bfr = BFR(BFRConfig(n_clusters=num_clusters, n_chunks=len(files)))
     spark = get_spark("bfr_cli")

@@ -36,13 +36,14 @@ _CONF = "spark.sql.shuffle.partitions"
 
 
 def scratch_dir() -> str | None:
-    """Root for EPHEMERAL per-call scratch state: drain checkpoints,
-    staged replay copies, per-drain parquet state — directories that
-    are deleted before the call returns, so durability was never part
-    of their contract. Prefer the fastest local filesystem: the
-    checkpoint metadata writes (offsets/commits/state deltas) are
-    small synchronous files whose latency is pure fixed cost per
+    """Root for EPHEMERAL streaming checkpoint directories, deleted
+    before the call returns, so durability was never part of their
+    contract. Prefer the fastest local filesystem: the checkpoint
+    metadata writes (offsets/commits/state deltas) are small
+    synchronous files whose latency is pure fixed cost per
     micro-batch (~100 ms/batch measured on /dev/vda vs ~0 on tmpfs).
+    Data copies (staged replays, sink output, index lists) stay in
+    tempfile's default: on tmpfs they would take host RAM.
 
     ``$SPARK_GRAFT_SCRATCH`` overrides (point it at local NVMe on a
     real cluster node, or at a durable path to opt out); default is

@@ -29,9 +29,16 @@ Spark-first architecture (designed for 1000 executors / 100 TB):
   Arrow batch emits one row per touched cluster (n, Σx, Σx²), so the
   driver collect is O(num_batches × k), independent of n. Every fold
   into a ``Summaries`` goes through ``Summaries.add_partials``.
-- Per-chunk assignments are appended to a parquet run directory
-  (linear distributed write) instead of accumulating a lazy union of
-  Python-UDF stages.
+- Each round's assignments are pinned once (an eager
+  ``localCheckpoint``, or the round's parquet dir when the fit is given
+  a ``run_dir``, the only case that writes files) and every fit ends
+  in one union of the rounds and the driver-side tail.
+
+The reference's fixed settings are module constants: ``ALPHA_DS``,
+``ALPHA_FOLD``, ``INIT_OVERSAMPLE``, ``INIT_SAMPLE_FRAC``,
+``INIT_SAMPLE_CAP``, ``RS_CLUSTER_FACTOR``, ``KMEANS_ITERATIONS`` and
+``SEED``. ``BFRConfig`` keeps the cluster and chunk counts, the
+``rs_max`` cap and the CS merge threshold.
 
 Semantic divergence from the reference (deliberate, documented): the
 reference updates summaries point-by-point WITHIN a chunk (bfr.py:
@@ -46,9 +53,6 @@ from __future__ import annotations
 import json
 import math
 import os
-import re
-import shutil
-import tempfile
 from contextlib import contextmanager
 from dataclasses import dataclass
 from functools import reduce
@@ -216,21 +220,30 @@ def _require_valid(n_ragged: int, n_nonfinite: int, chunk: int, where: str, d: i
         raise ChunkError(chunk, f"bfr: {n_nonfinite} non-finite feature values in {where}", d)
 
 
+ALPHA_DS = 3.0  # ref assign_dsrsout alpha=3 (bfr.py:382)
+ALPHA_FOLD = 4.0  # ref merge_into_ds alpha=4 (bfr.py:339)
+INIT_OVERSAMPLE = 3  # ref init_sets: KMeans(3k) (bfr.py:400)
+INIT_SAMPLE_FRAC = 0.2  # ref init_sets: 20% sample (bfr.py:396)
+INIT_SAMPLE_CAP = 200_000  # driver-memory bound on the init sample
+RS_CLUSTER_FACTOR = 5  # ref cluster_rs: KMeans(5k) (bfr.py:262)
+KMEANS_ITERATIONS = 5  # ref HCluster(…, 5) everywhere
+SEED = 42
+
+# the retired BFRConfig fields an older saved model carries, each at
+# the one value this module runs with
+_RETIRED_CONFIG = dict(
+    alpha_ds=ALPHA_DS, alpha_fold=ALPHA_FOLD, init_oversample=INIT_OVERSAMPLE,
+    init_sample_frac=INIT_SAMPLE_FRAC, init_sample_cap=INIT_SAMPLE_CAP,
+    rs_cluster_factor=RS_CLUSTER_FACTOR, kmeans_iterations=KMEANS_ITERATIONS, seed=SEED, use_cs=True,
+)
+
+
 @dataclass
 class BFRConfig:
     n_clusters: int
     n_chunks: int = 5
-    alpha_ds: float = 3.0          # ref assign_dsrsout alpha=3 (bfr.py:382)
-    alpha_fold: float = 4.0        # ref merge_into_ds alpha=4 (bfr.py:339)
-    init_oversample: int = 3       # ref init_sets: KMeans(3k) (bfr.py:400)
-    init_sample_frac: float = 0.2  # ref init_sets: 20% sample (bfr.py:396)
-    init_sample_cap: int = 200_000 # driver-memory bound on the init sample
-    rs_cluster_factor: int = 5     # ref cluster_rs: KMeans(5k) (bfr.py:262)
-    rs_max: int = 50_000           # RS pool size triggering CS compression
+    rs_max: int = 50_000  # RS pool size triggering CS compression
     cs_merge_threshold: float = 3.0  # ref merge_css: < 3·√d (bfr.py:309)
-    kmeans_iterations: int = 5     # ref HCluster(…, 5) everywhere
-    seed: int = 42
-    use_cs: bool = True
 
     def __post_init__(self):
         for name in ("n_clusters", "n_chunks"):
@@ -287,7 +300,7 @@ class BFR:
         ds = self.ds
         cs = self.cs if self.cs.k else None
         cs_label = -2 - np.asarray([ids[0] for ids in self.cs_ids], dtype=np.int64)
-        gate = self.cfg.alpha_ds * math.sqrt(d)
+        gate = ALPHA_DS * math.sqrt(d)
 
         def rows(rtype: int, **cols) -> pd.DataFrame:
             return pd.DataFrame(
@@ -361,8 +374,8 @@ class BFR:
         k-means → singleton clusters to RS → k-means(k) on inliers →
         DS. Returns the sample's (id, cluster) assignments."""
         cfg = self.cfg
-        k1 = min(cfg.n_clusters * cfg.init_oversample, max(len(pts) // 2, 1))
-        km1 = LocalKMeans(k1, cfg.kmeans_iterations, cfg.seed).fit(pts)
+        k1 = min(cfg.n_clusters * INIT_OVERSAMPLE, max(len(pts) // 2, 1))
+        km1 = LocalKMeans(k1, KMEANS_ITERATIONS, SEED).fit(pts)
         sizes = np.bincount(km1.labels, minlength=k1)
         is_outlier = sizes[km1.labels] == 1
         if (~is_outlier).sum() < cfg.n_clusters:
@@ -373,7 +386,7 @@ class BFR:
         self.cs, self.cs_ids, self.cs_labels = Summaries.empty(pts.shape[1]), [], np.zeros(0, dtype=np.int64)
 
         in_ids, in_pts = ids[~is_outlier], pts[~is_outlier]
-        km2 = LocalKMeans(cfg.n_clusters, cfg.kmeans_iterations, cfg.seed).fit(in_pts)
+        km2 = LocalKMeans(cfg.n_clusters, KMEANS_ITERATIONS, SEED).fit(in_pts)
         self.ds = Summaries.from_points(in_pts, km2.labels, cfg.n_clusters)
         self._n_discard_points += len(in_ids)
         return pd.DataFrame({"id": in_ids, "cluster": km2.labels.astype(np.int64)})
@@ -383,9 +396,8 @@ class BFR:
         pool with 5k clusters; singletons stay RS, the rest become
         CS; then merge close CS (``merge_css``). Returns the new CS
         members under their provisional labels."""
-        cfg = self.cfg
-        k = min(cfg.n_clusters * cfg.rs_cluster_factor, len(self.rs_ids))
-        km = LocalKMeans(k, cfg.kmeans_iterations, cfg.seed).fit(self.rs_pts)
+        k = min(self.cfg.n_clusters * RS_CLUSTER_FACTOR, len(self.rs_ids))
+        km = LocalKMeans(k, KMEANS_ITERATIONS, SEED).fit(self.rs_pts)
         sizes = np.bincount(km.labels, minlength=k)
         to_cs = sizes[km.labels] > 1
         n_new = int((sizes > 1).sum())
@@ -472,16 +484,10 @@ class BFR:
     # subdirectory with overwrite semantics, so re-running an
     # interrupted round is idempotent: resume(chunk r) produces
     # bit-identical output whether or not the crash happened mid-
-    # write. All randomness is freshly seeded per call (cfg.seed), so
+    # write. All randomness is freshly seeded per call (SEED), so
     # a resumed fit is deterministic.
 
-    def _ckpt_write(
-        self,
-        run_dir: str,
-        next_round: int,
-        tail: list[pd.DataFrame],
-        meta: dict | None = None,
-    ) -> None:
+    def _ckpt_write(self, run_dir: str, next_round: int, tail: list[pd.DataFrame], meta: dict) -> None:
         """Durable checkpoint: snapshot the state SYNCHRONOUSLY (the
         payload is an independent copy — tolist()/vars() detach it
         from the live arrays), then do the file IO on a background
@@ -499,7 +505,7 @@ class BFR:
             # provenance (r11 ADVICE): resuming with a different
             # chunking/corpus must fail loudly, not skip rounds that
             # never ran for this data
-            "meta": meta or {},
+            "meta": meta,
             "ds": self.ds.to_dict(),
             "cs": self.cs.to_dict(),
             "cs_ids": [list(m) for m in self.cs_ids],
@@ -552,9 +558,7 @@ class BFR:
                 self._ckpt_err = []
                 raise RuntimeError("bfr checkpoint write failed") from err[0]
 
-    def _ckpt_load(
-        self, run_dir: str, expect_meta: dict | None = None
-    ) -> tuple[int, list[pd.DataFrame]] | None:
+    def _ckpt_load(self, run_dir: str, expect_meta: dict) -> tuple[int, list[pd.DataFrame]] | None:
         path = os.path.join(run_dir, "state.json")
         if not os.path.exists(path):
             return None
@@ -570,23 +574,22 @@ class BFR:
             # from-scratch fit
             print(f"bfr: unreadable checkpoint {path} ({e}); refitting from scratch")
             return None
-        if expect_meta:
-            got = payload.get("meta", {})
-            bad = {
-                k: (got.get(k), v)
-                for k, v in expect_meta.items()
-                if got.get(k) is not None and got.get(k) != v
-            }
-            if bad:
-                raise ValueError(
-                    f"bfr resume provenance mismatch in {path}: "
-                    + ", ".join(
-                        f"{k}: checkpoint={a} vs this fit={b}"
-                        for k, (a, b) in bad.items()
-                    )
-                    + " — resuming would skip rounds that never ran for this "
-                    "data. Use a fresh run_dir (or resume=False)."
+        got = payload.get("meta", {})
+        bad = {
+            k: (got.get(k), v)
+            for k, v in expect_meta.items()
+            if got.get(k) is not None and got.get(k) != v
+        }
+        if bad:
+            raise ValueError(
+                f"bfr resume provenance mismatch in {path}: "
+                + ", ".join(
+                    f"{k}: checkpoint={a} vs this fit={b}"
+                    for k, (a, b) in bad.items()
                 )
+                + " — resuming would skip rounds that never ran for this "
+                "data. Use a fresh run_dir (or resume=False)."
+            )
 
         self.ds = Summaries.from_dict(payload["ds"])
         d = self.ds.sums.shape[1]
@@ -614,10 +617,8 @@ class BFR:
         is id-sorted.
         """
         cfg = self.cfg
-        # one job probes range, count AND dimensionality (size() is
-        # constant across rows, so first() is value-deterministic) —
-        # fit_stream's per-chunk first() probe is skipped via the d=
-        # parameter (one fewer scheduled job per fit)
+        # one job probes range, count and d, so fit_stream skips its
+        # chunk-0 probe
         lo, hi, n_total, d = points.agg(
             F.min("id"), F.max("id"), F.count("*"), F.first(F.size("features"))
         ).collect()[0]
@@ -657,26 +658,30 @@ class BFR:
         checkpoint/resume contract above). A non-finite feature
         value, a row without ``d`` values, or an id or feature that is not
         a number raises ``ChunkError`` (a ``ValueError``) naming the
-        chunk."""
+        chunk, and so does an empty chunk 0. Only a fit given a
+        ``run_dir`` writes files; ``resume`` needs one."""
         cfg = self.cfg
         spark = chunks[0].sparkSession
-        # an anonymous tempdir cannot be resumed (the caller can't
-        # name it), so per-round durability there is pure cost —
-        # checkpoint only when the caller provided a run_dir
-        ckpt_enabled = run_dir is not None
-        run_dir = run_dir or tempfile.mkdtemp(prefix="bfr_run_")
-        if d is None:
-            with _chunk_casts(0, None):
-                d = len(chunks[0].select("features").first()[0])
+        if resume and run_dir is None:
+            raise ValueError("bfr: resume=True needs the run_dir of the fit to resume")
+        if d is None or approx_chunk_n is None:
+            # one job: chunk 0's size sizes the init sample, and size()
+            # is constant across rows, so first() is value-deterministic
+            with _chunk_casts(0, d):
+                n0, d0 = chunks[0].agg(F.count("*"), F.first(F.size("features"))).collect()[0]
+            if not n0:
+                raise ChunkError(0, "bfr: chunk 0 has no points", d)
+            d = d0 if d is None else d
+            approx_chunk_n = n0 if approx_chunk_n is None else approx_chunk_n
 
-        out_path = f"{run_dir}/assignments"
         n_chunks = len(chunks)
+        round_paths = [f"{run_dir}/assignments/round_{r:05d}" for r in range(n_chunks)]
         ckpt_meta = {"n_chunks": n_chunks, "d": d, "corpus_fp": corpus_fp}
         driver_assignments: list[pd.DataFrame] = []
-        ckpt_frames: list[DataFrame] = []  # non-resumable path only
+        rounds: list[DataFrame] = []
         start_round = 0
         if resume:
-            restored = self._ckpt_load(run_dir, expect_meta=ckpt_meta)
+            restored = self._ckpt_load(run_dir, ckpt_meta)
             if restored is not None:
                 start_round, driver_assignments = restored
         for round_id, chunk in enumerate(chunks):
@@ -684,17 +689,15 @@ class BFR:
                 continue
             with _chunk_casts(round_id, d):
                 if round_id == 0:
-                    if approx_chunk_n is None:
-                        approx_chunk_n = chunk.count()
                     chunk_n = max(approx_chunk_n, 1)
                     # at least ~50 points per target cluster for a sane
                     # init, bounded by the driver-memory cap
                     min_frac = min(1.0, 50.0 * cfg.n_clusters / chunk_n)
-                    frac = min(max(cfg.init_sample_frac, min_frac), 1.0, cfg.init_sample_cap / chunk_n)
+                    frac = min(max(INIT_SAMPLE_FRAC, min_frac), 1.0, INIT_SAMPLE_CAP / chunk_n)
                     # a seeded hash of the id decides membership, so the
                     # sample (sorted by id) is the same however the chunk
                     # is partitioned — a chunk.sample draw is not
-                    in_sample = F.pmod(F.xxhash64("id", F.lit(cfg.seed)), F.lit(10**6)) < round(
+                    in_sample = F.pmod(F.xxhash64("id", F.lit(SEED)), F.lit(10**6)) < round(
                         frac * 10**6
                     )
                     sample = (
@@ -715,22 +718,16 @@ class BFR:
                     asg = fused.filter(F.col("rtype") == self._RT_ASSIGN).select(
                         "id", F.col("label").alias("cluster")
                     )
-                    if ckpt_enabled:
+                    if run_dir is not None:
                         # job 1: distributed write of the assignments — one
                         # subdirectory per round, OVERWRITE, so a resumed
                         # re-run of an interrupted round is idempotent
-                        asg.write.mode("overwrite").parquet(f"{out_path}/round_{round_id:05d}")
+                        asg.write.mode("overwrite").parquet(round_paths[round_id])
                     else:
-                        # no run_dir → nothing can ever resume from the
-                        # anonymous tempdir, so per-round parquet
-                        # durability is pure committer overhead; pin the
-                        # round's assignments as an eager localCheckpoint
-                        # instead (executor block store, MEMORY_AND_DISK —
-                        # the same per-executor footprint class as the
-                        # shuffle) and union the rounds at the end. Same
-                        # rows, ~0.15 s less fixed cost per round plus the
-                        # final recursive parquet read gone (guide §2.4).
-                        ckpt_frames.append(asg.localCheckpoint(eager=True))
+                        # nothing can resume without a run_dir, so pin the
+                        # round in the executor block store (MEMORY_AND_DISK):
+                        # ~0.15 s less fixed cost per round than a parquet commit
+                        rounds.append(asg.localCheckpoint(eager=True))
                     # job 2: tiny driver-bound feedback collect (partials,
                     # RS points, bad-input counts)
                     fb = fused.filter(F.col("rtype") != self._RT_ASSIGN).toPandas()
@@ -744,9 +741,9 @@ class BFR:
             self._apply_feedback(fb)
 
             last = round_id == n_chunks - 1
-            if cfg.use_cs and not last and len(self.rs_ids) > cfg.rs_max:
+            if not last and len(self.rs_ids) > cfg.rs_max:
                 driver_assignments.append(self._compress_rs())
-            driver_assignments.append(self._fold_rs_into_ds(cfg.alpha_fold))
+            driver_assignments.append(self._fold_rs_into_ds(ALPHA_FOLD))
             if last:
                 # final round: the rest of RS → -1; CS → nearest DS
                 driver_assignments.append(pd.DataFrame({"id": self.rs_ids, "cluster": -1}))
@@ -756,29 +753,18 @@ class BFR:
             # the round is durable (assignments written) — checkpoint
             # the complete mutable state so a crash before the next
             # round's write resumes HERE (IO overlaps the next round)
-            if ckpt_enabled:
-                self._ckpt_write(run_dir, round_id + 1, driver_assignments, meta=ckpt_meta)
+            if run_dir is not None:
+                self._ckpt_write(run_dir, round_id + 1, driver_assignments, ckpt_meta)
         self._ckpt_join()
 
+        if run_dir is not None:
+            # this fit's rounds by name: round dirs a longer earlier fit
+            # left in the same run_dir are never read
+            rounds = [spark.read.parquet(*round_paths)]
         tail = [df for df in driver_assignments if len(df)]
-        tail_frames = [spark.createDataFrame(pd.concat(tail, ignore_index=True).astype("int64"))] if tail else []
-        if not ckpt_enabled:
-            # non-resumable path: the rounds live as localCheckpoints;
-            # one union replaces the recursive parquet read
-            out = reduce(DataFrame.unionByName, ckpt_frames + tail_frames)
-        else:
-            # the recursive read below sweeps EVERY round_* subdirectory —
-            # a run_dir previously used with more chunks would contribute
-            # stale assignments that never ran for this data (r11 ADVICE),
-            # so verify/clean beyond n_chunks before the final read
-            for name in os.listdir(out_path) if os.path.isdir(out_path) else []:
-                m = re.fullmatch(r"round_(\d{5})", name)
-                if m and int(m.group(1)) >= n_chunks:
-                    shutil.rmtree(os.path.join(out_path, name))
-            # one write for all driver-side assignments
-            for df in tail_frames:
-                df.write.mode("overwrite").parquet(f"{out_path}/tail")
-            out = spark.read.option("recursiveFileLookup", "true").parquet(out_path)
+        if tail:
+            rounds.append(spark.createDataFrame(pd.concat(tail, ignore_index=True).astype("int64")))
+        out = reduce(DataFrame.unionByName, rounds)
         if not len(self.cs_labels):
             return out
         # provisional CS label -2 - p → the DS label CS id p folded
@@ -834,7 +820,11 @@ class BFR:
     def load(cls, path: str) -> "BFR":
         with open(path) as f:
             payload = json.load(f)
-        model = cls(BFRConfig(**payload["config"]))
+        config = dict(payload["config"])
+        for key, value in _RETIRED_CONFIG.items():
+            if key in config and config.pop(key) != value:
+                raise ValueError(f"BFR.load: {path} sets retired {key}; only {key}={value} is supported")
+        model = cls(BFRConfig(**config))
         model.ds = Summaries.from_dict(payload)
         model.round_stats = [RoundStats(**r) for r in payload["round_stats"]]
         return model

@@ -526,7 +526,7 @@ def ann_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from ..functions.tuning import scratch_dir, shuffle_width
+    from ..functions.tuning import shuffle_width
 
     base = _base(spark, sf_dir)
     # one metadata count sizes the quantizer beyond the pinned
@@ -534,12 +534,12 @@ def ann_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_lists = _n_ivf_lists(base.count())
     ranked = _centroid_rank_expr("v", n_lists)
     assigned = _with_list_id(base, ranked)
-    # ephemeral staging (deleted in the finally) → scratch_dir; shuffle
+    # staging (deleted in the finally) in the tempfile default; shuffle
     # on the PARTITION COLUMN first so each inverted list lands in
     # exactly one task → one file per list directory instead of one
     # per scan task per directory (guide §6 small-files — the same
     # discipline as the streaming index writer, stream_ann_index)
-    out_dir = tempfile.mkdtemp(prefix="ivf_lists_", dir=scratch_dir())
+    out_dir = tempfile.mkdtemp(prefix="ivf_lists_")
     try:
         assigned.repartition(
             min(shuffle_width(spark), n_lists), "list_id"

@@ -1169,6 +1169,15 @@ def _bdet_init_assign(chunk0: DataFrame) -> Column:
     return _lloyd_rounds(chunk0, a0, BDET_INIT_ITERS - 1, S)[0]
 
 
+def _bdet_gate_chunk(ch: DataFrame, mom: Summaries, first: bool) -> DataFrame:
+    """The one det per-chunk gate step, shared by the batch epoch and
+    the streaming replay: chunk ``ch``'s (vec_id, xi, cluster) frame,
+    labelled by the init (``_bdet_init_assign``) on the first chunk
+    and by the α-gate against ``mom`` after, −1 = retained."""
+    label = _bdet_init_assign(ch) if first else _bdet_alpha_label(*_bdet_gate_parts(mom))
+    return ch.select("vec_id", "xi", label.alias("cluster"))
+
+
 @dataclass
 class _BdetEpoch:
     """One deterministic chunked-BFR epoch; see ``_bdet_epoch``."""
@@ -1223,10 +1232,7 @@ def _bdet_epoch_build(spark: SparkSession, sf_dir: str, retain: str) -> _BdetEpo
     for t in range(BDET_CHUNKS):
         ch = pts.where(F.col("chunk") == t)
         if t == 0 or retain == "gate":
-            label = (
-                _bdet_init_assign(ch) if t == 0 else _bdet_alpha_label(*_bdet_gate_parts(ep.mom))
-            )
-            fr = ch.select("vec_id", "xi", label.alias("cluster")).localCheckpoint(eager=True)
+            fr = _bdet_gate_chunk(ch, ep.mom, t == 0).localCheckpoint(eager=True)
         else:
             # capped retain: checkpoint (vec_id, xi, nearest, maha)
             # once, take the R largest distances (ties → smaller

@@ -47,7 +47,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.tuning import scratch_dir, shuffle_width
+from ..functions.tuning import shuffle_width
 from ..operators.dedup import (
     CC_SMALL_PAIRS,
     _minhash_kernel,
@@ -194,7 +194,7 @@ def stream_components(
         spark, sf_dir, "streamcc_src", "documents", ["doc_id", "text"], n_chunks
     )
 
-    with tempfile.TemporaryDirectory(prefix="streamcc_", dir=scratch_dir()) as tmp:
+    with tempfile.TemporaryDirectory(prefix="streamcc_") as tmp:
         sig_path = f"{tmp}/state/sigs"
         sh_path = f"{tmp}/state/shingles"
         lbl_path = f"{tmp}/state/labels"
@@ -566,7 +566,7 @@ def stream_ann_index(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> Dat
     # the staged source — NOT read per batch)
     n_lists = _n_ivf_lists(spark.read.parquet(src).count())
 
-    with tempfile.TemporaryDirectory(prefix="streamann_", dir=scratch_dir()) as tmp:
+    with tempfile.TemporaryDirectory(prefix="streamann_") as tmp:
         idx_path = f"{tmp}/index"
 
         def process(batch_df: DataFrame, batch_id: int) -> None:

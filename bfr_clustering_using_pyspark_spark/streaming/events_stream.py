@@ -283,7 +283,7 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         4, batch=F.pmod("event_id", F.lit(4)),
     )
     raw = replay(spark, os.path.join(src, "batch_*.parquet"), files_per_trigger=1)
-    with tempfile.TemporaryDirectory(prefix="upsert_", dir=scratch_dir()) as root:
+    with tempfile.TemporaryDirectory(prefix="upsert_") as root:
         state = {"dir": None}
         cents = F.round(F.col("value") * 100.0).cast("long")
 
@@ -538,12 +538,12 @@ def stream_bfr_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``vec_id % chunks`` (exactly the reference's sorted chunk-file
     directory, bfr.py:431-437) and replayed in chunk order
     (``maxFilesPerTrigger=1``, mtime-pinned); each micro-batch runs
-    the SAME per-chunk step as the batch epoch inside
-    ``foreachBatch`` — batch 0: farthest-point seeds + Lloyd init
-    (the shared ``_bdet_init_assign``); later batches: the
-    Mahalanobis α-gate against the accumulated exact integer moments
-    — and folds through the epoch's ``_bdet_fold``, whose per-cluster
-    counts feed the epoch's stats tail. Drained output ≡
+    the batch epoch's per-chunk step, ``_bdet_gate_chunk``, inside
+    ``foreachBatch`` — batch 0: farthest-point seeds + Lloyd init;
+    later batches: the Mahalanobis α-gate against the accumulated
+    exact integer moments — and folds through the epoch's
+    ``_bdet_fold``, whose per-cluster counts feed the epoch's stats
+    tail. Drained output ≡
     ``bfr_lloyd_stats`` bit-for-bit (asserted in
     tests/test_streaming.py), tying the streaming DS-update face to
     the hash-gated accounting contract.
@@ -554,10 +554,8 @@ def stream_bfr_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans.ml_queries import (
         BDET_CHUNKS,
         BDET_SCALE,
-        _bdet_alpha_label,
         _bdet_fold,
-        _bdet_gate_parts,
-        _bdet_init_assign,
+        _bdet_gate_chunk,
         _bdet_moments,
         _bdet_stats_frame,
         _micro_units,
@@ -580,11 +578,7 @@ def stream_bfr_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         ch = bdf.select("vec_id", _micro_units(BDET_SCALE).alias("xi")).localCheckpoint(
             eager=True
         )
-        if rounds:
-            assign = _bdet_alpha_label(*_bdet_gate_parts(mom))
-        else:
-            assign = _bdet_init_assign(ch)
-        rounds.append(_bdet_fold(mom, ch.select("vec_id", "xi", assign.alias("cluster"))))
+        rounds.append(_bdet_fold(mom, _bdet_gate_chunk(ch, mom, first=not rounds)))
 
     drain(raw, "stream_bfr_rounds_sink", sink=step)
     return _bdet_stats_frame(spark, rounds)
@@ -851,9 +845,11 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     delay). The oracle encodes that collapsed-lag rule; emission is
     unchanged (window end ≤ global max − delay — the file-sink
     commit log makes the append exactly-once across the restart)."""
-    with tempfile.TemporaryDirectory(prefix="ckpt_rec_", dir=scratch_dir()) as stage_dir:
+    with (
+        tempfile.TemporaryDirectory(prefix="recovery_") as stage_dir,
+        tempfile.TemporaryDirectory(prefix="ckpt_", dir=scratch_dir()) as ck,
+    ):
         out = os.path.join(stage_dir, "out")
-        ck = os.path.join(stage_dir, "ck")
         src = os.path.join(stage_dir, "batch_*.parquet")
         # two sittings copied from the persisted staging: phase 1 must
         # see ONLY files 0-1, so copy incrementally

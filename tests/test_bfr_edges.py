@@ -36,19 +36,6 @@ def test_duplicate_points(spark):
     assert out.count() == 600
 
 
-def test_use_cs_false_path(spark):
-    """CS machinery disabled: RS overflow must not compress; points
-    still assigned exactly once."""
-    X, y = make_blobs(n=2000, k=4, d=6, outliers=30)
-    perm = np.random.default_rng(8).permutation(len(X))
-    bfr = BFR(BFRConfig(n_clusters=4, n_chunks=3, rs_max=5, use_cs=False))
-    out = bfr.fit(to_df(spark, X[perm], y[perm])).toPandas()
-    assert len(out) == len(X)
-    assert out["id"].nunique() == len(X)
-    stats = bfr.intermediate_stats()
-    assert (stats["nof_cluster_compression"] == 0).all()
-
-
 def test_each_point_assigned_exactly_once(spark):
     X, y = make_blobs(n=2000, k=5, d=8, outliers=20)
     perm = np.random.default_rng(2).permutation(len(X))
@@ -109,6 +96,25 @@ def test_resume_without_state_is_full_fit(spark, tmp_path):
     assert out.count() == 600
 
 
+def test_fit_without_run_dir_makes_no_directory(spark, tmp_path, monkeypatch):
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    X, y = make_blobs(n=600, k=3, d=4)
+    bfr = BFR(BFRConfig(n_clusters=3, n_chunks=2))
+    assert bfr.fit(to_df(spark, X, y)).count() == 600
+    assert not list(tmp_path.glob("bfr_run_*"))
+
+
+def test_resume_without_run_dir_raises(spark):
+    import pytest
+
+    X, y = make_blobs(n=600, k=3, d=4)
+    bfr = BFR(BFRConfig(n_clusters=3, n_chunks=2))
+    with pytest.raises(ValueError, match="resume=True needs the run_dir"):
+        bfr.fit(to_df(spark, X, y), resume=True)
+
+
 def test_torn_checkpoint_falls_back_to_scratch(spark, tmp_path):
     """A truncated/empty state.json (pre-fsync crash on an old build,
     disk fault) must not block resume: the fit refits from scratch
@@ -144,9 +150,9 @@ def test_resume_provenance_mismatch_raises(spark, tmp_path):
 
 def test_stale_round_dirs_cleaned_before_final_read(spark, tmp_path):
     """A run_dir left by a prior fit with MORE chunks must not leak
-    its extra round_NNNNN assignment dirs into the returned frame
-    (r11 ADVICE): the recursive read sweeps everything under
-    assignments/, so stale dirs beyond n_chunks are removed first."""
+    its extra round_NNNNN assignment dirs into the returned frame:
+    the final read names this fit's rounds, so stale dirs beyond
+    n_chunks are never read."""
     X, y = make_blobs(n=600, k=3, d=4)
     run_dir = str(tmp_path / "stale")
     b1 = BFR(BFRConfig(n_clusters=3, n_chunks=5))

@@ -113,6 +113,26 @@ def test_cli_non_numeric_field_names_file_and_line(spark, tmp_path, chunk, li, f
         cli.run(str(indir), 3, str(tmp_path / "c.json"), str(tmp_path / "i.csv"))
 
 
+def test_cli_empty_first_chunk_names_file(spark, tmp_path):
+    indir = tmp_path / "chunks"
+    _write_chunks(indir, [0, 200], d=4)
+    bad = re.escape(str(indir / "chunk_0.txt"))
+    with pytest.raises(ValueError, match=rf"^{bad}: bfr: chunk 0 has no points$"):
+        cli.run(str(indir), 3, str(tmp_path / "c.json"), str(tmp_path / "i.csv"))
+
+
+def test_cli_rejects_dir_without_chunks(tmp_path, monkeypatch):
+    def no_spark(*a, **kw):
+        raise AssertionError("the session started for an empty input directory")
+
+    monkeypatch.setattr(cli, "get_spark", no_spark)
+    indir = tmp_path / "chunks"
+    indir.mkdir()
+    (indir / ".hidden").write_text("0,1.0\n")
+    with pytest.raises(ValueError, match=rf"^{re.escape(str(indir))}: no chunk files"):
+        cli.run(str(indir), 3, str(tmp_path / "c.json"), str(tmp_path / "i.csv"))
+
+
 @pytest.mark.parametrize("field", ["n_clusters", "n_chunks"])
 def test_config_rejects_nonpositive(field):
     kw = {"n_clusters": 3, "n_chunks": 2, field: 0}

@@ -1,5 +1,8 @@
 """functions/ column library + sinks + approx/streaming additions."""
 
+import ast
+from pathlib import Path
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -128,6 +131,35 @@ def test_non_integer_stream_width_is_rejected(spark, monkeypatch, knob):
     monkeypatch.setenv("SPARK_GRAFT_STREAM_WIDTH", knob)
     with pytest.raises(ValueError, match=f"SPARK_GRAFT_STREAM_WIDTH must be a positive integer, got '{knob}'"):
         drain_width(spark)
+
+
+def _call_name(node: ast.Call) -> str | None:
+    return getattr(node.func, "id", None) or getattr(node.func, "attr", None)
+
+
+def test_scratch_dir_holds_only_checkpoints():
+    """``scratch_dir()`` defaults to tmpfs, which is host RAM: outside
+    functions/tuning.py it is only the ``dir`` of a
+    ``TemporaryDirectory(prefix="ckpt_")``, a streaming checkpoint.
+    Staged data goes to tempfile's default."""
+    pkg = Path(sinks.__file__).resolve().parents[1]
+    stray = []
+    for py in sorted(pkg.rglob("*.py")):
+        if py.relative_to(pkg) == Path("functions/tuning.py"):
+            continue
+        calls = [n for n in ast.walk(ast.parse(py.read_text())) if isinstance(n, ast.Call)]
+        checkpoint_roots = set()
+        for call in calls:
+            kw = {k.arg: k.value for k in call.keywords}
+            prefix = kw.get("prefix")
+            if _call_name(call) == "TemporaryDirectory" and getattr(prefix, "value", None) == "ckpt_" and "dir" in kw:
+                checkpoint_roots.add(id(kw["dir"]))
+        stray += [
+            f"{py.relative_to(pkg)}:{call.lineno}"
+            for call in calls
+            if _call_name(call) == "scratch_dir" and id(call) not in checkpoint_roots
+        ]
+    assert not stray, f"scratch_dir() used for something other than a checkpoint dir: {stray}"
 
 
 def test_sink_shard_manifest_covers_all_docs(spark):

@@ -1,7 +1,10 @@
 """BFR model API: predict on frozen summaries, save/load roundtrip,
 parquet compaction."""
 
+import json
+
 import numpy as np
+import pytest
 
 from bfr_clustering_using_pyspark_spark.ml import BFR, BFRConfig
 from bfr_clustering_using_pyspark_spark.sources.sinks import compact_parquet
@@ -50,6 +53,39 @@ def test_save_load_roundtrip(spark, tmp_path):
     b = loaded.predict(pts).toPandas().sort_values("id")["cluster"].to_numpy()
     assert (a == b).all()
     assert loaded.intermediate_stats().equals(bfr.intermediate_stats())
+
+
+# the config a model saved before the BFR settings became constants
+# carries: every field, the retired ones at the values still in use
+_OLD_CONFIG = {
+    "n_clusters": 4, "n_chunks": 2, "alpha_ds": 3.0, "alpha_fold": 4.0,
+    "init_oversample": 3, "init_sample_frac": 0.2, "init_sample_cap": 200000,
+    "rs_cluster_factor": 5, "rs_max": 50000, "cs_merge_threshold": 3.0,
+    "kmeans_iterations": 5, "seed": 42, "use_cs": True,
+}
+
+
+def _save_old_format(path, config):
+    k, d = config["n_clusters"], 3
+    payload = {
+        "config": config,
+        "counts": [10] * k,
+        "sums": [[float(c)] * d for c in range(k)],
+        "sqsums": [[1.0] * d] * k,
+        "round_stats": [],
+    }
+    path.write_text(json.dumps(payload))
+    return str(path)
+
+
+def test_load_takes_older_config_only_at_the_fixed_values(tmp_path):
+    model = BFR.load(_save_old_format(tmp_path / "old.json", _OLD_CONFIG))
+    assert model.cfg == BFRConfig(n_clusters=4, n_chunks=2, rs_max=50000, cs_merge_threshold=3.0)
+    assert model.ds.k == 4
+    for key, value in [("alpha_ds", 2.0), ("seed", 7), ("use_cs", False)]:
+        path = _save_old_format(tmp_path / f"{key}.json", {**_OLD_CONFIG, key: value})
+        with pytest.raises(ValueError, match=f"sets retired {key}"):
+            BFR.load(path)
 
 
 def test_compact_parquet(spark, tmp_path):
