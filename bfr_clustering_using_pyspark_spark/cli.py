@@ -27,7 +27,6 @@ bfr.py:431-451). Outputs match the reference byte-for-byte in shape:
 
 from __future__ import annotations
 
-import json
 import math
 import os
 import sys
@@ -35,6 +34,7 @@ import sys
 from .ml.bfr import BFR, BFRConfig, ChunkError
 from .session import get_spark
 from .sources.readers import points_from_indexed_csv
+from .sources.sinks import write_cluster_map_json
 
 
 def _first_bad_line(path: str, d: int | None) -> str:
@@ -71,11 +71,9 @@ def run(input_path: str, num_clusters: int, cluster_out: str, intermediate_out: 
         path = files[err.chunk]
         raise ValueError(f"{path}: {err}{_first_bad_line(path, err.d)}") from err
 
-    out_map = {str(r["id"]): int(r["cluster"]) for r in assigned.collect()}
-    with open(cluster_out, "w") as f:
-        json.dump(out_map, f)
+    n_points = write_cluster_map_json(assigned, cluster_out)
     bfr.intermediate_stats().to_csv(intermediate_out, index=False)
-    print(f"clustered {len(out_map)} points into {num_clusters} clusters")
+    print(f"clustered {n_points} points into {num_clusters} clusters")
 
 
 def main() -> None:

@@ -53,6 +53,7 @@ from __future__ import annotations
 import json
 import math
 import os
+import warnings
 from contextlib import contextmanager
 from dataclasses import dataclass
 from functools import reduce
@@ -62,6 +63,7 @@ import numpy as np
 import pandas as pd
 
 from pyspark.errors import NumberFormatException
+from pyspark.logger import PySparkLogger
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -188,12 +190,21 @@ class ChunkError(ValueError):
 @contextmanager
 def _chunk_casts(chunk: int, d: int | None) -> Iterator[None]:
     """A Spark cast failure (a non-numeric id or feature value) while
-    a fit reads chunk ``chunk`` raises ChunkError for that chunk."""
+    a fit reads chunk ``chunk`` raises ChunkError for that chunk.
+    Meanwhile pyspark's query-context log record (a JSON line carrying
+    the JVM stack) and the Arrow collect's "cannot continue" warning
+    stay off stderr: the Spark error is the ChunkError's cause."""
+    context_log = PySparkLogger.getLogger("DataFrameQueryContextLogger")
+    was_disabled, context_log.disabled = context_log.disabled, True
     try:
-        yield
+        with warnings.catch_warnings():
+            warnings.filterwarnings("ignore", "toPandas attempted Arrow optimization", UserWarning)
+            yield
     except NumberFormatException as err:
         bad = (err.getMessageParameters() or {}).get("expression", "a value")
         raise ChunkError(chunk, f"bfr: {bad} in chunk {chunk} is not a number", d) from err
+    finally:
+        context_log.disabled = was_disabled
 
 
 def _stack_features(features: pd.Series, d: int) -> tuple[np.ndarray | None, int, int]:
@@ -341,7 +352,9 @@ class BFR:
                     out.append(partial_rows(pts[in_cs], best[in_cs], cs.k, cls._RT_P_CS))
                 if not hit.all():
                     out.append(rows(cls._RT_RS, id=ids[~hit], features=pd.Series(list(pts[~hit]))))
-                yield pd.concat(out, ignore_index=True)
+                # one Arrow batch per frame: a pd.concat of frames whose
+                # unused columns are all-None objects NA-checks every value
+                yield from out
 
         return fn
 
@@ -614,7 +627,7 @@ class BFR:
         Chunks by contiguous id ranges (the distributed analogue of
         the reference's sorted chunk files, bfr.py:431-437); parquet
         row-group pruning makes each chunk scan cheap when the data
-        is id-sorted.
+        is id-sorted. A frame without points raises ``ValueError``.
         """
         cfg = self.cfg
         # one job probes range, count and d, so fit_stream skips its
@@ -622,6 +635,8 @@ class BFR:
         lo, hi, n_total, d = points.agg(
             F.min("id"), F.max("id"), F.count("*"), F.first(F.size("features"))
         ).collect()[0]
+        if not n_total:
+            raise ValueError("bfr: no points to fit")
         bounds = np.linspace(lo, hi + 1, cfg.n_chunks + 1).astype(np.int64)
         chunks = [
             points.filter(

@@ -112,12 +112,15 @@ def points_from_indexed_csv(spark: SparkSession, path: str) -> DataFrame:
     Each line is ``pidx,dim0,dim1,...`` with a variable number of
     dims. Reads as a single text column and splits JVM-side (no
     Python UDF): id = first field, features = rest cast to double.
+    The features are one array cast, which whole-stage codegen
+    compiles; a ``transform`` lambda doing the same per-element cast
+    is interpreted row by row.
     """
     raw = spark.read.text(path)
     parts = F.split(F.col("value"), ",")
     return raw.select(
         parts.getItem(0).cast("long").alias("id"),
-        F.transform(F.slice(parts, 2, 1 << 20), lambda x: x.cast("double")).alias("features"),
+        F.slice(parts, 2, 1 << 20).cast("array<double>").alias("features"),
     )
 
 
@@ -127,6 +130,6 @@ def embeddings_as_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return emb.select(
         F.col("vec_id").alias("id"),
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("features"),
+        F.col("embedding").cast("array<double>").alias("features"),
         F.col("label"),
     )

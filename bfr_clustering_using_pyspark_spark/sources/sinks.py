@@ -9,8 +9,9 @@ joins/aggs on that key are exchange-free.
 
 from __future__ import annotations
 
-import json
-
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 
 
@@ -59,17 +60,36 @@ def compact_parquet(spark, path: str, out_path: str, target_mb: int = 128) -> in
     return n_parts
 
 
-def write_cluster_map_json(assigned: DataFrame, path: str) -> None:
+def write_cluster_map_json(assigned: DataFrame, path: str) -> int:
     """Reference ``cluster_out`` format (bfr.py:463-464): one JSON
-    object mapping point-id string → cluster label. Driver-side
-    single-file write, as the reference does — this is the strict
-    output CONTRACT face and inherits its scale ceiling from the
-    contract itself (one JSON object cannot be sharded). For corpora
-    where the map itself is big data, use
-    ``write_cluster_map_jsonl`` — same information, distributed."""
-    out = {str(r["id"]): int(r["cluster"]) for r in assigned.collect()}
+    object mapping point-id string → cluster label, byte-identical to
+    ``json.dump({str(id): int(cluster), ...})``, so a repeated id keeps
+    its first position and its last label. Returns the number of
+    distinct ids.
+
+    The ``(id, cluster)`` columns reach the driver in one Arrow
+    collect (``toArrow``, no per-row Python objects) and Arrow string
+    kernels render them. Driver-side single-file write, as the
+    reference does — this is the strict output CONTRACT face and
+    inherits its scale ceiling from the contract itself (one JSON
+    object cannot be sharded). For corpora where the map itself is
+    big data, use ``write_cluster_map_jsonl`` — same information,
+    distributed."""
+    table = assigned.select("id", "cluster").toArrow()
+    ids = table.column("id").to_numpy()
+    clusters = table.column("cluster").to_numpy()
+    uniq, first = np.unique(ids, return_index=True)
+    if len(uniq) < len(ids):
+        last = len(ids) - 1 - np.unique(ids[::-1], return_index=True)[1]
+        order = np.argsort(first)
+        ids, clusters = uniq[order], clusters[last[order]]
+    entries = pc.binary_join_element_wise(
+        '"', pc.cast(pa.array(ids), pa.string()), '": ', pc.cast(pa.array(clusters), pa.string()), ""
+    )
+    body = pc.binary_join(pa.ListArray.from_arrays([0, len(entries)], entries), ", ")[0].as_py()
     with open(path, "w") as f:
-        json.dump(out, f)
+        f.write("{" + body + "}")
+    return len(uniq)
 
 
 def write_cluster_map_jsonl(assigned: DataFrame, path: str, mode: str = "overwrite") -> None:

@@ -106,6 +106,14 @@ def test_fit_without_run_dir_makes_no_directory(spark, tmp_path, monkeypatch):
     assert not list(tmp_path.glob("bfr_run_*"))
 
 
+def test_fit_on_empty_frame_raises(spark):
+    import pytest
+
+    empty = spark.createDataFrame([], "id long, features array<double>")
+    with pytest.raises(ValueError, match="^bfr: no points to fit$"):
+        BFR(BFRConfig(n_clusters=3, n_chunks=2)).fit(empty)
+
+
 def test_resume_without_run_dir_raises(spark):
     import pytest
 

@@ -96,7 +96,7 @@ def test_cli_ragged_rows_name_file_and_d(spark, tmp_path, chunk, n_short, line, 
     [(0, 0, 2), (0, 7, 0), (1, 123, 2)],
     ids=["d-probe-feature", "init-sample-id", "kernel-feature"],
 )
-def test_cli_non_numeric_field_names_file_and_line(spark, tmp_path, chunk, li, field):
+def test_cli_non_numeric_field_names_file_and_line(spark, tmp_path, capfd, recwarn, chunk, li, field):
     indir = tmp_path / "chunks"
     _write_chunks(indir, [150, 400, 200], d=4)
     path = indir / f"chunk_{chunk}.txt"
@@ -111,6 +111,12 @@ def test_cli_non_numeric_field_names_file_and_line(spark, tmp_path, chunk, li, f
         match=rf"^{bad}: bfr: 'abc' in chunk {chunk} is not a number; first offending line {li + 1}: ",
     ):
         cli.run(str(indir), 3, str(tmp_path / "c.json"), str(tmp_path / "i.csv"))
+    # the one-line error is all a user sees: no query-context record
+    # with the JVM stack, no Arrow "cannot continue" warning
+    err = capfd.readouterr().err
+    arrow_warning = "toPandas attempted Arrow optimization"
+    assert "DataFrameQueryContextLogger" not in err and arrow_warning not in err
+    assert not [w for w in recwarn if arrow_warning in str(w.message)]
 
 
 def test_cli_empty_first_chunk_names_file(spark, tmp_path):

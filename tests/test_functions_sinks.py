@@ -87,6 +87,31 @@ def test_cluster_map_json_sink(spark, tmp_path):
     assert json.load(open(out)) == {"1": 0, "2": 1}
 
 
+@pytest.mark.parametrize(
+    "ids, clusters",
+    [
+        ([5, 1, 3, 40], [0, 2, 1, 0]),
+        ([-7, 0, 12], [-1, -3, 4]),
+        ([2**63 - 1, -(2**63), 0], [-(2**63), 2**63 - 1, -1]),
+        ([4, 9, 4, 2, 9], [0, 1, 3, 2, 5]),
+        ([], []),
+    ],
+    ids=["unsorted", "negative", "int64-extremes", "repeated-id", "empty"],
+)
+def test_cluster_map_json_matches_json_dump(spark, tmp_path, ids, clusters):
+    """The Arrow-rendered map is byte-identical to ``json.dumps`` of
+    the dict the reference builds: a repeated id keeps its first position
+    and its last label, and the count is of distinct ids."""
+    import json
+
+    df = spark.createDataFrame(list(zip(ids, clusters)), "id long, cluster long")
+    out = tmp_path / "map.json"
+    n = sinks.write_cluster_map_json(df, str(out))
+    want = {str(i): int(c) for i, c in zip(ids, clusters)}
+    assert out.read_text() == json.dumps(want)
+    assert n == len(want)
+
+
 def test_cluster_map_jsonl_sink_matches_contract_face(spark, tmp_path):
     """The distributed JSONL face carries the same map as the
     single-object contract face, via executor-side shards."""

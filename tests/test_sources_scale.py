@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 
 from bfr_clustering_using_pyspark_spark.ml import BFR, BFRConfig, nmi_score
 from bfr_clustering_using_pyspark_spark.sources import sinks
-from bfr_clustering_using_pyspark_spark.sources.readers import load_csv, load_json_lines
+from bfr_clustering_using_pyspark_spark.sources.readers import load_csv, load_json_lines, points_from_indexed_csv
 from tests.conftest import SF_SMALL
 from tests.test_ml import make_blobs, to_df
 
@@ -25,6 +25,26 @@ def test_json_roundtrip(spark, tmp_path):
     sinks.write_json_lines(df, path)
     back = load_json_lines(spark, path, schema=df.schema)
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
+
+
+def test_point_parse_matches_per_element_cast(spark, tmp_path):
+    """The chunk reader's one array cast gives the rows a per-element
+    ``transform`` cast gives, bit for bit, on the values where a
+    string-to-double parse can differ."""
+    path = tmp_path / "chunk.txt"
+    path.write_text("0,1.5e3,-2E-4,-0.0\n1,1e-320,1e308,NaN\n2,Infinity,-Infinity,3\n-4,7\n5\n")
+    parts = F.split(F.col("value"), ",")
+    ref = spark.read.text(str(path)).select(
+        parts.getItem(0).cast("long").alias("id"),
+        F.transform(F.slice(parts, 2, 1 << 20), lambda x: x.cast("double")).alias("features"),
+    )
+
+    def bits(df):
+        return [(r["id"], np.asarray(r["features"], dtype=np.float64).tobytes()) for r in df.collect()]
+
+    got = bits(points_from_indexed_csv(spark, str(path)))
+    assert got == bits(ref)
+    assert [i for i, _ in got] == [0, 1, 2, -4, 5]
 
 
 def test_bucketed_join_has_no_shuffle(spark, tmp_path):
