@@ -22,13 +22,19 @@ Spark-first architecture (designed for 1000 executors / 100 TB):
   the CS's provisional label ``-2 - id``; the final CS → DS fold turns
   the id table into a literal id → DS-label array (``cs_labels``) that
   one narrow projection applies to the returned frame.
-- Per-chunk assignment is one Arrow-batched ``mapInPandas`` pass —
-  embarrassingly parallel, NumPy-vectorized Mahalanobis against all
-  summaries at once.
+- Per-chunk assignment is one ``mapInArrow`` pass — embarrassingly
+  parallel, NumPy-vectorized Mahalanobis against all summaries at
+  once, over a zero-copy (n, d) view of each batch's ``features``
+  list column; its output batches, the init sample and each round's
+  feedback move as Arrow columns, with no per-row objects.
 - Sufficient-statistic updates are map-side partial aggregates: each
   Arrow batch emits one row per touched cluster (n, Σx, Σx²), so the
   driver collect is O(num_batches × k), independent of n. Every fold
   into a ``Summaries`` goes through ``Summaries.add_partials``.
+- Chunk 0 is cached for round 0, so its file is parsed once: the
+  ``(n, d)`` probe (or the init sample, when the caller knows both)
+  fills the cache, and round 0 reads it for the sample and the
+  remainder.
 - Each round's assignments are pinned once (an eager
   ``localCheckpoint``, or the round's parquet dir when the fit is given
   a ``run_dir``, the only case that writes files) and every fit ends
@@ -53,7 +59,6 @@ from __future__ import annotations
 import json
 import math
 import os
-import warnings
 from contextlib import contextmanager
 from dataclasses import dataclass
 from functools import reduce
@@ -61,11 +66,14 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.errors import NumberFormatException
 from pyspark.logger import PySparkLogger
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..functions.numeric import json_literal_sql
 from .local_kmeans import LocalKMeans
@@ -191,37 +199,42 @@ class ChunkError(ValueError):
 def _chunk_casts(chunk: int, d: int | None) -> Iterator[None]:
     """A Spark cast failure (a non-numeric id or feature value) while
     a fit reads chunk ``chunk`` raises ChunkError for that chunk.
-    Meanwhile pyspark's query-context log record (a JSON line carrying
-    the JVM stack) and the Arrow collect's "cannot continue" warning
-    stay off stderr: the Spark error is the ChunkError's cause."""
-    context_log = PySparkLogger.getLogger("DataFrameQueryContextLogger")
-    was_disabled, context_log.disabled = context_log.disabled, True
+    Meanwhile pyspark's query-context log records (a JSON line carrying
+    the JVM stack, logged under a DataFrame or a SQL context) stay off
+    stderr: the Spark error is the ChunkError's cause."""
+    context_logs = [PySparkLogger.getLogger(f"{kind}QueryContextLogger") for kind in ("DataFrame", "SQL")]
+    was_disabled = [log.disabled for log in context_logs]
+    for log in context_logs:
+        log.disabled = True
     try:
-        with warnings.catch_warnings():
-            warnings.filterwarnings("ignore", "toPandas attempted Arrow optimization", UserWarning)
-            yield
+        yield
     except NumberFormatException as err:
         bad = (err.getMessageParameters() or {}).get("expression", "a value")
         raise ChunkError(chunk, f"bfr: {bad} in chunk {chunk} is not a number", d) from err
     finally:
-        context_log.disabled = was_disabled
+        for log, was in zip(context_logs, was_disabled):
+            log.disabled = was
 
 
-def _stack_features(features: pd.Series, d: int) -> tuple[np.ndarray | None, int, int]:
-    """``(points, n_ragged, n_nonfinite)`` for a column of feature
-    arrays: points is the (n, d) array, or None when rows do not all
-    have ``d`` values. Those rows are counted only once the stack has
-    failed, so well-formed input pays nothing extra."""
-    try:
-        pts = np.stack(features.to_numpy())
-    except ValueError:
-        n_ragged = int((features.map(len) != d).sum())
-        if not n_ragged:
-            raise
+def _arrow_points(features: pa.Array | pa.ChunkedArray, d: int) -> tuple[np.ndarray | None, int, int]:
+    """``(points, n_ragged, n_nonfinite)`` for an Arrow column of
+    feature lists: points is the (n, d) view of the list values (a
+    copy only for a chunked column or a null value, which reads as
+    NaN), or None when some rows (a null row included) do not have
+    ``d`` values. Non-finite values are counted only when no row is
+    ragged."""
+    n_ragged = int((pc.list_value_length(features).to_numpy(zero_copy_only=False) != d).sum())
+    if n_ragged:
         return None, n_ragged, 0
-    if pts.shape[1] != d:
-        return None, len(pts), 0
+    pts = pc.list_flatten(features).to_numpy(zero_copy_only=False).reshape(len(features), d)
     return pts, 0, int((~np.isfinite(pts)).sum())
+
+
+def _list_column(rows: np.ndarray) -> pa.ListArray:
+    """An (n, d) array as an Arrow ``list<double>`` column of n rows."""
+    n, d = rows.shape
+    offsets = pa.array(np.arange(n + 1, dtype=np.int32) * d)
+    return pa.ListArray.from_arrays(offsets, pa.array(np.asarray(rows, dtype=np.float64).ravel()))
 
 
 def _require_valid(n_ragged: int, n_nonfinite: int, chunk: int, where: str, d: int) -> None:
@@ -295,13 +308,14 @@ class BFR:
     # label), DS/CS partial sufficient stats, RS point, count of
     # non-finite feature values / of rows without d values in a batch
     _RT_ASSIGN, _RT_P_DS, _RT_P_CS, _RT_RS, _RT_NONFINITE, _RT_RAGGED = -1, 0, 1, 2, 3, 4
-    _FUSED_SCHEMA = (
-        "rtype int, label long, n long, sums array<double>, "
-        "sqsums array<double>, id long, features array<double>"
-    )
+    _FUSED_SCHEMA = pa.schema([
+        ("rtype", pa.int32()), ("label", pa.int64()), ("n", pa.int64()),
+        ("sums", pa.list_(pa.float64())), ("sqsums", pa.list_(pa.float64())),
+        ("id", pa.int64()), ("features", pa.list_(pa.float64())),
+    ])
 
     def _assign_kernel(self, d: int):
-        """Fused mapInPandas kernel: assign each point against the
+        """Fused mapInArrow kernel: assign each point against the
         broadcast DS/CS summaries AND emit per-batch feedback in the
         same pass — assignments (id, label; features dropped),
         map-side partial N/Σ/Σ² rows and RS points (the only rows that
@@ -313,72 +327,79 @@ class BFR:
         cs_label = -2 - np.asarray([ids[0] for ids in self.cs_ids], dtype=np.int64)
         gate = ALPHA_DS * math.sqrt(d)
 
-        def rows(rtype: int, **cols) -> pd.DataFrame:
-            return pd.DataFrame(
-                {"rtype": rtype, "label": None, "n": None, "sums": None,
-                 "sqsums": None, "id": None, "features": None, **cols}
+        def rows(rtype: int, n_rows: int, **cols) -> pa.RecordBatch:
+            """One fused-schema batch; the columns not given are typed nulls."""
+            cols["rtype"] = np.full(n_rows, rtype, dtype=np.int32)
+            return pa.RecordBatch.from_arrays(
+                [pa.array(cols[f.name]) if f.name in cols else pa.nulls(n_rows, f.type) for f in cls._FUSED_SCHEMA],
+                schema=cls._FUSED_SCHEMA,
             )
 
-        def partial_rows(pts: np.ndarray, labels: np.ndarray, k: int, rtype: int) -> pd.DataFrame:
+        def partial_rows(pts: np.ndarray, labels: np.ndarray, k: int, rtype: int) -> pa.RecordBatch:
             s = Summaries.from_points(pts, labels, k)
             hit = np.flatnonzero(s.counts)
-            return rows(rtype, label=hit.astype(np.int64), n=s.counts[hit],
-                        sums=s.sums[hit].tolist(), sqsums=s.sqsums[hit].tolist())
+            return rows(rtype, len(hit), label=hit.astype(np.int64), n=s.counts[hit],
+                        sums=_list_column(s.sums[hit]), sqsums=_list_column(s.sqsums[hit]))
 
-        def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if not len(pdf):
+        def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            for batch in batches:
+                if not batch.num_rows:
                     continue
-                pts, n_ragged, n_bad = _stack_features(pdf["features"], d)
+                pts, n_ragged, n_bad = _arrow_points(batch.column("features"), d)
                 if n_ragged or n_bad:
-                    yield rows(cls._RT_RAGGED if n_ragged else cls._RT_NONFINITE, n=[n_ragged or n_bad])
+                    yield rows(cls._RT_RAGGED if n_ragged else cls._RT_NONFINITE, 1, n=[n_ragged or n_bad])
                     continue
-                ids = pdf["id"].to_numpy().astype(np.int64)
+                ids = batch.column("id").to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
                 best, in_ds = nearest_summary(pts, ds, gate)
                 in_cs = np.zeros_like(in_ds)
                 if cs is not None and not in_ds.all():
                     rest = ~in_ds
                     best[rest], in_cs[rest] = nearest_summary(pts[rest], cs, gate)
 
-                out = []
                 hit = in_ds | in_cs
                 if hit.any():
                     label = best.copy()
                     label[in_cs] = cs_label[best[in_cs]]
-                    out.append(rows(cls._RT_ASSIGN, label=label[hit], id=ids[hit]))
+                    yield rows(cls._RT_ASSIGN, int(hit.sum()), label=label[hit], id=ids[hit])
                 if in_ds.any():
-                    out.append(partial_rows(pts[in_ds], best[in_ds], ds.k, cls._RT_P_DS))
+                    yield partial_rows(pts[in_ds], best[in_ds], ds.k, cls._RT_P_DS)
                 if in_cs.any():
-                    out.append(partial_rows(pts[in_cs], best[in_cs], cs.k, cls._RT_P_CS))
+                    yield partial_rows(pts[in_cs], best[in_cs], cs.k, cls._RT_P_CS)
                 if not hit.all():
-                    out.append(rows(cls._RT_RS, id=ids[~hit], features=pd.Series(list(pts[~hit]))))
-                # one Arrow batch per frame: a pd.concat of frames whose
-                # unused columns are all-None objects NA-checks every value
-                yield from out
+                    yield rows(cls._RT_RS, int((~hit).sum()), id=ids[~hit], features=_list_column(pts[~hit]))
 
         return fn
 
-    def _apply_feedback(self, fb: pd.DataFrame) -> None:
-        """Fold one chunk's collected feedback into driver state."""
+    @classmethod
+    def _feedback_rows(cls, fb: pa.Table, rtype: int) -> pa.Table:
+        """The rows of one type in a collected fused-schema table, in
+        the order they were collected."""
+        return fb.filter(pc.equal(fb.column("rtype"), rtype))
+
+    def _apply_feedback(self, fb: pa.Table) -> None:
+        """Fold one chunk's collected feedback (an Arrow table of the
+        fused schema) into driver state, partials in collected order."""
+        d = self.ds.sums.shape[1]
 
         def fold(rtype: int, summaries: Summaries) -> int:
-            rows = fb[fb["rtype"] == rtype]
-            if len(rows):
+            rows = self._feedback_rows(fb, rtype)
+            n = rows.column("n").to_numpy()
+            if len(n):
                 summaries.add_partials(
-                    rows["label"].to_numpy().astype(np.int64),
-                    rows["n"].to_numpy().astype(np.int64),
-                    np.stack(rows["sums"].to_numpy()),
-                    np.stack(rows["sqsums"].to_numpy()),
+                    rows.column("label").to_numpy(), n,
+                    _arrow_points(rows.column("sums"), d)[0], _arrow_points(rows.column("sqsums"), d)[0],
                 )
-            return int(rows["n"].sum())
+            return int(n.sum())
 
         self._n_discard_points += fold(self._RT_P_DS, self.ds)
         fold(self._RT_P_CS, self.cs)
-        # id order, not partition order: RS order feeds the CS k-means
-        rs = fb[fb["rtype"] == self._RT_RS].sort_values("id")
-        if len(rs):
-            self.rs_ids = np.concatenate([self.rs_ids, rs["id"].to_numpy().astype(np.int64)])
-            self.rs_pts = np.concatenate([self.rs_pts, np.stack(rs["features"].to_numpy())])
+        rs = self._feedback_rows(fb, self._RT_RS)
+        if rs.num_rows:
+            # id order, not partition order: RS order feeds the CS k-means
+            ids = rs.column("id").to_numpy()
+            order = np.argsort(ids, kind="stable")
+            self.rs_ids = np.concatenate([self.rs_ids, ids[order]])
+            self.rs_pts = np.concatenate([self.rs_pts, _arrow_points(rs.column("features"), d)[0][order]])
 
     # ---------- driver-side (bounded) steps ----------
 
@@ -679,97 +700,112 @@ class BFR:
         spark = chunks[0].sparkSession
         if resume and run_dir is None:
             raise ValueError("bfr: resume=True needs the run_dir of the fit to resume")
-        if d is None or approx_chunk_n is None:
-            # one job: chunk 0's size sizes the init sample, and size()
-            # is constant across rows, so first() is value-deterministic
-            with _chunk_casts(0, d):
-                n0, d0 = chunks[0].agg(F.count("*"), F.first(F.size("features"))).collect()[0]
-            if not n0:
-                raise ChunkError(0, "bfr: chunk 0 has no points", d)
-            d = d0 if d is None else d
-            approx_chunk_n = n0 if approx_chunk_n is None else approx_chunk_n
+        # chunk 0 is read by the probe (or, given d and approx_chunk_n,
+        # the init sample) and again by round 0's remainder: cached, its
+        # file is parsed once; released once round 0 is pinned
+        chunks = [chunk.select("id", "features") for chunk in chunks]
+        chunk0 = chunks[0].persist()
+        try:
+            if d is None or approx_chunk_n is None:
+                # chunk 0's size sizes the init sample, and size() is
+                # constant across rows, so first() is value-deterministic.
+                # Observed on a noop write, the probe is the one job that
+                # fills the cache: an aggregate's exchange would make AQE
+                # fill it in a job of its own
+                probe = Observation("bfr_chunk0")
+                observed = chunk0.observe(probe, F.count("*").alias("n"), F.first(F.size("features")).alias("d"))
+                with _chunk_casts(0, d):
+                    observed.write.format("noop").mode("overwrite").save()
+                n0, d0 = probe.get["n"], probe.get["d"]
+                if not n0:
+                    raise ChunkError(0, "bfr: chunk 0 has no points", d)
+                d = d0 if d is None else d
+                approx_chunk_n = n0 if approx_chunk_n is None else approx_chunk_n
 
-        n_chunks = len(chunks)
-        round_paths = [f"{run_dir}/assignments/round_{r:05d}" for r in range(n_chunks)]
-        ckpt_meta = {"n_chunks": n_chunks, "d": d, "corpus_fp": corpus_fp}
-        driver_assignments: list[pd.DataFrame] = []
-        rounds: list[DataFrame] = []
-        start_round = 0
-        if resume:
-            restored = self._ckpt_load(run_dir, ckpt_meta)
-            if restored is not None:
-                start_round, driver_assignments = restored
-        for round_id, chunk in enumerate(chunks):
-            if round_id < start_round:
-                continue
-            with _chunk_casts(round_id, d):
-                if round_id == 0:
-                    chunk_n = max(approx_chunk_n, 1)
-                    # at least ~50 points per target cluster for a sane
-                    # init, bounded by the driver-memory cap
-                    min_frac = min(1.0, 50.0 * cfg.n_clusters / chunk_n)
-                    frac = min(max(INIT_SAMPLE_FRAC, min_frac), 1.0, INIT_SAMPLE_CAP / chunk_n)
-                    # a seeded hash of the id decides membership, so the
-                    # sample (sorted by id) is the same however the chunk
-                    # is partitioned — a chunk.sample draw is not
-                    in_sample = F.pmod(F.xxhash64("id", F.lit(SEED)), F.lit(10**6)) < round(
-                        frac * 10**6
-                    )
-                    sample = (
-                        chunk.filter(in_sample).select("id", "features").toPandas()
-                        .sort_values("id", ignore_index=True)
-                    )
-                    ids = sample["id"].to_numpy()
-                    pts, n_ragged, n_bad = _stack_features(sample["features"], d)
-                    _require_valid(n_ragged, n_bad, 0, "chunk 0's init sample", d)
-                    driver_assignments.append(self._init_from_sample(ids, pts))
-                    # the non-sampled remainder of chunk 0 goes through
-                    # the normal assignment path (ref assign_dsrsout on
-                    # points_rest, bfr.py:429)
-                    chunk = chunk.filter(~in_sample)
+            n_chunks = len(chunks)
+            round_paths = [f"{run_dir}/assignments/round_{r:05d}" for r in range(n_chunks)]
+            ckpt_meta = {"n_chunks": n_chunks, "d": d, "corpus_fp": corpus_fp}
+            driver_assignments: list[pd.DataFrame] = []
+            rounds: list[DataFrame] = []
+            start_round = 0
+            if resume:
+                restored = self._ckpt_load(run_dir, ckpt_meta)
+                if restored is not None:
+                    start_round, driver_assignments = restored
+            for round_id, chunk in enumerate(chunks):
+                if round_id < start_round:
+                    continue
+                with _chunk_casts(round_id, d):
+                    if round_id == 0:
+                        chunk_n = max(approx_chunk_n, 1)
+                        # at least ~50 points per target cluster for a sane
+                        # init, bounded by the driver-memory cap
+                        min_frac = min(1.0, 50.0 * cfg.n_clusters / chunk_n)
+                        frac = min(max(INIT_SAMPLE_FRAC, min_frac), 1.0, INIT_SAMPLE_CAP / chunk_n)
+                        # a seeded hash of the id decides membership, so the
+                        # sample (sorted by id) is the same however the chunk
+                        # is partitioned — a chunk.sample draw is not
+                        in_sample = F.pmod(F.xxhash64("id", F.lit(SEED)), F.lit(10**6)) < round(
+                            frac * 10**6
+                        )
+                        sample = chunk.filter(in_sample).toArrow()
+                        ids = sample.column("id").to_numpy()
+                        pts, n_ragged, n_bad = _arrow_points(sample.column("features"), d)
+                        _require_valid(n_ragged, n_bad, 0, "chunk 0's init sample", d)
+                        order = np.argsort(ids, kind="stable")
+                        driver_assignments.append(self._init_from_sample(ids[order], pts[order]))
+                        # the non-sampled remainder of chunk 0 goes through
+                        # the normal assignment path (ref assign_dsrsout on
+                        # points_rest, bfr.py:429)
+                        chunk = chunk.filter(~in_sample)
 
-                fused = chunk.mapInPandas(self._assign_kernel(d), schema=self._FUSED_SCHEMA).persist()
-                try:
-                    asg = fused.filter(F.col("rtype") == self._RT_ASSIGN).select(
-                        "id", F.col("label").alias("cluster")
-                    )
-                    if run_dir is not None:
-                        # job 1: distributed write of the assignments — one
-                        # subdirectory per round, OVERWRITE, so a resumed
-                        # re-run of an interrupted round is idempotent
-                        asg.write.mode("overwrite").parquet(round_paths[round_id])
-                    else:
-                        # nothing can resume without a run_dir, so pin the
-                        # round in the executor block store (MEMORY_AND_DISK):
-                        # ~0.15 s less fixed cost per round than a parquet commit
-                        rounds.append(asg.localCheckpoint(eager=True))
-                    # job 2: tiny driver-bound feedback collect (partials,
-                    # RS points, bad-input counts)
-                    fb = fused.filter(F.col("rtype") != self._RT_ASSIGN).toPandas()
-                finally:
-                    fused.unpersist()
+                    fused = chunk.mapInArrow(self._assign_kernel(d), from_arrow_schema(self._FUSED_SCHEMA)).persist()
+                    try:
+                        asg = fused.filter(F.col("rtype") == self._RT_ASSIGN).select(
+                            "id", F.col("label").alias("cluster")
+                        )
+                        if run_dir is not None:
+                            # job 1: distributed write of the assignments — one
+                            # subdirectory per round, OVERWRITE, so a resumed
+                            # re-run of an interrupted round is idempotent
+                            asg.write.mode("overwrite").parquet(round_paths[round_id])
+                        else:
+                            # nothing can resume without a run_dir, so pin the
+                            # round in the executor block store (MEMORY_AND_DISK):
+                            # ~0.15 s less fixed cost per round than a parquet commit
+                            rounds.append(asg.localCheckpoint(eager=True))
+                        # job 2: tiny driver-bound Arrow feedback collect
+                        # (partials, RS points, bad-input counts)
+                        fb = fused.filter(F.col("rtype") != self._RT_ASSIGN).toArrow()
+                    finally:
+                        fused.unpersist()
+                        if round_id == 0:
+                            chunk0.unpersist()
 
-            def n_of(rtype: int) -> int:
-                return int(fb.loc[fb["rtype"] == rtype, "n"].sum())
+                def n_of(rtype: int) -> int:
+                    return pc.sum(self._feedback_rows(fb, rtype).column("n")).as_py() or 0
 
-            _require_valid(n_of(self._RT_RAGGED), n_of(self._RT_NONFINITE), round_id, f"chunk {round_id}", d)
-            self._apply_feedback(fb)
+                _require_valid(n_of(self._RT_RAGGED), n_of(self._RT_NONFINITE), round_id, f"chunk {round_id}", d)
+                self._apply_feedback(fb)
 
-            last = round_id == n_chunks - 1
-            if not last and len(self.rs_ids) > cfg.rs_max:
-                driver_assignments.append(self._compress_rs())
-            driver_assignments.append(self._fold_rs_into_ds(ALPHA_FOLD))
-            if last:
-                # final round: the rest of RS → -1; CS → nearest DS
-                driver_assignments.append(pd.DataFrame({"id": self.rs_ids, "cluster": -1}))
-                self.rs_ids, self.rs_pts = self.rs_ids[:0], self.rs_pts[:0]
-                self._fold_cs_into_ds()
-            self._record_round(round_id + 1)
-            # the round is durable (assignments written) — checkpoint
-            # the complete mutable state so a crash before the next
-            # round's write resumes HERE (IO overlaps the next round)
-            if run_dir is not None:
-                self._ckpt_write(run_dir, round_id + 1, driver_assignments, ckpt_meta)
+                last = round_id == n_chunks - 1
+                if not last and len(self.rs_ids) > cfg.rs_max:
+                    driver_assignments.append(self._compress_rs())
+                driver_assignments.append(self._fold_rs_into_ds(ALPHA_FOLD))
+                if last:
+                    # final round: the rest of RS → -1; CS → nearest DS
+                    driver_assignments.append(pd.DataFrame({"id": self.rs_ids, "cluster": -1}))
+                    self.rs_ids, self.rs_pts = self.rs_ids[:0], self.rs_pts[:0]
+                    self._fold_cs_into_ds()
+                self._record_round(round_id + 1)
+                # the round is durable (assignments written) — checkpoint
+                # the complete mutable state so a crash before the next
+                # round's write resumes HERE (IO overlaps the next round)
+                if run_dir is not None:
+                    self._ckpt_write(run_dir, round_id + 1, driver_assignments, ckpt_meta)
+        finally:
+            # a no-op once round 0 released it
+            chunk0.unpersist()
         self._ckpt_join()
 
         if run_dir is not None:
@@ -805,18 +841,24 @@ class BFR:
         if self.ds is None:
             raise ValueError("predict() requires a fitted model")
         ds = self.ds
-        gate = np.inf if alpha is None else alpha * math.sqrt(ds.sums.shape[1])
+        d = ds.sums.shape[1]
+        gate = np.inf if alpha is None else alpha * math.sqrt(d)
 
-        def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if not len(pdf):
+        def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            for batch in batches:
+                if not batch.num_rows:
                     continue
-                best, ok = nearest_summary(np.stack(pdf["features"].to_numpy()), ds, gate)
+                pts, n_ragged, _ = _arrow_points(batch.column("features"), d)
+                if n_ragged:
+                    raise ValueError(f"bfr: {n_ragged} rows to predict do not have d={d} feature values")
+                best, ok = nearest_summary(pts, ds, gate)
                 if alpha is not None:
                     best = np.where(ok, best, -1)
-                yield pd.DataFrame({"id": pdf["id"], "cluster": best.astype(np.int64)})
+                yield pa.RecordBatch.from_arrays(
+                    [batch.column("id").cast(pa.int64()), pa.array(best.astype(np.int64))], names=["id", "cluster"]
+                )
 
-        return points.select("id", "features").mapInPandas(fn, schema="id long, cluster long")
+        return points.select("id", "features").mapInArrow(fn, schema="id long, cluster long")
 
     def save(self, path: str) -> None:
         """Persist the fitted DS summaries + config as JSON (state is

@@ -327,10 +327,13 @@ FROM events GROUP BY user_id ORDER BY user_id
 
 
 def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming deduplication: ``dropDuplicates`` on event_id within
-    a watermark (the streaming face of exact dedup — state store
-    holds only ids newer than the watermark). Emits per-type counts
-    of the deduped stream. [rows-only]"""
+    """Streaming deduplication: ``dropDuplicates`` on event_id (the
+    streaming face of exact dedup). The event-time column is not a
+    dedup key, so the watermark evicts nothing: the state store keeps
+    every id seen (on the seed-1 corpus, 100,000 rows after both
+    micro-batches, though the events span 30 days against a 2-hour
+    watermark). Emits per-type counts of the deduped stream.
+    [rows-only]"""
     ev = _events_stream(spark, sf_dir)
     deduped = ev.withWatermark("ts", "2 hours").dropDuplicates(["event_id"])
     agg = deduped.groupBy("event_type").agg(F.count("*").alias("n_unique_events"))

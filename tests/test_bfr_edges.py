@@ -3,6 +3,7 @@ points, tiny d."""
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from bfr_clustering_using_pyspark_spark.ml import BFR, BFRConfig
 from tests.test_ml import make_blobs, to_df
@@ -112,6 +113,30 @@ def test_fit_on_empty_frame_raises(spark):
     empty = spark.createDataFrame([], "id long, features array<double>")
     with pytest.raises(ValueError, match="^bfr: no points to fit$"):
         BFR(BFRConfig(n_clusters=3, n_chunks=2)).fit(empty)
+
+
+@pytest.mark.parametrize("hints", [{}, {"d": 4, "approx_chunk_n": 300}], ids=["probe", "hinted"])
+def test_chunk0_is_read_once(spark, hints):
+    """Chunk 0 feeds the (n, d) probe (or, given both hints, the init
+    sample) and round 0's remainder, yet its source is read once per
+    fit: an identity Arrow map counts every row it passes."""
+    X, y = make_blobs(n=900, k=3, d=4)
+    df = to_df(spark, X, y).select("id", "features")
+    rows_read = spark.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for batch in batches:
+            rows_read.add(batch.num_rows)
+            yield batch
+
+    chunks = [
+        df.filter("id < 300").mapInArrow(count_rows, df.schema),
+        df.filter("id >= 300 AND id < 600"),
+        df.filter("id >= 600"),
+    ]
+    out = BFR(BFRConfig(n_clusters=3, n_chunks=3)).fit_stream(chunks, **hints)
+    assert rows_read.value == 300
+    assert out.count() == 900
 
 
 def test_resume_without_run_dir_raises(spark):

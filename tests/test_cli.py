@@ -116,6 +116,7 @@ def test_cli_non_numeric_field_names_file_and_line(spark, tmp_path, capfd, recwa
     err = capfd.readouterr().err
     arrow_warning = "toPandas attempted Arrow optimization"
     assert "DataFrameQueryContextLogger" not in err and arrow_warning not in err
+    assert "SQLQueryContextLogger" not in err
     assert not [w for w in recwarn if arrow_warning in str(w.message)]
 
 

@@ -25,7 +25,7 @@ PATTERN = re.compile(r"(?<!F)\.(collect|toPandas|toArrow|first|take|head|toLocal
 # relpath -> (expected_count, justification)
 WHITELIST = {
     "sources/sinks.py": (1, "Arrow collect of the reference JSON map (bfr.py:463-464 contract)"),
-    "ml/bfr.py": (4, "1-row id-range agg; 1-row chunk-0 probe (n, d); seeded init sample; O(k*d) per-chunk suffstats feedback"),
+    "ml/bfr.py": (3, "1-row id-range agg; Arrow collects of the seeded init sample (<= INIT_SAMPLE_CAP rows) and of each chunk's feedback (O(k*d) suffstats partials plus the chunk's RS points)"),
     "ml/kmeans.py": (1, "O(num_batches) inertia partial-sum fold (get_inertia)"),
     "ml/metrics.py": (1, "O(k^2) contingency table for NMI"),
     "plans/ml_queries.py": (5, "_lloyd_rounds: O(k*d) centroid sums per Lloyd round (kmeans_lloyd_det and the det-BFR init); _bdet_init_assign: K one-row farthest-point TakeOrdereds (2 head sites); _bdet_fold: <=K+1 integer-moment rows per chunk (every det-BFR face and stream_bfr_rounds); cap/regate epoch: <=BDET_CS_RETAIN (vec_id, xi) rows per chunk, which are the CS pool — all bounded by k*d or the constant pool cap, never n"),
